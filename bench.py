@@ -310,27 +310,28 @@ def main(argv: list[str] | None = None) -> None:
         " CAST(0 AS BIGINT), (acc, x) -> acc + length(x.w1)) AS s"
     ).agg({"s": "sum"}).collect()
 
-    timings: dict[str, float] = {}
-    for key in keys:
-        t0 = time.perf_counter()
-        df = qs[key](spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        timings[key] = round(time.perf_counter() - t0, 3)
+    # --repeats N: N full passes over the same key list, so the repeats of
+    # any one key are separated by a whole sweep and a host-noise burst
+    # cannot poison all of them at once. Pass 0 is the single-shot record
+    # printed on stdout; min/median per key go only to the durable
+    # BENCH_out*.json. Each key's query-owned checkpoint blocks are
+    # released after its write, outside its timing, so every pass and
+    # every key starts from the same block-manager state.
+    from imperio_patitas_etl_spark.operators.checkpoint import (
+        persistent_rdd_ids,
+        release_rdds,
+    )
 
-    # --repeats N (additive, VERDICT r18 item 2): N-1 EXTRA full passes
-    # over the same key list, so the repeats of any one key are separated
-    # by a whole sweep (~minutes) and a host-noise burst cannot poison all
-    # of them at once. Pass 0 above is the unchanged single-shot sweep and
-    # stays the driver-comparable record; min/median per key go only to
-    # the durable BENCH_out*.json (the stdout line stays byte-compatible
-    # apart from two scalar value_min/all_total_min additions).
-    rep_ts: dict[str, list[float]] = {k: [v] for k, v in timings.items()}
-    for _ in range(opts.repeats - 1):
+    rep_ts: dict[str, list[float]] = {k: [] for k in keys}
+    for _ in range(opts.repeats):
         for key in keys:
+            before = persistent_rdd_ids(spark)
             t0 = time.perf_counter()
             df = qs[key](spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             rep_ts[key].append(round(time.perf_counter() - t0, 3))
+            release_rdds(spark, persistent_rdd_ids(spark) - before)
+    timings = {k: v[0] for k, v in rep_ts.items()}
 
     headline_total = round(
         sum(t for k, t in timings.items() if k in set(HEADLINE)), 3

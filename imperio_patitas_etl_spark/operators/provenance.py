@@ -26,10 +26,8 @@ a different product kind.
 from __future__ import annotations
 
 import os
-import shutil
-from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def canonical_source(sf_dir: str) -> str:
@@ -58,296 +56,21 @@ def require_source(
     path: str,
     consequence: str,
     rebuild: str,
-    allow_legacy_tag: bool = False,
 ) -> None:
     """Validate that the table in ``df`` (read back from ``path``) was
     materialized from ``sf_dir``; raise ``ValueError`` on a missing or
     mismatched tag. ``consequence`` states what would silently corrupt
     if the mismatch were allowed; ``rebuild`` names the materialize call
     that fixes it — both flow into the error message so the operator
-    reading the exception can act without opening the source.
-
-    ``allow_legacy_tag`` (ADVICE r12/r13): tables materialized BEFORE
-    r12 stored the RAW ``sf_dir.rstrip('/')`` as the tag, so a table
-    written via a relative or symlinked spelling fails the realpath
-    compare even when the consumer passes the identical string used at
-    write time. The exact-raw-string fallback that accepts those is a
-    real weakening of the identity check (a tag spelling later
-    re-targeted by a symlink, or a relative spelling resolved from a
-    different cwd, would pass and mix mismatched sources), so it is
-    OPT-IN: the default is the strict realpath-only compare, and only a
-    caller that knows it is consuming a pre-r12 table passes
-    ``allow_legacy_tag=True``. The durable fix is a one-time re-tag:
-    read the legacy table with the flag, re-write it through the
-    ``rebuild`` materializer, and drop the flag."""
+    reading the exception can act without opening the source. The
+    compare is realpath against realpath only: a tag written under any
+    other spelling is refused, never reinterpreted."""
     tag = dict(df.schema[column].metadata or {}).get(key)
     want = canonical_source(sf_dir)
     if tag == want:
         return
-    if allow_legacy_tag and tag == sf_dir.rstrip("/"):
-        return
-    legacy_hint = (
-        " (the tag exactly matches the requested spelling pre-realpath — "
-        "if this is a pre-r12 table, opt in with allow_legacy_tag=True "
-        f"and re-materialize once with {rebuild} to upgrade the tag)"
-        if tag == sf_dir.rstrip("/")
-        else ""
-    )
     raise ValueError(
         f"{table_desc} at {path} was materialized from {tag!r}, "
         f"not from the requested source {want!r} — {consequence}; "
-        f"re-materialize with {rebuild}{legacy_hint}"
+        f"re-materialize with {rebuild}"
     )
-
-
-#: sibling suffixes of the crash-safe retag swap; tools/retag.py's
-#: pre-Spark guard repeats these literals (it cannot import this module
-#: without paying the pyspark import) — tests/test_retag.py pins the
-#: two copies equal
-RETAG_TMP_SUFFIX = ".retag.tmp"
-RETAG_OLD_SUFFIX = ".retag.old"
-
-
-def _remove_table(p: str) -> None:
-    """Remove a parked table path: a real directory is removed
-    recursively; ANY other existing entry — symlink (target never
-    touched: it may be a shared directory), regular file, FIFO, socket
-    — is unlinked, so no debris shape can block the swap's rename
-    forever; a missing path is a no-op."""
-    if os.path.isdir(p) and not os.path.islink(p):
-        shutil.rmtree(p)
-    elif os.path.lexists(p):
-        os.unlink(p)
-
-
-def retag_table(
-    spark: SparkSession,
-    sf_dir: str,
-    path: str,
-    *,
-    column: str,
-    key: str,
-    table_desc: str,
-    rebuild: Callable[[SparkSession, str, str], None],
-) -> bool:
-    """One-time exit path from ``allow_legacy_tag=True`` (VERDICT r14
-    item 4): upgrade a pre-r12 raw-string-tagged product table to the
-    strict realpath tag by re-writing it through its own ``rebuild``
-    materializer, then verify the strict compare passes. After this runs
-    once, the consumer drops the ``allow_legacy_tag=True`` opt-in.
-
-    Semantics mirror ``require_source`` exactly:
-
-    - already strictly tagged → nothing to do, returns ``False``
-      (idempotent — safe to run unconditionally in a migration sweep);
-    - legacy tag (exact ``sf_dir.rstrip('/')`` match, pre-realpath) →
-      rebuilds via ``rebuild(spark, sf_dir, <path>.retag.tmp)``, asserts
-      the strict tag took THERE, then swaps the verified build into
-      ``path``, returns ``True``;
-    - any OTHER tag (or no tag) → raises ``ValueError``: a genuine
-      source mismatch must never be laundered into a strict tag — that
-      would convert the refuse-on-mismatch contract's one documented
-      weakening into silent corruption.
-
-    Rebuilding from ``sf_dir`` (rather than copying the old rows under a
-    new tag) is deliberate: the materializers are the only writers the
-    contract recognizes, so the upgraded table is guaranteed
-    layout-faithful (e.g. the IVF layout's ``cell=`` partitioning) and
-    consistent with the current build logic. It re-pays one build — a
-    one-time migration cost, not a steady-state one.
-
-    Crash safety: the rebuild lands in a ``<path>.retag.tmp`` sibling
-    and is verified BEFORE touching ``path``, so a failure anywhere up
-    to the swap leaves the legacy table untouched and the helper safely
-    re-runnable. The swap itself is two local renames with the original
-    parked at ``<path>.retag.old`` (removed only after the swap), and a
-    RERUN self-recovers every crash window: ``path`` missing with the
-    verified ``.retag.tmp`` present → the interrupted swap is completed
-    forward; ``path`` missing with only ``.retag.old`` present → the
-    original is restored and the migration re-runs; a stranded
-    ``.retag.old`` next to a healthy ``path`` → cleaned up. Post-swap
-    cleanup is best-effort (a completed swap never reports failure); if
-    ``path`` is a symlink, only the link is swapped — the link's target
-    directory is deliberately left in place (it may be shared). The
-    rename-based swap assumes a local/POSIX filesystem path, which is
-    what the migration tool targets; on object storage, rebuild to a
-    fresh path with the materializer and repoint the consumer instead."""
-    base = os.path.normpath(path)
-    tmp = base + RETAG_TMP_SUFFIX
-    bak = base + RETAG_OLD_SUFFIX
-    #: set when THIS call completed a crashed run's swap forward — the
-    #: parked original was consumed doing so, and the mismatch error
-    #: below must say so (ADVICE r15). ``bak_existed`` records whether
-    #: a parked original was actually THERE before the forward-
-    #: completion cleanup ran — the 'consumed' wording must key on the
-    #: pre-cleanup observation, not on post-cleanup absence, or a
-    #: contrived tmp-without-bak state would claim a consumption that
-    #: never happened (ADVICE r16)
-    forward_completed = False
-    bak_existed = False
-    # self-recover debris from a crashed previous run BEFORE reading:
-    if not os.path.exists(base):
-        if os.path.isdir(tmp) and not os.path.islink(tmp):
-            # crashed between the two swap renames: tmp was already
-            # verified strict (renames only start after verification;
-            # rebuild() always writes a REAL parquet directory, so a
-            # symlink-shaped tmp is debris and must never be installed
-            # at the table path — it falls to the sweep below).
-            # Complete the swap forward, then FALL THROUGH to the
-            # normal read/compare below — it re-validates the tag
-            # against THIS call's sf_dir (the crashed run might have
-            # targeted a different source spelling) and answers
-            # False/True/refuse accordingly.
-            os.rename(tmp, base)
-            spark.catalog.refreshByPath(base)
-            forward_completed = True
-            bak_existed = os.path.lexists(bak)
-            try:
-                _remove_table(bak)
-            except OSError:
-                pass  # table is healthy; debris retried next run
-        elif os.path.isdir(bak):
-            # crashed after parking the original but tmp is gone too
-            # (shouldn't happen, but the original is recoverable):
-            # restore it and fall through to a normal migration run.
-            # isdir (following a symlinked park) — only a real table
-            # can be restored; junk must never be installed at `path`
-            os.rename(bak, base)
-        elif os.path.lexists(bak) or os.path.lexists(tmp):
-            # junk-shaped debris only (non-directory bak, symlink or
-            # file tmp): sweep each independently and refuse cleanly —
-            # honestly reporting any piece the sweep could NOT remove —
-            # instead of letting the read below fail with a raw
-            # path-missing Spark error
-            leftovers = []
-            for p in (bak, tmp):
-                if os.path.lexists(p):
-                    try:
-                        _remove_table(p)
-                    except OSError:
-                        leftovers.append(p)
-            detail = (
-                "sweep FAILED for " + ", ".join(leftovers) + " — remove manually"
-                if leftovers
-                else "now swept"
-            )
-            raise ValueError(
-                f"nothing to re-tag at {path}: only non-table debris was "
-                f"found ({detail}) — re-materialize the {table_desc} "
-                f"from {sf_dir}"
-            )
-    elif os.path.lexists(bak) or os.path.lexists(tmp):
-        # previous run completed the swap but its cleanup failed (a
-        # stranded .retag.old), or a run crashed before its swap began
-        # (a stranded .retag.tmp — real or junk-shaped, both debris
-        # once `path` is healthy; ADVICE r15) — finish the cleanup.
-        # Best-effort FOR REAL: a healthy already-strict table must
-        # no-op below even if this debris is unremovable (root-owned
-        # leftovers, EBUSY mounts)
-        for p in (bak, tmp):
-            if os.path.lexists(p):
-                try:
-                    _remove_table(p)
-                except OSError:
-                    pass
-    df = spark.read.parquet(path)
-    if column not in df.columns:
-        # a wrong-kind invocation (e.g. the edges retag pointed at a
-        # shingle table) must refuse like any other mismatch, not
-        # surface as a raw KeyError from the schema lookup
-        raise ValueError(
-            f"refusing to re-tag {table_desc} at {path}: expected tag "
-            f"column {column!r} is absent from the table's schema — this "
-            f"is not a {table_desc} (wrong table kind?)"
-        )
-    tag = dict(df.schema[column].metadata or {}).get(key)
-    want = canonical_source(sf_dir)
-    if tag == want:
-        return False
-    if tag != sf_dir.rstrip("/"):
-        if forward_completed and bak_existed and not os.path.lexists(bak):
-            consumed = (
-                " (note: this call first completed a crashed earlier "
-                "run's swap forward, which consumed the parked original "
-                f"at {bak!r} — the table now at {path} is that run's "
-                "verified rebuild, not the pre-crash table)"
-            )
-        elif forward_completed and bak_existed and os.path.lexists(bak):
-            # the best-effort bak cleanup failed, so the original IS
-            # still recoverable — say so instead of claiming consumption.
-            # Gated on bak_existed, not just lexists-now: a .retag.old
-            # appearing out-of-band AFTER a bak-less forward completion
-            # is unknown junk, not the pre-crash original, and claiming
-            # it recoverable would misdirect recovery (ADVICE r17 — the
-            # same class the r16 fix closed for the consumed branch)
-            consumed = (
-                " (note: this call first completed a crashed earlier "
-                "run's swap forward; the pre-crash original is still "
-                f"parked at {bak!r} — its cleanup failed — and can be "
-                "restored manually if the crashed run's source was wrong)"
-            )
-        elif forward_completed:
-            # tmp existed but no parked original ever did (bak removed
-            # out-of-band before this call) — the swap was completed
-            # forward, but claiming a consumption that never happened
-            # would misdirect recovery (ADVICE r16)
-            consumed = (
-                " (note: this call first completed a crashed earlier "
-                "run's swap forward; no parked original was present at "
-                f"{bak!r} when the swap completed — the table now at "
-                f"{path} is that run's verified rebuild)"
-            )
-        else:
-            consumed = ""
-        raise ValueError(
-            f"refusing to re-tag {table_desc} at {path}: its tag {tag!r} "
-            f"matches neither the strict canonical form {want!r} nor the "
-            f"legacy raw spelling of {sf_dir!r} — this is a genuine source "
-            "mismatch, not a pre-r12 tag; re-materialize from the correct "
-            f"source instead{consumed}"
-        )
-    # clear BOTH swap spots before paying the rebuild: an unremovable
-    # .retag.old (or debris-shaped .retag.tmp a plain rmtree would
-    # silently skip) must refuse HERE, cleanly — not after a
-    # potentially enormous rebuild has already run, dooming every rerun
-    # to repeat it
-    try:
-        _remove_table(tmp)
-        _remove_table(bak)
-    except OSError as e:
-        raise RuntimeError(
-            f"cannot clear the swap spot for {table_desc} at {path} "
-            f"({e}); remove it manually and re-run the migration"
-        ) from e
-    # rebuild to a sibling and verify there FIRST: an in-place
-    # mode=overwrite rebuild deletes the only copy before the new job
-    # commits, so a mid-rebuild failure would destroy the legacy table
-    # and break the idempotent-rerun contract above
-    rebuild(spark, sf_dir, tmp)
-    df2 = spark.read.parquet(tmp)
-    new_tag = (
-        dict(df2.schema[column].metadata or {}).get(key)
-        if column in df2.columns
-        else None  # schema drift in the materializer — same refuse path
-    )
-    if new_tag != want:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise RuntimeError(
-            f"re-tag of {table_desc} at {path} did not produce the strict "
-            f"tag: got {new_tag!r}, want {want!r} — the rebuild "
-            "materializer is not writing through tag_source"
-        )
-    os.rename(base, bak)
-    os.rename(tmp, base)
-    # the swap happened outside Spark's write path — drop any cached
-    # file listing for `path` so same-session consumers don't chase the
-    # renamed-away old files. Refresh BEFORE the best-effort cleanup: a
-    # completed swap must never report failure over a cleanup error
-    # (the stranded .retag.old is reclaimed by the next run's debris
-    # sweep above).
-    spark.catalog.refreshByPath(base)
-    try:
-        _remove_table(bak)
-    except OSError:
-        pass
-    return True

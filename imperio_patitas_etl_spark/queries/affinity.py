@@ -36,7 +36,6 @@ from imperio_patitas_etl_spark.operators.checkpoint import (
 from imperio_patitas_etl_spark.operators.graph import pagerank_fixed
 from imperio_patitas_etl_spark.operators.provenance import (
     require_source,
-    retag_table,
     tag_source,
 )
 from imperio_patitas_etl_spark.operators.reconcile import classify_snapshot_diff
@@ -1075,13 +1074,12 @@ def materialize_edge_table(spark: SparkSession, sf_dir: str, path: str) -> None:
     Every registry key stays self-contained (rebuilds the pairs from
     lineitem — the benchmark shape, each key its own DuckDB oracle); a
     real pipeline pays the basket explode + pair groupBy ONCE at write
-    time and the whole family reads the result as a table.
-    ``tools/shared_build_probe.py`` measured the family total 10.7 →
-    4.9 s at sf0.1 on this path (BASELINE.md §r9). At 100 TB this is the
-    difference between five full lineitem scans and one: the edge table
-    is orders of magnitude smaller than its source (bounded by
-    Σ |basket|² distinct pairs), so downstream reads are cheap scans of
-    an already-aggregated relation.
+    time and the whole family reads the result as a table; the family
+    total measured 10.7 → 4.9 s at sf0.1 on this path (BASELINE.md §r9).
+    At 100 TB this is the difference between five full lineitem scans
+    and one: the edge table is orders of magnitude smaller than its
+    source (bounded by Σ |basket|² distinct pairs), so downstream reads
+    are cheap scans of an already-aggregated relation.
 
     The table carries its source ``sf_dir`` as field metadata on
     ``part_a`` (operators/provenance.py, one contract across all three
@@ -1096,30 +1094,10 @@ def materialize_edge_table(spark: SparkSession, sf_dir: str, path: str) -> None:
     ).write.mode("overwrite").parquet(path)
 
 
-def retag_edge_table(spark: SparkSession, sf_dir: str, path: str) -> bool:
-    """Upgrade a pre-r12 raw-string-tagged edge table at ``path`` to the
-    strict realpath tag by rebuilding it once from ``sf_dir`` — the
-    documented exit path from ``allow_legacy_tag=True`` on
-    ``copurchase_family_from_edges`` (operators/provenance.py:retag_table
-    for semantics: idempotent on strict tables, refuses genuine
-    mismatches). Returns True iff a rebuild happened."""
-    return retag_table(
-        spark,
-        sf_dir,
-        path,
-        column="part_a",
-        key=_EDGE_SOURCE_KEY,
-        table_desc="edge table",
-        rebuild=materialize_edge_table,
-    )
-
-
 def copurchase_family_from_edges(
     spark: SparkSession,
     sf_dir: str,
     edge_path: str,
-    *,
-    allow_legacy_tag: bool = False,
 ) -> "CopurchaseFamily":
     """The five co-purchase family results computed FROM a materialized
     edge table (``materialize_edge_table``) instead of from lineitem —
@@ -1131,10 +1109,7 @@ def copurchase_family_from_edges(
     have been materialized from the SAME ``sf_dir``, or lift_bp would
     silently mix inconsistent inputs. The provenance tag
     ``materialize_edge_table`` embeds in the table's field metadata is
-    validated here; a missing or mismatched tag raises (ADVICE r10).
-    ``allow_legacy_tag=True`` opts in to the weaker pre-r12 raw-string
-    tag compare for tables materialized before r12 (ADVICE r13: the
-    fallback is caller-visible, never the default).
+    validated here; a missing or mismatched tag raises.
 
     The returned mapping is a :class:`CopurchaseFamily` — a plain dict
     plus a ``release()`` method (VERDICT r12 item 4: uniform lifetime
@@ -1157,7 +1132,6 @@ def copurchase_family_from_edges(
             "source with edges from another"
         ),
         rebuild="materialize_edge_table(spark, sf_dir, path)",
-        allow_legacy_tag=allow_legacy_tag,
     )
     li = load_table(spark, sf_dir, "lineitem")
     # Snapshot-diff ownership (the OwnedFamily construction contract):

@@ -35,7 +35,6 @@ from imperio_patitas_etl_spark.operators.checkpoint import (
 )
 from imperio_patitas_etl_spark.operators.provenance import (
     require_source,
-    retag_table,
     tag_source,
 )
 from imperio_patitas_etl_spark.sources.parquet import load_table
@@ -291,11 +290,10 @@ def _ngram_pair_build(
       RETURNED plan reads them (one bounded shingle table per call, the
       same lifetime contract as the CC final-label checkpoint).
 
-    IDENTICAL SHINGLE SETS ARE COLLAPSED FIRST (r16 — the r3 minhash
-    hot-bucket fix applied to the AllPairs key, prompted by the
-    tools/ngram_candidate_probe.py audit, VERDICT r15 item 1): Jaccard
-    is a function of the shingle SET alone, so documents with identical
-    (lang, sorted-shingle-array) group keys are interchangeable. The
+    IDENTICAL SHINGLE SETS ARE COLLAPSED FIRST (the minhash hot-bucket
+    fix applied to the AllPairs key): Jaccard is a function of the
+    shingle SET alone, so documents with identical (lang,
+    sorted-shingle-array) group keys are interchangeable. The
     AllPairs index runs over one representative per distinct set; a
     qualifying representative pair expands relationally to all member
     cross pairs (same jaccard_bp, exactly), and each non-empty group of
@@ -310,17 +308,20 @@ def _ngram_pair_build(
     term scale with DISTINCT texts only while the emitted clique pairs
     stay output-bounded.
     """
-    groups, groups_ids, member_map, member_ids = _grouped_build(spark, sf_dir)
+    groups, groups_ids, member_map, member_ids = _grouped_build(
+        spark, _shingled(spark, sf_dir)
+    )
     return _pairs_from_grouped(groups, member_map), groups_ids | member_ids
 
 
 def _grouped_build(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, s: DataFrame
 ) -> tuple[DataFrame, set[int], DataFrame, set[int]]:
-    """Shingle + group-collapse + checkpoint stage shared by
-    ``_ngram_pair_build`` (pair-list consumers) and
-    ``_clusters_via_rep_cc`` (connectivity-only consumers). Returns
-    ``(groups, groups_ids, member_map, member_ids)``:
+    """Group-collapse + checkpoint stage over a shingled relation ``s``
+    (doc_id, lang, shingles) — the ONE build path of the ngram-Jaccard
+    family. The registry keys pass ``_shingled(spark, sf_dir)``;
+    ``ngram_family_from_shingles`` passes the materialized shingle
+    table. Returns ``(groups, groups_ids, member_map, member_ids)``:
 
     - ``groups`` — ONE wide (doc_id, lang, shingles) row per distinct
       (lang, shingle-set) group (the representative rows), checkpointed;
@@ -328,39 +329,38 @@ def _grouped_build(
       (qual = can carry edges: non-empty shingles, non-NULL lang —
       group-uniform), checkpointed.
 
-    This replaces the r16-r18 ``tagged`` checkpoint, which materialized
-    every MEMBER's full shingle array — m× the distinct-text volume on a
-    corpus with duplicate multiplicity m, exactly the regime the
-    identical-set collapse exists for. No consumer ever needed the
-    member arrays: the AllPairs index/verify reads rep arrays only, the
-    cross/intra expansions and the CC member labeling read (doc_id, gid)
-    only. Materializing groups + member_map instead makes the wide
-    checkpoint scale with DISTINCT texts (guide §2.3 — shuffle/persist
+    Only the representative rows carry shingle arrays: the AllPairs
+    index/verify reads rep arrays only, the cross/intra expansions and
+    the CC member labeling read (doc_id, gid) only, so the wide
+    checkpoint scales with DISTINCT texts (guide §2.3 — shuffle/persist
     keys and metadata, not payloads).
 
-    NO corpus-wide relation is ever materialized: the transient
+    NO corpus-wide array relation is ever materialized: the transient
     checkpoint feeding the group collapse is the SKINNY narrow
     projection (doc_id, lang, fp, qual — the fingerprint pass consumes
     it twice, aggregate branch + join-back, and Catalyst does not CSE
-    across the fork; un-checkpointed it would tokenize+hash the corpus
-    twice, measured +45% on the scratch builds), released the moment the
-    member map lands. The rep arrays for ``groups`` come from a SECOND
-    tokenize scan joined to the rep ids — one extra fault-tolerant
-    columnar pass in place of the r16-r18 full-corpus wide checkpoint
-    (guide §8 — re-read from storage rather than materialize payloads;
-    the same trade the r19 minhash fix makes). At warehouse scale the
-    second scan disappears into the write-once shingle TABLE SCALE.md
-    describes (``materialize_shingle_table``)."""
+    across the fork), released the moment the member map lands. The rep
+    arrays for ``groups`` come from a SECOND evaluation of ``s`` joined
+    to the rep ids — one extra columnar pass in place of a full-corpus
+    wide checkpoint (guide §8 — re-read from storage rather than
+    materialize payloads). The rep rows are deduplicated on doc_id: the
+    member map is row-unique per doc_id, but a shingle table with a
+    repeated doc_id would otherwise emit its rep row once per copy and
+    every pair of that rep twice."""
     _before = persistent_rdd_ids(spark)
-    narrow_ck = _narrow_of(_shingled(spark, sf_dir)).localCheckpoint()
+    narrow_ck = _narrow_of(s).localCheckpoint()
     _n_ids = persistent_rdd_ids(spark) - _before
     member_map = _member_map(narrow_ck).localCheckpoint()
     member_ids = persistent_rdd_ids(spark) - _before - _n_ids
     release_rdds(spark, _n_ids)
-    groups = _shingled(spark, sf_dir).join(
-        member_map.filter(F.col("doc_id") == F.col("gid")).select("doc_id"),
-        "doc_id",
-    ).localCheckpoint()
+    groups = (
+        s.join(
+            member_map.filter(F.col("doc_id") == F.col("gid")).select("doc_id"),
+            "doc_id",
+        )
+        .dropDuplicates(["doc_id"])
+        .localCheckpoint()
+    )
     groups_ids = (
         persistent_rdd_ids(spark) - _before - _n_ids - member_ids
     )
@@ -404,7 +404,7 @@ def _clusters_via_rep_cc(
     qualification flag rides the member-map checkpoint, so the separate
     qualifying-members checkpoint job is gone too)."""
     groups, groups_ids, member_map, _member_ids = _grouped_build(
-        spark, sf_dir
+        spark, _shingled(spark, sf_dir)
     )
     members = member_map.filter("qual").select("doc_id", "gid")
     # rep-pair checkpoint: the AllPairs index+verify pass runs exactly
@@ -538,8 +538,7 @@ def _member_map(narrow: DataFrame) -> DataFrame:
     silently drop those docs). INPUT CONTRACT: ``narrow`` is consumed
     TWICE (aggregate branch + join-back) and Catalyst does not CSE
     across the fork, so the caller must pass a relation cheap to
-    evaluate twice — a localCheckpoint (``_grouped_build``,
-    ``ngram_family_from_shingles``)."""
+    evaluate twice — a localCheckpoint (``_grouped_build``)."""
     gids = narrow.groupBy("lang", "_fp").agg(F.min("doc_id").alias("gid"))
     # aggregated to EXACTLY one row per doc_id (ADVICE r17): the raw
     # narrow⋈gids relation has one row per INPUT row, so a duplicated
@@ -2434,30 +2433,10 @@ def materialize_shingle_table(
     ).write.mode("overwrite").parquet(path)
 
 
-def retag_shingle_table(spark: SparkSession, sf_dir: str, path: str) -> bool:
-    """Upgrade a pre-r12 raw-string-tagged shingle table at ``path`` to
-    the strict realpath tag by rebuilding it once from ``sf_dir`` — the
-    documented exit path from ``allow_legacy_tag=True`` on
-    ``ngram_family_from_shingles`` (operators/provenance.py:retag_table
-    for semantics: idempotent on strict tables, refuses genuine
-    mismatches). Returns True iff a rebuild happened."""
-    return retag_table(
-        spark,
-        sf_dir,
-        path,
-        column="doc_id",
-        key=_SHINGLE_SOURCE_KEY,
-        table_desc="shingle table",
-        rebuild=materialize_shingle_table,
-    )
-
-
 def ngram_family_from_shingles(
     spark: SparkSession,
     sf_dir: str,
     shingle_path: str,
-    *,
-    allow_legacy_tag: bool = False,
 ) -> dict[str, DataFrame]:
     """The four ngram-dedup family results computed FROM a materialized
     shingle table (``materialize_shingle_table``) instead of an
@@ -2471,9 +2450,7 @@ def ngram_family_from_shingles(
     been materialized from the SAME source; the provenance tag
     ``materialize_shingle_table`` embeds in the table's field metadata is
     validated here (operators/provenance.py) — a missing or mismatched
-    tag raises. ``allow_legacy_tag=True`` opts in to the weaker pre-r12
-    raw-string tag compare for tables materialized before r12 (ADVICE
-    r13: the fallback is caller-visible, never the default).
+    tag raises.
 
     The returned mapping is a :class:`NgramFamily` — a plain dict plus a
     ``release()`` method freeing the shared pair-checkpoint blocks once
@@ -2498,50 +2475,20 @@ def ngram_family_from_shingles(
             "from another"
         ),
         rebuild="materialize_shingle_table(spark, sf_dir, path)",
-        allow_legacy_tag=allow_legacy_tag,
     )
-    # One AllPairs candidate+verify pass total: the pair relation is
-    # localCheckpoint-ed once and feeds the returned pair plan AND both
-    # CC variants — without this, each CC run re-evaluates the
-    # prefix-index/verify pipeline (a full extra index pass at 100 TB).
-    # The family handle owns the lifetime of EVERY checkpoint block the
-    # build leaves persisted — the shared pair table AND the final label
-    # generations both CC runs retain (their CheckpointGenerations free
-    # superseded rounds eagerly but keep the newest; ADVICE r12: owning
-    # only pair_ids left those label blocks to accumulate per
-    # invocation). Checkpointing here is eager (localCheckpoint default),
-    # so the post-build diff is complete by construction; the snapshot
-    # diff is safe because this build runs no lazy .persist() whose RDD
-    # could first register later (the CheckpointGenerations contract).
+    # One AllPairs candidate+verify pass total: the rep-pair relation is
+    # checkpointed once and feeds both the full pair expansion and both
+    # CC variants. The family handle owns EVERY checkpoint block the
+    # build leaves persisted (member map, rep pairs, pair list, and the
+    # final label generation of each CC run); checkpointing is eager, so
+    # the post-build snapshot diff is complete by construction. The rep
+    # arrays (``groups``) are dead once the pair checkpoints land.
     _before = persistent_rdd_ids(spark)
-    # same identical-set pre-collapse as the registry keys (r16, grouped
-    # build shape since r19): the skinny member map and the rep-level
-    # wide rows are checkpointed; the rep arrays (``groups``) are DEAD
-    # the moment the eager pairs checkpoint below materializes (every
-    # family consumer reads only the pair/member blocks), so they are
-    # released immediately instead of held across both CC runs and the
-    # keep-list build until family.release(). The rep-level AllPairs
-    # pass is checkpointed ONCE and feeds both the full pair expansion
-    # (the ngram_jaccard_dedup output) and the rep-graph CC both cluster
-    # variants run on (r18: the loop sees only rep pairs; members label
-    # through gid outside it — not the C(b,2) clique only the pair-LIST
-    # output contractually needs).
-    narrow_ck = _narrow_of(s).localCheckpoint()
-    _narrow_ids = persistent_rdd_ids(spark) - _before
-    member_map = _member_map(narrow_ck).localCheckpoint()
-    release_rdds(spark, _narrow_ids)
-    _skinny_ids = persistent_rdd_ids(spark) - _before
-    groups = s.join(
-        member_map.filter(F.col("doc_id") == F.col("gid")).select("doc_id"),
-        "doc_id",
-    ).localCheckpoint()
-    _groups_ids = persistent_rdd_ids(spark) - _before - _skinny_ids
+    groups, groups_ids, member_map, _member_ids = _grouped_build(spark, s)
     members = member_map.filter("qual").select("doc_id", "gid")
     rep_pairs = _pairs_from_shingled(groups).localCheckpoint()
     pairs = _pairs_from_grouped(groups, member_map, rep_pairs).localCheckpoint()
-    # the wide rep arrays are dead once the rep pairs and the full pair
-    # expansion are materialized
-    release_rdds(spark, _groups_ids)
+    release_rdds(spark, groups_ids)
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     # both CC variants run on the REP graph only (r18,
     # _clusters_via_rep_cc): the loop shuffles near-dup rep pairs, and

@@ -27,7 +27,6 @@ from pyspark.sql.window import Window
 
 from imperio_patitas_etl_spark.operators.provenance import (
     require_source,
-    retag_table,
     tag_source,
 )
 from imperio_patitas_etl_spark.sources.parquet import load_table
@@ -428,31 +427,10 @@ def materialize_cell_layout(spark: SparkSession, sf_dir: str, path: str) -> None
     )
 
 
-def retag_cell_layout(spark: SparkSession, sf_dir: str, path: str) -> bool:
-    """Upgrade a pre-r12 raw-string-tagged cell layout at ``path`` to
-    the strict realpath tag by rebuilding it once from ``sf_dir`` — the
-    documented exit path from ``allow_legacy_tag=True`` on
-    ``ann_ivf_from_layout`` (operators/provenance.py:retag_table for
-    semantics: idempotent on strict tables, refuses genuine mismatches).
-    Rebuilding through ``materialize_cell_layout`` keeps the ``cell=``
-    partitioning intact. Returns True iff a rebuild happened."""
-    return retag_table(
-        spark,
-        sf_dir,
-        path,
-        column="vec_id",
-        key=_LAYOUT_SOURCE_KEY,
-        table_desc="cell layout",
-        rebuild=materialize_cell_layout,
-    )
-
-
 def ann_ivf_from_layout(
     spark: SparkSession,
     sf_dir: str,
     layout_path: str,
-    *,
-    allow_legacy_tag: bool = False,
 ) -> DataFrame:
     """IVF probe against a cell-partitioned layout: the probe cells land
     in the scan's PartitionFilters, so only nprobe×nq cell directories
@@ -463,10 +441,7 @@ def ann_ivf_from_layout(
     The quantizer is re-derived from ``sf_dir``, so the layout MUST have
     been materialized from the SAME source; the provenance tag
     ``materialize_cell_layout`` embeds in the layout's field metadata is
-    validated here — a missing or mismatched tag raises.
-    ``allow_legacy_tag=True`` opts in to the weaker pre-r12 raw-string
-    tag compare for layouts materialized before r12 (ADVICE r13: the
-    fallback is caller-visible, never the default)."""
+    validated here — a missing or mismatched tag raises."""
     layout = spark.read.parquet(layout_path)
     require_source(
         layout,
@@ -480,7 +455,6 @@ def ann_ivf_from_layout(
             "is silently wrong"
         ),
         rebuild="materialize_cell_layout(spark, sf_dir, path)",
-        allow_legacy_tag=allow_legacy_tag,
     )
     v = _with_ivec(spark, sf_dir)
     cent_ids, cent_mat, cent_norms = _collect_centroids(v)

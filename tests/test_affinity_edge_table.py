@@ -1,10 +1,8 @@
-"""The co-purchase materialized-edge path, proven (VERDICT r9 item 5):
-``materialize_edge_table`` + ``copurchase_family_from_edges`` must
-return EXACTLY the five registry-key results — the pipeline shape
-(build the pair relation once, read it as a table) is the measured
-2.2×-family-total win of tools/shared_build_probe.py promoted to a
-product API, and this test is what makes the promotion safe: only the
-pair-build subtree may differ between the two paths.
+"""The co-purchase materialized-edge path: ``materialize_edge_table`` +
+``copurchase_family_from_edges`` must return EXACTLY the five
+registry-key results — the pipeline shape (build the pair relation
+once, read it as a table) is only safe as a product API if the
+pair-build subtree is the one thing that differs between the two paths.
 """
 
 from __future__ import annotations

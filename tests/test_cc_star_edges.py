@@ -52,18 +52,14 @@ def _fixture(spark):
 
 
 def _grouped(spark, docs):
-    """(groups, member_map) via the r19 grouped build over a synthetic
-    corpus — the same checkpointed shapes ``_grouped_build`` produces."""
+    """(groups, member_map) via ``_grouped_build`` over a synthetic
+    corpus."""
     s = docs.select(
         "doc_id", "lang", F.split("text", " ").alias("__t")
     ).select(
         "doc_id", "lang", F.expr(text._shingles_of("__t")).alias("shingles")
-    ).localCheckpoint()
-    member_map = _member_map(_narrow_of(s)).localCheckpoint()
-    groups = s.join(
-        member_map.filter(F.col("doc_id") == F.col("gid")).select("doc_id"),
-        "doc_id",
-    ).localCheckpoint()
+    )
+    groups, _gids, member_map, _mids = text._grouped_build(spark, s)
     return groups, member_map
 
 
@@ -128,10 +124,10 @@ def test_rep_graph_loop_input_is_constant_in_class_size(spark):
 
 
 def test_member_map_is_row_unique_on_duplicated_doc_id(spark):
-    """ADVICE r17: the member map aggregates to EXACTLY one row per
-    doc_id, so a duplicated doc_id in an externally materialized shingle
-    table cannot multiply rows through the downstream pair-expansion
-    joins (2 input rows → 4 output pairs)."""
+    """The member map aggregates to EXACTLY one row per doc_id, and the
+    grouped build keeps one rep row per doc_id, so a duplicated doc_id
+    in an externally materialized shingle table cannot multiply rows
+    through the rep-pair index or the pair-expansion joins."""
     s = spark.createDataFrame(
         [
             (1, "en", ["a", "b"]),
@@ -145,15 +141,21 @@ def test_member_map_is_row_unique_on_duplicated_doc_id(spark):
     # both docs carry the single group gid and qualify
     rows = {r.doc_id: (r.gid, r.qual) for r in mm.collect()}
     assert rows == {1: (1, True), 2: (1, True)}
-    # and the intra-group clique is emitted exactly once
-    groups = s.join(
-        mm.filter(F.col("doc_id") == F.col("gid")).select("doc_id"),
-        "doc_id",
-    ).dropDuplicates(["doc_id"])
-    pairs = sorted(
-        tuple(r) for r in _pairs_from_grouped(groups, mm).collect()
+    # the production build: one rep row per group despite the repeated
+    # doc_id, and every pair emitted exactly once
+    s = s.union(
+        spark.createDataFrame(
+            [(3, "en", ["a", "b", "c"]), (3, "en", ["a", "b", "c"])],
+            s.schema,
+        )
     )
-    assert pairs == [(1, 2, 10000)]
+    groups, _gids, member_map, _mids = text._grouped_build(spark, s)
+    assert sorted(r.doc_id for r in groups.collect()) == [1, 3]
+    pairs = sorted(
+        tuple(r) for r in _pairs_from_grouped(groups, member_map).collect()
+    )
+    # {a,b} vs {a,b,c}: |∩| = 2, |∪| = 3 → jaccard 6667 bp
+    assert pairs == [(1, 2, 10000), (1, 3, 6667), (2, 3, 6667)]
 
 
 def test_fp_encodes_null_elements_explicitly(spark):
@@ -183,7 +185,9 @@ def test_registry_cluster_keys_share_components_with_pair_list(spark, sf_dir):
     """End-to-end on real data: the registry cluster key (rep-graph CC)
     equals CC over the full pair list — the clique-vs-rep equivalence on
     the actual corpus, not just the synthetic fixture."""
-    groups, _gids, member_map, _mids = text._grouped_build(spark, sf_dir)
+    groups, _gids, member_map, _mids = text._grouped_build(
+        spark, _shingled(spark, sf_dir)
+    )
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
     want = sorted(
         tuple(r)

@@ -9,8 +9,8 @@ rejected the SAME directory spelled via a relative path or symlink;
 this file pins the shared-helper behavior the per-table suites don't:
 
 - path canonicalization at both ends (relative / symlink spellings of
-  the same directory are accepted; a genuinely different dir still
-  raises) — ADVICE r11;
+  the same directory are accepted; a genuinely different dir, or a tag
+  stored under a raw non-canonical spelling, still raises);
 - two product tables composed in ONE session (the pipeline shape a real
   warehouse layout runs) — VERDICT r11 item 4;
 - the ngram family's pair-checkpoint release handle — ADVICE r11 (the
@@ -36,7 +36,7 @@ from imperio_patitas_etl_spark.operators.provenance import (
     require_source,
     tag_source,
 )
-from imperio_patitas_etl_spark.queries import affinity, text
+from imperio_patitas_etl_spark.queries import affinity, text, vector
 
 
 def test_canonical_source_collapses_spellings(tmp_path):
@@ -86,86 +86,54 @@ def test_tag_and_require_roundtrip_through_parquet(spark, tmp_path):
         require_source(back, "k", "other_product_kind", str(src), **kwargs)
 
 
-def test_legacy_raw_tag_accepted_with_identical_spelling(spark, tmp_path):
-    """ADVICE r12 backward-compat edge, narrowed by ADVICE r13: tables
-    materialized BEFORE r12 stored the raw ``sf_dir.rstrip('/')`` as the
-    tag. A pre-r12 table written via a symlinked spelling must still be
-    consumable with that exact spelling (realpath of which differs from
-    the stored tag) — but ONLY when the caller opts in with
-    ``allow_legacy_tag=True``; the default stays the strict realpath
-    compare (the unconditional fallback silently weakened the identity
-    check for ALL tables). A genuinely different source is refused
-    either way."""
+@pytest.mark.parametrize(
+    "column, key, consume",
+    [
+        (
+            "doc_id",
+            text._SHINGLE_SOURCE_KEY,
+            text.ngram_family_from_shingles,
+        ),
+        (
+            "part_a",
+            affinity._EDGE_SOURCE_KEY,
+            affinity.copurchase_family_from_edges,
+        ),
+        ("vec_id", vector._LAYOUT_SOURCE_KEY, vector.ann_ivf_from_layout),
+    ],
+    ids=["shingles", "edges", "layout"],
+)
+def test_raw_symlink_spelled_tag_is_refused(
+    spark, tmp_path, column, key, consume
+):
+    """A tag holding a raw, non-realpath spelling of the source (here a
+    symlink) is refused even when the consumer passes that exact
+    spelling: the compare is realpath against realpath only. Checked on
+    the helper and on each product-table consumer, which must refuse
+    before it builds anything."""
     real = tmp_path / "sf"
     real.mkdir()
     link = tmp_path / "sf_alias"
     os.symlink(real, link)
-    legacy_spelling = str(link) + "/"
-    # simulate the pre-r12 writer: raw rstrip('/') tag, no realpath
-    df = spark.range(3).toDF("k").withMetadata(
-        "k", {"test_source": legacy_spelling.rstrip("/")}
+    raw = str(link)
+    out = str(tmp_path / "raw_tag")
+    spark.range(3).toDF(column).withMetadata(column, {key: raw}).write.parquet(
+        out
     )
-    out = str(tmp_path / "tbl")
-    df.write.parquet(out)
     back = spark.read.parquet(out)
-    kwargs = dict(
-        table_desc="test table",
-        path=out,
-        consequence="downstream would mix sources",
-        rebuild="tag_source(...)",
-    )
-    # identical spelling as used at write time: accepted via the legacy
-    # exact-string fallback (with or without the trailing slash), but
-    # only under the explicit opt-in
-    require_source(
-        back, "k", "test_source", legacy_spelling,
-        allow_legacy_tag=True, **kwargs,
-    )
-    require_source(
-        back, "k", "test_source", str(link),
-        allow_legacy_tag=True, **kwargs,
-    )
-    # the strict DEFAULT refuses the same call, and the message points
-    # at the opt-in + one-time re-tag path
-    with pytest.raises(ValueError, match="allow_legacy_tag"):
-        require_source(back, "k", "test_source", legacy_spelling, **kwargs)
-    # a different source is refused even WITH the opt-in
     with pytest.raises(ValueError, match="re-materialize"):
         require_source(
-            back, "k", "test_source", str(tmp_path / "elsewhere"),
-            allow_legacy_tag=True, **kwargs,
+            back,
+            column,
+            key,
+            raw,
+            table_desc="product table",
+            path=out,
+            consequence="downstream would mix sources",
+            rebuild="materialize(spark, sf_dir, path)",
         )
-
-
-def test_consumer_threads_allow_legacy_tag(spark, sf_dir, tmp_path):
-    """ADVICE r13 at the consumer level: a pre-r12 shingle table (raw
-    non-realpath tag) is refused by ``ngram_family_from_shingles`` under
-    the strict default — with the opt-in named in the error — and
-    accepted when the caller passes ``allow_legacy_tag=True``; the
-    family then works end-to-end and releases cleanly."""
-    link = tmp_path / "sf_alias"
-    os.symlink(sf_dir, link)
-    legacy_spelling = str(link)
-    shingle_path = str(tmp_path / "shingles")
-    # simulate the pre-r12 writer: materialize normally, then re-write
-    # the table with the raw (non-realpath) spelling as its tag
-    text.materialize_shingle_table(spark, legacy_spelling, shingle_path)
-    from imperio_patitas_etl_spark.queries.text import _SHINGLE_SOURCE_KEY
-
-    legacy = (
-        spark.read.parquet(shingle_path)
-        .withMetadata("doc_id", {_SHINGLE_SOURCE_KEY: legacy_spelling})
-    )
-    legacy_path = str(tmp_path / "shingles_legacy")
-    legacy.write.parquet(legacy_path)
-
-    with pytest.raises(ValueError, match="allow_legacy_tag"):
-        text.ngram_family_from_shingles(spark, legacy_spelling, legacy_path)
-    fam = text.ngram_family_from_shingles(
-        spark, legacy_spelling, legacy_path, allow_legacy_tag=True
-    )
-    assert fam["ngram_jaccard_dedup"].count() > 0
-    fam.release()
+    with pytest.raises(ValueError, match="re-materialize"):
+        consume(spark, raw, out)
 
 
 def test_symlinked_source_accepted_by_shingle_consumer(

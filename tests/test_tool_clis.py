@@ -1,24 +1,10 @@
-"""CLI guard rails for the tools/ commands (VERDICT r14 hygiene family:
-check.py r13, sweep_batch r13, rotation/retag r15, dump_plans/make_sf1
-and the two probes r15; the r16 scale-evidence tools — pipeline_bench,
-ngram_candidate_probe, scaling_curve — join the same rails below).
-
-The pre-r15 parsing in these four was hand-rolled ``sys.argv`` slicing:
-
-- ``dump_plans.py --ful`` silently produced the SUMMARY dump where the
-  caller asked for the full one (the typo'd flag was dropped from the
-  positional list and never compared);
-- ``make_sf1.py out 0`` crashed with IndexError deep in the build
-  (``parts[0]`` on an empty list) instead of an argument error, and
-  nothing stopped an ``out_dir`` inside the read-only testdata tree
-  from being hit with overwrite-mode writes;
-- both probes accepted stray extra positionals silently and turned a
-  non-integer ``reps`` into a raw ValueError traceback.
-
-All four now parse via argparse with the same deferred-import shape as
-retag.py: every case below exits during argument handling, before any
-pyspark import or SparkSession — asserted structurally by the absence
-of Spark startup markers (ADVICE r14: no wall-clock bounds).
+"""CLI guard rails for the tools/ commands: each parses its arguments
+with argparse and defers the pyspark import, so every case below exits
+during argument handling, before any pyspark import or SparkSession —
+asserted structurally by the absence of Spark startup markers (no
+wall-clock bounds). Two regressions motivated them: ``dump_plans.py
+--ful`` silently produced the summary dump, and ``make_sf1.py out 0``
+crashed with IndexError mid-build instead of an argument error.
 """
 
 from __future__ import annotations
@@ -51,15 +37,12 @@ def assert_no_spark(res: subprocess.CompletedProcess) -> None:
 ALL_TOOLS = [
     "dump_plans.py",
     "make_sf1.py",
-    "shared_build_probe.py",
-    "shingle_family_probe.py",
     "pipeline_bench.py",
 ]
 
-#: r16 tools with VARIADIC positionals by design (N sf_dirs / N keys) —
-#: they share the help/typo'd-flag rails but not the arity test
+#: tools with VARIADIC positionals by design (N keys) — they share the
+#: help/typo'd-flag rails but not the arity test
 VARIADIC_TOOLS = [
-    "ngram_candidate_probe.py",
     "scaling_curve.py",
 ]
 
@@ -91,38 +74,12 @@ def test_stray_extra_positional_is_an_error(tool):
 
 @pytest.mark.parametrize(
     "tool",
-    [
-        "dump_plans.py",
-        "shared_build_probe.py",
-        "shingle_family_probe.py",
-        "pipeline_bench.py",
-        "ngram_candidate_probe.py",
-    ],
+    ["dump_plans.py", "pipeline_bench.py"],
 )
 def test_missing_sf_dir_is_an_argument_error(tool):
     res = run_cli(tool, "/no/such/sf_dir")
     assert res.returncode != 0
     assert "no such sf_dir" in res.stderr
-    assert_no_spark(res)
-
-
-@pytest.mark.parametrize(
-    "tool", ["shared_build_probe.py", "shingle_family_probe.py"]
-)
-def test_non_integer_reps_is_an_argument_error(tool):
-    res = run_cli(tool, "/tmp", "three")
-    assert res.returncode != 0
-    assert "invalid int value" in res.stderr
-    assert_no_spark(res)
-
-
-@pytest.mark.parametrize(
-    "tool", ["shared_build_probe.py", "shingle_family_probe.py"]
-)
-def test_zero_reps_is_an_argument_error(tool):
-    res = run_cli(tool, "/tmp", "0")
-    assert res.returncode != 0
-    assert "reps must be >= 1" in res.stderr
     assert_no_spark(res)
 
 
