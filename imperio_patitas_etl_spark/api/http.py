@@ -26,7 +26,8 @@ Design notes:
   runs (SURVEY.md §7 phase 2's "thin runner replacing FastAPI dispatch",
   now with the actual HTTP layer on top).
 - Unknown entity → 404; pipeline errors → 500 with the error string —
-  the reference's status mapping (endpoints.py:101-106).
+  the reference's status mapping (endpoints.py:101-106). A malformed
+  ``start_date``, ``days`` or ``n`` → 400 before the pipeline runs.
 - The reference runs scheduler jobs on a thread-pool to keep the event
   loop free; under Flask/WSGI each request already has its own worker
   thread, so the delegation is direct. Long jobs at 100 TB belong on a
@@ -41,12 +42,21 @@ from __future__ import annotations
 
 import time
 import traceback
+from datetime import datetime
 
 from flask import Flask, jsonify, request
 
 from imperio_patitas_etl_spark.plans.pipeline import EtlPipeline
 
 _ENTITIES = ("clients", "products", "documents", "all")
+
+
+def _is_iso_date(s: str) -> bool:
+    """True for a valid calendar date spelled exactly ``YYYY-MM-DD``."""
+    try:
+        return datetime.strptime(s, "%Y-%m-%d").strftime("%Y-%m-%d") == s
+    except ValueError:
+        return False
 
 
 def create_app(pipeline: EtlPipeline) -> Flask:
@@ -85,6 +95,13 @@ def create_app(pipeline: EtlPipeline) -> Flask:
                 404,
             )
         start_date = request.args.get("start_date")
+        # validate before any work: a bad date would otherwise fail in the
+        # documents step, after clients and products were already re-synced
+        if start_date is not None and not _is_iso_date(start_date):
+            return (
+                jsonify({"status": "error", "detail": "start_date must be YYYY-MM-DD"}),
+                400,
+            )
         try:
             pipeline.sync(entity, start_date=start_date)
         except Exception as e:  # noqa: BLE001
@@ -117,6 +134,9 @@ def create_app(pipeline: EtlPipeline) -> Flask:
             days = int(request.args.get("days", "1"))
         except ValueError:
             return jsonify({"status": "error", "detail": "days must be an int"}), 400
+        if days < 0:
+            # a negative window puts the cutoff in the future: loads nothing
+            return jsonify({"status": "error", "detail": "days must be >= 0"}), 400
         t0 = time.time()
         try:
             pipeline.incremental(days=days)

@@ -1,40 +1,20 @@
-"""Keyed upsert operators (J6/J7/K2/K3, SURVEY.md §2.2/2.4).
+"""Keyed upsert operators (J6/K3, SURVEY.md §2.2/2.4).
 
 The reference upserts into BigQuery with generated MERGE statements in
 50-row batches (etl_service.py:252-293, builders :328-503) and falls back
 to DELETE+INSERT (:296-325). In Spark the same semantics are set
 operations over DataFrames — one shuffle by key, no batching, idempotent:
 
-- ``upsert_latest_wins``    — pure-DataFrame MERGE equivalent.
+- ``upsert_latest_wins``    — the MERGE equivalent; the warehouse sink
+                              (sinks/warehouse.py) commits its result.
 - ``delete_insert``         — the fallback, as anti-join + union.
-- ``merge_into_parquet``    — THE SUPPORTED MERGE SINK (decision recorded
-                              r8, closing the r4-r7 carry-over): transactional
-                              MERGE on a plain-parquet path via write-temp +
-                              atomic directory swap, so readers see the old or
-                              the new complete table, never a partial write.
-- ``merge_into_delta``      — optional integration: real ``MERGE INTO`` when
-                              delta-spark is installed and the target is a
-                              Delta table (gated import). delta-spark is not
-                              installable in this environment, so the branch
-                              is pinned by a contract-mock test
-                              (tests/test_delta_merge.py) that executes every
-                              line against a recorded DeltaTable API double —
-                              the call shape is verified; the integration
-                              itself runs only in a Delta deployment.
-- ``merge_into``            — the unified entry point: Delta branch when the
-                              target is a Delta table, transactional parquet
-                              branch otherwise. One MERGE contract that
-                              EXECUTES in every environment.
 
-Scale note: both paths shuffle once on the merge key. For repeated upserts
+Scale note: both shuffle once on the merge key. For repeated upserts
 into the same table, bucketing the stored table by the key makes the target
 side shuffle-free.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -98,96 +78,3 @@ def delete_insert(target: DataFrame, source: DataFrame, key: str) -> DataFrame:
     ``upsert_latest_wins`` when source has full rows."""
     survivors = target.join(source.select(key).distinct(), on=key, how="left_anti")
     return survivors.unionByName(source.select(target.columns))
-
-
-def merge_into_delta(
-    spark,
-    target_path: str,
-    source: DataFrame,
-    key: str,
-    update_cols: list[str] | None = None,
-) -> bool:
-    """K2 via Delta Lake ``MERGE INTO`` when the runtime has delta installed.
-
-    Returns True if the Delta path ran, False when it must decline — either
-    delta-spark is absent (this test container ships plain parquet only) or
-    ``target_path`` is not a Delta table (a parquet warehouse dir must not
-    be handed to ``DeltaTable.forPath``, which would throw instead of
-    falling back). On decline the caller runs ``merge_into_parquet`` — the
-    SUPPORTED sink; this branch is the optional Delta integration, its call
-    shape pinned by the contract-mock test in tests/test_delta_merge.py
-    (delta-spark cannot be installed here, so a live Delta commit runs only
-    in a Delta deployment).
-
-    ``update_cols`` restricts the matched-UPDATE to a column subset, same
-    contract as ``upsert_latest_wins`` (the documento MERGE updates only
-    id_cliente/monto_* — etl_service.py:452-457); None updates all columns.
-    """
-    try:
-        from delta.tables import DeltaTable  # type: ignore
-    except Exception:
-        return False
-    if not DeltaTable.isDeltaTable(spark, target_path):
-        return False
-    tbl = DeltaTable.forPath(spark, target_path)
-    m = tbl.alias("t").merge(source.alias("s"), f"t.{key} = s.{key}")
-    if update_cols is None:
-        m = m.whenMatchedUpdateAll()
-    else:
-        m = m.whenMatchedUpdate(set={c: f"s.{c}" for c in update_cols})
-    m.whenNotMatchedInsertAll().execute()
-    return True
-
-
-def merge_into_parquet(
-    spark,
-    target_path: str,
-    source: DataFrame,
-    key: str,
-    update_cols: list[str] | None = None,
-) -> None:
-    """K2 as a transactional MERGE on a plain-parquet table path.
-
-    Semantics identical to ``merge_into_delta`` (matched → UPDATE of
-    ``update_cols`` or all columns, not matched → INSERT), implemented as
-    latest-wins over the union and committed with write-temp + atomic
-    rename — the all-or-nothing visibility a Delta MERGE commit gives,
-    minus multi-writer isolation (single-writer contract, same as the
-    warehouse sink documents). The pre-swap table is kept until the swap
-    succeeds, so any failure — plan analysis, executor death mid-write,
-    or the swap itself — leaves the target exactly as it was.
-    """
-    target = spark.read.parquet(target_path)
-    merged = upsert_latest_wins(target, source, key, update_cols)
-    tmp = target_path.rstrip("/") + "__merge_tmp"
-    # materialize BEFORE touching the target: merged reads target_path
-    merged.write.mode("overwrite").parquet(tmp)
-    prev = target_path.rstrip("/") + "__merge_prev"
-    os.rename(target_path, prev)
-    try:
-        os.rename(tmp, target_path)
-    except BaseException:
-        os.rename(prev, target_path)  # rollback — old table intact
-        raise
-    shutil.rmtree(prev, ignore_errors=True)
-
-
-def merge_into(
-    spark,
-    target_path: str,
-    source: DataFrame,
-    key: str,
-    update_cols: list[str] | None = None,
-) -> str:
-    """Unified MERGE INTO entry point — returns which branch committed.
-
-    The Delta branch runs when delta-spark is installed AND the target is
-    a real Delta table; every other combination takes the transactional
-    parquet branch, so the MERGE contract (matched update / unmatched
-    insert, atomic visibility) executes in EVERY environment instead of
-    being declined where Delta is absent (VERDICT r4-r6 carry-over).
-    """
-    if merge_into_delta(spark, target_path, source, key, update_cols):
-        return "delta"
-    merge_into_parquet(spark, target_path, source, key, update_cols)
-    return "parquet"

@@ -31,12 +31,13 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from imperio_patitas_etl_spark.operators.validate import ValidationResult
 from imperio_patitas_etl_spark.plans.entities import (
     transform_clients,
     transform_documents,
     transform_products,
 )
-from imperio_patitas_etl_spark.sinks.warehouse import ParquetWarehouse
+from imperio_patitas_etl_spark.sinks.warehouse import WAREHOUSE_SCHEMAS, ParquetWarehouse
 
 SourceFn = Callable[[], DataFrame]
 
@@ -62,9 +63,7 @@ class EtlPipeline:
         """sync_clients (etl_service.py:508-547): validate → upsert cliente."""
         self.warehouse.ensure_all()
         res = transform_clients(self.sources["clients"]())
-        accepted = res.accepted.drop(*self._warn_cols(res.accepted))
-        n_valid, n_invalid = accepted.count(), res.rejected.count()
-        self._report_rows.append(("cliente", n_valid, n_invalid))
+        accepted, n_valid, _ = self._counted("cliente", res)
         if n_valid:  # F6: skip load when 0 valid rows (etl_service.py:535-537)
             self.warehouse.upsert("cliente", accepted)
         return n_valid
@@ -79,9 +78,7 @@ class EtlPipeline:
             self.sources["price_list"](),
             self.sources["costs"](),
         )
-        accepted = res.accepted.drop(*self._warn_cols(res.accepted))
-        n_valid, n_invalid = accepted.count(), res.rejected.count()
-        self._report_rows.append(("producto", n_valid, n_invalid))
+        accepted, n_valid, n_invalid = self._counted("producto", res)
         if n_valid == 0 and n_invalid > 0:
             raise ValueError("product sync: all rows invalid")
         if n_valid:
@@ -103,12 +100,8 @@ class EtlPipeline:
                 >= F.to_timestamp(F.lit(start_date))
             )
         headers, lines = transform_documents(raw)
-        h_acc = headers.accepted.drop(*self._warn_cols(headers.accepted))
-        l_acc = lines.accepted.drop(*self._warn_cols(lines.accepted))
-        n_h, n_hr = h_acc.count(), headers.rejected.count()
-        n_l, n_lr = l_acc.count(), lines.rejected.count()
-        self._report_rows.append(("documento_venta", n_h, n_hr))
-        self._report_rows.append(("detalle_documento", n_l, n_lr))
+        h_acc, n_h, _ = self._counted("documento_venta", headers)
+        l_acc, n_l, _ = self._counted("detalle_documento", lines)
         if n_h:
             self.warehouse.upsert("documento_venta", h_acc)
         if n_l:
@@ -165,8 +158,6 @@ class EtlPipeline:
 
     def mirror_all(self) -> bool:
         """K5: full-refresh mirror of all 4 tables."""
-        from imperio_patitas_etl_spark.sinks.warehouse import WAREHOUSE_SCHEMAS
-
         return self.mirror(tuple(WAREHOUSE_SCHEMAS))
 
     def clean_and_reload(self) -> None:
@@ -205,6 +196,10 @@ class EtlPipeline:
             self._report_rows, "entity string, valid long, invalid long"
         )
 
-    @staticmethod
-    def _warn_cols(df: DataFrame) -> list[str]:
-        return [col for col in df.columns if col.startswith("warn_")]
+    def _counted(self, table: str, res: ValidationResult) -> tuple[DataFrame, int, int]:
+        """Validated rows of ``res`` without their ``warn_*`` columns, plus
+        the accepted and rejected counts, recorded as a report row."""
+        accepted = res.accepted.drop(*[c for c in res.accepted.columns if c.startswith("warn_")])
+        n_valid, n_invalid = accepted.count(), res.rejected.count()
+        self._report_rows.append((table, n_valid, n_invalid))
+        return accepted, n_valid, n_invalid

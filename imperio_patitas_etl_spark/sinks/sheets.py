@@ -11,8 +11,8 @@ sequence against a Sheets client.
 
 No network or gspread exists in this environment, so the adapter is
 written against a DUCK-TYPED client contract and pinned by a recorded
-API double in tests/test_sheets_sink.py (the same closure pattern as the
-Delta MERGE branch): every line here executes under test; the live
+API double in tests/test_sheets_sink.py: every line here executes
+under test; the live
 ``gspread`` connection is the one documented seam
 (``connect_gspread``) a deployment fills in.
 

@@ -10,15 +10,14 @@ DataFrame writes against a parquet directory layout:
 - schemas are declared ``StructType``s (never inferred at the sink);
 - ``upsert`` is one shuffle by the merge key (latest-wins over
   target ∪ source), then an atomic directory swap — the plain-parquet
-  equivalent of a transactional MERGE. When delta-spark is installed the
-  same call routes to a real ``MERGE INTO`` (operators/upsert.py);
+  equivalent of a transactional MERGE;
 - writes default to snappy parquet; at 100 TB the tables would be
   date-partitioned (``partition_cols``) so incremental upserts rewrite only
   the touched partitions and readers prune by date.
 
-The atomic swap (write to ``_tmp`` + rename) mirrors what a table format's
-commit protocol gives for free; it keeps readers from ever observing a
-half-written table in plain-parquet mode.
+The atomic swap (``swap_dir``: write to ``_tmp``, then rename) mirrors
+what a table format's commit protocol gives for free; it keeps readers
+from ever observing a half-written table in plain-parquet mode.
 """
 
 from __future__ import annotations
@@ -30,10 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from imperio_patitas_etl_spark.operators.upsert import (
-    delete_insert,
-    upsert_latest_wins,
-)
+from imperio_patitas_etl_spark.operators.upsert import upsert_latest_wins
 
 #: Warehouse schemas — exact mapping of bigquery_client.py:80-128
 #: (INTEGER→long, STRING→string, FLOAT→double, TIMESTAMP→timestamp).
@@ -119,25 +115,46 @@ PARTITION_SPEC: dict[str, tuple[str, str]] = {
 }
 
 
+def swap_dir(tmp: str, final: str) -> None:
+    """Replace directory ``final`` with the fully written ``tmp``.
+
+    The live directory moves aside to ``<final>_prev`` and ``tmp`` is
+    renamed in; if that rename raises, ``<final>_prev`` is renamed back
+    before re-raising, so ``final`` holds the old or the new table. A
+    ``<final>_prev`` left by a killed run is cleared first: ``os.rename``
+    onto a non-empty directory fails, so it would block every later swap.
+    """
+    prev = final + "_prev"
+    shutil.rmtree(prev, ignore_errors=True)
+    if os.path.isdir(final):
+        os.rename(final, prev)
+    try:
+        os.rename(tmp, final)
+    except BaseException:
+        if os.path.isdir(prev):
+            os.rename(prev, final)
+        raise
+    shutil.rmtree(prev, ignore_errors=True)
+
+
 class ParquetWarehouse:
     """The 4-table warehouse rooted at a directory, one parquet dataset per
-    table. All mutating operations end in an atomic swap so a concurrent
-    reader sees either the old or the new table, never a partial write.
+    table. Whole-table rewrites (overwrite, truncate, compact and the
+    unpartitioned upsert) commit through ``swap_dir``, so a reader sees
+    either the old or the new table, never a partial write.
 
     With ``partitioned=True`` the fact tables are laid out as
     ``fecha_dia=YYYY-MM-DD/`` date partitions (PARTITION_SPEC) and upserts
     become PARTITION-SCOPED: only the dates present in the source are read,
-    merged, and dynamically overwritten. That is the 100 TB path — an
-    incremental day of data rewrites one day's partitions, not the table,
-    and incremental readers prune by date at the file-listing level. The
-    dimension tables stay unpartitioned (they are small and broadcast)."""
+    merged, and dynamically overwritten, so an incremental day rewrites one
+    day's partitions, not the table. The dimension tables stay
+    unpartitioned (they are small and broadcast)."""
 
     def __init__(
         self,
         spark: SparkSession,
         root: str,
         partitioned: bool = False,
-        keep_history: bool = False,
         merge_skip_unchanged: bool = False,
     ):
         self.spark = spark
@@ -157,13 +174,6 @@ class ParquetWarehouse:
         #: content-addressed data files; this is the plain-parquet
         #: equivalent.
         self.merge_skip_unchanged = merge_skip_unchanged
-        #: with keep_history=True every atomic swap RETAINS the replaced
-        #: table directory as an immutable numbered snapshot
-        #: (_history/<table>/v<N>) instead of deleting it — directory-level
-        #: time travel on plain parquet (the Iceberg/Delta snapshot idea
-        #: without a manifest format). Off by default: history doubles the
-        #: write amplification of every swap.
-        self.keep_history = keep_history
         os.makedirs(root, exist_ok=True)
 
     def _part_col(self, table: str) -> tuple[str, str] | None:
@@ -271,64 +281,7 @@ class ParquetWarehouse:
         if part:
             w = w.partitionBy(part[0])
         w.parquet(tmp)
-        final = self.path(table)
-        if os.path.isdir(final):
-            if self.keep_history:
-                os.rename(final, self._next_snapshot_dir(table))
-            else:
-                shutil.rmtree(final)
-        os.rename(tmp, final)
-
-    # -- snapshots / time travel -----------------------------------------
-    #
-    # Directory-level snapshot retention over the atomic swap: each
-    # replaced table version survives as _history/<table>/v<N>. On a
-    # local filesystem the version commit is the same atomic rename the
-    # swap already relies on; on an object store at 100 TB the rename
-    # becomes a manifest pointer update (Iceberg/Delta's commit), and
-    # vacuum becomes manifest-driven file GC — the API below is the part
-    # that stays the same.
-
-    def _history_dir(self, table: str) -> str:
-        return os.path.join(self.root, "_history", table)
-
-    def _next_snapshot_dir(self, table: str) -> str:
-        hist = self._history_dir(table)
-        os.makedirs(hist, exist_ok=True)
-        n = max(self.snapshots(table), default=-1) + 1
-        return os.path.join(hist, f"v{n}")
-
-    def snapshots(self, table: str) -> list[int]:
-        """Retained snapshot versions, oldest first (v0 = the table as it
-        was before the first history-retaining swap)."""
-        hist = self._history_dir(table)
-        if not os.path.isdir(hist):
-            return []
-        return sorted(
-            int(d[1:]) for d in os.listdir(hist)
-            if d.startswith("v") and d[1:].isdigit()
-        )
-
-    def read_version(self, table: str, version: int) -> DataFrame:
-        """Time-travel read of a retained snapshot (the current table is
-        not a snapshot — use ``read``)."""
-        p = os.path.join(self._history_dir(table), f"v{version}")
-        if not os.path.isdir(p):
-            raise FileNotFoundError(
-                f"{table} has no snapshot v{version}; "
-                f"retained: {self.snapshots(table)}"
-            )
-        return self.spark.read.parquet(p)
-
-    def vacuum(self, table: str, keep_last: int = 1) -> list[int]:
-        """Drop all but the newest ``keep_last`` snapshots; returns the
-        versions removed. Time travel is a retention policy, not a log
-        that grows forever."""
-        versions = self.snapshots(table)
-        doomed = versions[: max(0, len(versions) - keep_last)]
-        for v in doomed:
-            shutil.rmtree(os.path.join(self._history_dir(table), f"v{v}"))
-        return doomed
+        swap_dir(tmp, self.path(table))
 
     def compact(self, table: str, max_records_per_file: int = 1_000_000) -> tuple[int, int]:
         """Rewrite the table into as few files as its size allows —
@@ -336,8 +289,8 @@ class ParquetWarehouse:
         needs (each partition-scoped upsert / append leaves one file per
         task, and file count, not byte count, is what kills scan planning
         at scale). Returns (files_before, files_after). Goes through the
-        same atomic swap (and therefore snapshot retention) as every
-        other mutation; partitioned tables compact within partitions."""
+        same atomic swap as every other mutation; partitioned tables
+        compact within partitions."""
         before = self._count_files(table)
         df = self._raw_read(table)
         part = self._part_col(table)
@@ -389,26 +342,17 @@ class ParquetWarehouse:
     def upsert(self, table: str, source: DataFrame) -> None:
         """MERGE ON key: matched → UPDATE (column subset per UPDATE_COLS),
         not matched → INSERT. Idempotent — re-running with the same source
-        yields the same table (the reference's whole incremental story
-        hinges on this, scheduler_endpoints.py:71-125).
+        yields the same table (scheduler_endpoints.py:71-125).
 
-        Tries a real Delta ``MERGE INTO`` first (operators/upsert.py:
-        merge_into_delta); plain-parquet mode computes latest-wins and swaps.
-        On a partitioned table the merge is PARTITION-SCOPED: only the
-        dates present in the source are read and dynamically overwritten —
-        an incremental day touches one day's files, not 100 TB. With
-        ``merge_skip_unchanged`` the touched partitions whose merged
-        content digests equal to what is on disk skip their overwrite
-        commit entirely (``_changed_partition_values``) — idempotent
-        re-syncs become read-bound instead of commit-bound.
+        An unpartitioned table is merged latest-wins (operators/upsert.py)
+        and swapped in whole. A partitioned table is merged partition by
+        partition (``_upsert_partitioned``); with ``merge_skip_unchanged``
+        the touched partitions whose merged content equals what is on disk
+        skip their overwrite commit (``_changed_partition_values``).
         """
         self.ensure_table(table)
         key = MERGE_KEYS[table]
         src = self._conform(table, source)
-        from imperio_patitas_etl_spark.operators.upsert import merge_into_delta
-
-        if merge_into_delta(self.spark, self.path(table), src, key, UPDATE_COLS[table]):
-            return
         part = self._part_col(table)
         if not part:
             merged = upsert_latest_wins(self.read(table), src, key, UPDATE_COLS[table])
@@ -521,13 +465,6 @@ class ParquetWarehouse:
         a = digests(staged)
         b = digests(target.select(*cols))
         return [p for p in set(a) | set(b) if a.get(p) != b.get(p)]
-
-    # -- K3: delete+insert ------------------------------------------------
-    def delete_and_insert(self, table: str, source: DataFrame) -> None:
-        """The reference's MERGE fallback (etl_service.py:296-325)."""
-        self.ensure_table(table)
-        src = self._conform(table, source)
-        self._swap_in(table, delete_insert(self.read(table), src, MERGE_KEYS[table]))
 
     # -- K5: full-refresh export (Sheets analog) --------------------------
     def export_stringified(self, table: str) -> list[list[str]]:

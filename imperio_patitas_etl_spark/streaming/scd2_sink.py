@@ -1,7 +1,8 @@
 """Streaming SCD2 maintenance: a ``foreachBatch`` sink that applies each
 micro-batch of order changes to a parquet-backed Type-2 history with the
 SAME ``scd2_apply`` the oracle-certified ``scd2_incremental`` query uses,
-committed through the warehouse's write-temp + atomic-rename swap.
+committed through the warehouse's write-temp + atomic-rename swap
+(``sinks.warehouse.swap_dir``).
 
 End-to-end contract (pinned in tests/test_streaming_scd2.py): streaming
 the change feed in file order produces a history byte-identical to the
@@ -14,12 +15,12 @@ feed is date-partitioned by construction.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from imperio_patitas_etl_spark.operators.scd2 import SCD2_COLS, scd2_apply
+from imperio_patitas_etl_spark.sinks.warehouse import swap_dir
 
 
 def _read_history(spark: SparkSession, path: str) -> DataFrame | None:
@@ -31,16 +32,7 @@ def _read_history(spark: SparkSession, path: str) -> DataFrame | None:
 def _commit(history: DataFrame, path: str) -> None:
     tmp = path.rstrip("/") + "__scd2_tmp"
     history.write.mode("overwrite").parquet(tmp)
-    prev = path.rstrip("/") + "__scd2_prev"
-    if os.path.isdir(path):
-        os.rename(path, prev)
-    try:
-        os.rename(tmp, path)
-    except BaseException:
-        if os.path.isdir(prev):
-            os.rename(prev, path)
-        raise
-    shutil.rmtree(prev, ignore_errors=True)
+    swap_dir(tmp, path.rstrip("/"))
 
 
 def foreach_batch_scd2(

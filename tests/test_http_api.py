@@ -79,6 +79,13 @@ def test_sync_all_and_clean_reload(client):
 
 def test_sync_documents_start_date_filter(client):
     c, pipeline = client
+    # a malformed date is refused before any entity is synced
+    for bad in ("garbage", "2024-6-1", "2024-02-30", "20240601"):
+        r = c.post(f"/etl/sync/all?start_date={bad}")
+        assert r.status_code == 400, bad
+        assert "start_date" in r.get_json()["detail"]
+    assert pipeline.warehouse.read("cliente").count() == 0
+    assert pipeline.report().count() == 0
     # all fixture docs are at epoch ~1700000000 (2023-11); a 2024 cutoff
     # must load zero documents but still 200 (F6 empty-guard, not error)
     r = c.post("/etl/sync/documents?start_date=2024-06-01")
@@ -87,8 +94,13 @@ def test_sync_documents_start_date_filter(client):
 
 
 def test_incremental_days_validation(client):
-    c, _ = client
+    c, pipeline = client
     assert c.post("/scheduler/etl/incremental?days=oops").status_code == 400
+    # a negative window would put the cutoff in the future
+    r = c.post("/scheduler/etl/incremental?days=-3")
+    assert r.status_code == 400
+    assert r.get_json()["detail"] == "days must be >= 0"
+    assert pipeline.report().count() == 0
     # fixture docs are far older than any trailing window → loads nothing,
     # still a success response with the window length echoed
     r = c.post("/scheduler/etl/incremental?days=3")

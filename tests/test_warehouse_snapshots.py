@@ -1,14 +1,14 @@
-"""Snapshot retention (time travel), vacuum, and small-file compaction
-on the parquet warehouse.
+"""Commit and compaction on the parquet warehouse.
 
-The swap already guaranteed all-or-nothing visibility; keep_history=True
-upgrades it to an immutable version chain (_history/<table>/v<N>) that
-read_version() can query — the Iceberg/Delta snapshot idea expressed at
-directory level. Compaction rewrites through the same swap, so it both
-benefits from and contributes to the chain.
+Every whole-table rewrite commits through ``swap_dir``: the live table
+moves aside, the new copy is renamed in, and a failure at any point
+leaves the table exactly as it was. Compaction rewrites through the same
+swap.
 """
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
@@ -31,47 +31,61 @@ def _clients(spark, rows):
 
 @pytest.fixture()
 def wh(spark, tmp_path):
-    return ParquetWarehouse(spark, str(tmp_path / "wh"), keep_history=True)
+    return ParquetWarehouse(spark, str(tmp_path / "wh"))
 
 
-def test_time_travel_reads_each_version(wh, spark):
+def _rows(wh):
+    return sorted(map(tuple, wh.read("cliente").collect()))
+
+
+def test_failed_rename_keeps_old_table(wh, spark, monkeypatch):
+    """The temp→live rename raising mid-commit rolls the live table back."""
     wh.overwrite("cliente", _clients(spark, [(1, "ana", "1-9", "a@x.cl")]))
-    wh.upsert("cliente", _clients(spark, [(1, "ana maria", "1-9", "a@x.cl")]))
+    before = _rows(wh)
+    real_rename = os.rename
+    tmp = wh.path("cliente") + "_tmp"
+
+    def rename(src, dst):
+        if src == tmp:
+            raise OSError("injected rename failure")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename)
+    with pytest.raises(OSError, match="injected"):
+        wh.upsert("cliente", _clients(spark, [(2, "ben", "2-7", "b@x.cl")]))
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert _rows(wh) == before
+    # the leftover temp copy does not block the next commit
     wh.upsert("cliente", _clients(spark, [(2, "ben", "2-7", "b@x.cl")]))
-
-    # three swaps happened (ensure_table's initial empty write is not
-    # retained — only REPLACED directories enter history)
-    versions = wh.snapshots("cliente")
-    assert len(versions) >= 2
-    # v-latest-1: after the first upsert — ana renamed, ben absent
-    prev = wh.read_version("cliente", versions[-1])
-    assert prev.count() == 1
-    assert prev.filter(F.col("nombre") == "ana maria").count() == 1
-    # current: both rows
-    assert wh.read("cliente").count() == 2
-    # a version before the rename still shows the original name
-    first = wh.read_version("cliente", versions[0])
-    assert first.filter(F.col("nombre") == "ana").count() == first.count()
+    assert [r[0] for r in _rows(wh)] == [1, 2]
 
 
-def test_vacuum_retention(wh, spark):
-    wh.overwrite("cliente", _clients(spark, [(1, "a", "1-9", "a@x.cl")]))
-    for i in range(3):
-        wh.upsert("cliente", _clients(spark, [(10 + i, f"n{i}", "3-3", "c@x.cl")]))
-    versions = wh.snapshots("cliente")
-    assert len(versions) >= 3
-    dropped = wh.vacuum("cliente", keep_last=1)
-    assert dropped == versions[:-1]
-    assert wh.snapshots("cliente") == versions[-1:]
-    with pytest.raises(FileNotFoundError):
-        wh.read_version("cliente", dropped[0])
+def test_failed_source_leaves_table_unchanged(wh, spark):
+    """A source that fails while the merged copy is written never reaches
+    the swap: the table reads exactly its old rows."""
+    wh.overwrite(
+        "cliente",
+        _clients(spark, [(1, "old", "1-9", "a@x.cl"), (2, "keep", "2-7", "b@x.cl")]),
+    )
+    before = _rows(wh)
+    bad = _clients(spark, [(3, None, "3-3", "c@x.cl")]).withColumn(
+        "nombre", F.expr("raise_error('boom')")
+    )
+    with pytest.raises(Exception, match="boom"):
+        wh.upsert("cliente", bad)
+    assert _rows(wh) == before
 
 
-def test_history_off_keeps_swap_destructive(spark, tmp_path):
-    wh = ParquetWarehouse(spark, str(tmp_path / "wh2"))
-    wh.overwrite("cliente", _clients(spark, [(1, "a", "1-9", "a@x.cl")]))
-    wh.upsert("cliente", _clients(spark, [(2, "b", "2-7", "b@x.cl")]))
-    assert wh.snapshots("cliente") == []
+def test_stale_prev_dir_does_not_block_upsert(wh, spark):
+    """A ``<table>_prev`` left by a killed run is cleared by the next swap."""
+    wh.overwrite("cliente", _clients(spark, [(1, "ana", "1-9", "a@x.cl")]))
+    stale = wh.path("cliente") + "_prev"
+    os.makedirs(stale)
+    with open(os.path.join(stale, "part-0.parquet"), "w") as f:
+        f.write("left by a killed run")
+    wh.upsert("cliente", _clients(spark, [(2, "ben", "2-7", "b@x.cl")]))
+    assert [r[0] for r in _rows(wh)] == [1, 2]
+    assert not os.path.exists(stale)
 
 
 def test_compact_reduces_files_preserves_rows(wh, spark):
@@ -83,14 +97,10 @@ def test_compact_reduces_files_preserves_rows(wh, spark):
     assert files_before >= 5
     assert files_after == 1
     assert wh.read("cliente").count() == before_rows
-    # compaction itself is a swap: the pre-compaction state is a snapshot
-    assert len(wh.snapshots("cliente")) >= 1
 
 
 def test_compact_partitioned_keeps_layout(spark, tmp_path):
-    wh = ParquetWarehouse(
-        spark, str(tmp_path / "wh3"), partitioned=True, keep_history=False
-    )
+    wh = ParquetWarehouse(spark, str(tmp_path / "wh3"), partitioned=True)
     df = spark.createDataFrame(
         [
             (i, 10, None, i, f"2024-01-0{1 + i % 2} 10:00:00", 100.0, 19.0, 119.0,
@@ -110,6 +120,5 @@ def test_compact_partitioned_keeps_layout(spark, tmp_path):
     assert files_after <= 2  # one file per date partition
     assert files_after < files_before
     assert wh.read("documento_venta").count() == rows
-    import os
     dirs = {d for d in os.listdir(wh.path("documento_venta")) if d.startswith("fecha_dia=")}
     assert dirs == {"fecha_dia=2024-01-01", "fecha_dia=2024-01-02"}
