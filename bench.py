@@ -165,6 +165,8 @@ def main(argv: list[str] | None = None) -> None:
     #                 meaning as every prior round); the full-registry sum
     #                 is reported separately as `all_total`.
     #   --headline    HEADLINE keys only (the pre-r7 default).
+    #   --keys a,b    the named registry keys only, in registry order;
+    #                 with --repeats N this is the per-key min-of-N probe.
     #   --sf1 [dir]   standing scale gate: build the replicated sf1 tree
     #                 (tools/make_sf1.py) if absent, run HEADLINE there;
     #                 add --all to sweep the FULL registry at sf1 (the
@@ -202,6 +204,11 @@ def main(argv: list[str] | None = None) -> None:
         action="store_true",
         help="HEADLINE keys only",
     )
+    mode.add_argument(
+        "--keys",
+        help="comma-separated registry keys to run (registry order); "
+        "results go to BENCH_out_keys.json",
+    )
     ap.add_argument(
         "--repeats",
         type=int,
@@ -218,7 +225,18 @@ def main(argv: list[str] | None = None) -> None:
     if opts.sf1_dir is not None and not opts.sf1:
         ap.error("a directory argument requires --sf1")
     sf1_mode = opts.sf1
-    run_all = not opts.headline and (not sf1_mode or opts.all)
+    run_all = (
+        not opts.headline and opts.keys is None and (not sf1_mode or opts.all)
+    )
+    if opts.keys is not None:
+        from imperio_patitas_etl_spark.queries import all_queries
+
+        want = set(opts.keys.split(",")) - {""}
+        if not want:
+            ap.error("--keys given but empty: no keys to run")
+        unknown = sorted(want - set(all_queries()))
+        if unknown:
+            ap.error(f"unknown registry keys: {' '.join(unknown)}")
 
     # Lossless driver capture (VERDICT r8 item 4): BENCH_r07/r08.json both
     # lost the result header to stdout-tail truncation because JVM startup
@@ -257,7 +275,10 @@ def main(argv: list[str] | None = None) -> None:
     spark.sparkContext.setLogLevel("ERROR")
     qs = all_queries()
 
-    keys = [k for k in HEADLINE if k in qs]
+    if opts.keys is not None:
+        keys = [k for k in qs if k in want]
+    else:
+        keys = [k for k in HEADLINE if k in qs]
     if run_all:
         keys += [k for k in qs if k not in keys]
 
@@ -378,7 +399,9 @@ def main(argv: list[str] | None = None) -> None:
     # Durable record (VERDICT r7 item 3; mode-suffixed per ADVICE r8):
     # BENCH_out.json is the driver-comparable default sweep; other modes
     # write their own file so a --sf1 run can't clobber the sf0.1 record.
-    if sf1_mode:
+    if opts.keys is not None:
+        mode = "sf1_keys" if sf1_mode else "keys"
+    elif sf1_mode:
         mode = "sf1_all" if run_all else "sf1"
     else:
         mode = "all" if run_all else "headline"

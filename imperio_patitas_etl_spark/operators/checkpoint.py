@@ -42,50 +42,6 @@ def release_rdds(spark: SparkSession, ids: set[int]) -> None:
             jmap.get(k).unpersist(False)
 
 
-class OwnedFamily(dict):
-    """A family of result DataFrames keyed by registry name, plus
-    ownership of every checkpoint block their shared build left
-    persisted.
-
-    The materialized-table pipeline APIs (``ngram_family_from_shingles``,
-    ``copurchase_family_from_edges``) build several results from shared
-    eagerly-checkpointed state; the blocks must outlive the build (the
-    returned plans read them) but a long-lived session needs a way to
-    reclaim them once every consumer has run. Construction contract: the
-    builder snapshots ``persistent_rdd_ids`` immediately before the
-    build, runs ONLY eager checkpointing (no lazy ``.persist()`` whose
-    RDD could first register later — the CheckpointGenerations contract),
-    and passes the post-build diff here, so ownership is complete by
-    construction — UNDER the single-driver assumption (ADVICE r13): the
-    snapshot diff attributes EVERY RDD persisted on the shared
-    SparkSession during the build window to the family, so no other
-    thread may persist/checkpoint on the same session while a family
-    builds, or its blocks would be claimed and freed by this family's
-    ``release()``. Both in-repo builders run on the driver thread with
-    nothing concurrent; a caller embedding a builder in a multi-threaded
-    driver must serialize family builds against any other persisting
-    work.
-
-    ``release()`` is idempotent and non-blocking; call it only after
-    every action that reads the family's DataFrames has run — the plans
-    reference the checkpointed RDDs and would recompute nothing (the
-    blocks are gone, the lineage was truncated), failing instead. A
-    caller that never releases gets session-lifetime behavior — bounded
-    per invocation, but additive across invocations (the accumulation
-    ADVICE r11/r12 flagged)."""
-
-    def __init__(
-        self, results: dict, spark: SparkSession, checkpoint_ids: set[int]
-    ) -> None:
-        super().__init__(results)
-        self._spark = spark
-        self.checkpoint_ids = frozenset(checkpoint_ids)
-
-    def release(self) -> None:
-        """Free every checkpoint block the family build persisted."""
-        release_rdds(self._spark, set(self.checkpoint_ids))
-
-
 class CheckpointGenerations:
     """Tracks localCheckpoint block ids per loop generation and frees a
     generation once it is superseded.

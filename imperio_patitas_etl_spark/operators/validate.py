@@ -77,12 +77,6 @@ class EntitySpec:
         rejected = df.filter(~self.accept_predicate()).withColumn("reject_reason", reason)
         return ValidationResult(accepted=projected, rejected=rejected)
 
-    def project_only(self, df: DataFrame) -> DataFrame:
-        """filter + project without the warning columns (the common path)."""
-        return df.filter(self.accept_predicate()).select(
-            *[expr.alias(name) for name, expr in self.projection.items()]
-        )
-
 
 @dataclass
 class ValidationResult:

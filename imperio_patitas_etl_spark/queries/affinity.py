@@ -29,15 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from imperio_patitas_etl_spark.operators.checkpoint import (
-    OwnedFamily,
-    persistent_rdd_ids,
-)
 from imperio_patitas_etl_spark.operators.graph import pagerank_fixed
-from imperio_patitas_etl_spark.operators.provenance import (
-    require_source,
-    tag_source,
-)
 from imperio_patitas_etl_spark.operators.reconcile import classify_snapshot_diff
 from imperio_patitas_etl_spark.sources.parquet import load_table
 
@@ -96,8 +88,7 @@ def _cooccurrence_from_pairs(
     copurchase: DataFrame, b: DataFrame
 ) -> DataFrame:
     """`item_cooccurrence` downstream of the support-counted pair
-    relation — shared by the self-contained registry key and the
-    materialized-edge pipeline path (``copurchase_family_from_edges``)."""
+    relation."""
     item_cnt = b.groupBy("l_partkey").agg(F.count("*").alias("cnt"))
     n_orders = b.select("l_orderkey").distinct().agg(
         F.count("*").alias("n_orders")
@@ -204,8 +195,7 @@ def q_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pagerank_from_pairs(copurchase: DataFrame) -> DataFrame:
-    """`pagerank_copurchase` downstream of the pair relation (shared
-    with the materialized-edge pipeline path)."""
+    """`pagerank_copurchase` downstream of the pair relation."""
     e = copurchase.filter(F.col("pair_cnt") >= MIN_PAIR_SUPPORT)
     return (
         pagerank_fixed(e, iterations=PR_ITERATIONS, unit=PR_UNIT)
@@ -500,8 +490,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _triangle_from_pairs(copurchase: DataFrame) -> DataFrame:
-    """`triangle_count` downstream of the pair relation (shared with
-    the materialized-edge pipeline path)."""
+    """`triangle_count` downstream of the pair relation."""
     edges = (
         copurchase
         .filter(F.col("pair_cnt") >= MIN_PAIR_SUPPORT)
@@ -650,8 +639,7 @@ def q_node_jaccard_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _jaccard_from_pairs(copurchase: DataFrame) -> DataFrame:
-    """`node_jaccard_linkpred` downstream of the pair relation (shared
-    with the materialized-edge pipeline path)."""
+    """`node_jaccard_linkpred` downstream of the pair relation."""
     # The support-filtered edge list feeds the degree table, the adjacency
     # table AND the existing-edge anti-join — un-materialized, the static
     # plan expanded the pair build into each reference (42 Exchange / 14
@@ -830,8 +818,7 @@ def q_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _khop_from_pairs(spark: SparkSession, copurchase: DataFrame) -> DataFrame:
-    """`khop_reach` downstream of the pair relation (shared with the
-    materialized-edge pipeline path)."""
+    """`khop_reach` downstream of the pair relation."""
     from imperio_patitas_etl_spark.operators.checkpoint import (
         CheckpointGenerations,
         persistent_rdd_ids,
@@ -1055,107 +1042,3 @@ ORACLE = {
     "khop_reach": ORACLE_KHOP,
     "ndcg_eval": ORACLE_NDCG,
 }
-
-
-# --------------------------------------------------------------------------
-# materialized edge table — the pipeline shape for the co-purchase family
-# --------------------------------------------------------------------------
-
-#: field-metadata key recording which sf_dir an edge table was built from
-_EDGE_SOURCE_KEY = "copurchase_edge_source_sf_dir"
-
-
-def materialize_edge_table(spark: SparkSession, sf_dir: str, path: str) -> None:
-    """Write the support-counted co-purchase pair relation
-    (part_a, part_b, pair_cnt) to ``path`` — the storage-layout step for
-    the five graph-family consumers, mirroring the ANN tier's
-    ``materialize_cell_layout`` (queries/vector.py).
-
-    Every registry key stays self-contained (rebuilds the pairs from
-    lineitem — the benchmark shape, each key its own DuckDB oracle); a
-    real pipeline pays the basket explode + pair groupBy ONCE at write
-    time and the whole family reads the result as a table; the family
-    total measured 10.7 → 4.9 s at sf0.1 on this path (BASELINE.md §r9).
-    At 100 TB this is the difference between five full lineitem scans
-    and one: the edge table is orders of magnitude smaller than its
-    source (bounded by Σ |basket|² distinct pairs), so downstream reads
-    are cheap scans of an already-aggregated relation.
-
-    The table carries its source ``sf_dir`` as field metadata on
-    ``part_a`` (operators/provenance.py, one contract across all three
-    materialized product tables) so ``copurchase_family_from_edges``
-    can refuse a table materialized from a DIFFERENT source —
-    ``item_cooccurrence`` mixes the edge relation with basket statistics
-    rebuilt from ``sf_dir``, and a silent source mismatch would corrupt
-    lift_bp (ADVICE r10)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    tag_source(
-        _copurchase_pairs(li), "part_a", _EDGE_SOURCE_KEY, sf_dir
-    ).write.mode("overwrite").parquet(path)
-
-
-def copurchase_family_from_edges(
-    spark: SparkSession,
-    sf_dir: str,
-    edge_path: str,
-) -> "CopurchaseFamily":
-    """The five co-purchase family results computed FROM a materialized
-    edge table (``materialize_edge_table``) instead of from lineitem —
-    identical downstream plans (asserted row-equal to the registry keys
-    in tests/test_affinity_edge_table.py); only the pair-build subtree
-    is replaced by a parquet scan. ``item_cooccurrence`` still reads
-    lineitem for its basket-count statistics (node-cardinality
-    aggregates, cheap next to the pair build) — so the edge table MUST
-    have been materialized from the SAME ``sf_dir``, or lift_bp would
-    silently mix inconsistent inputs. The provenance tag
-    ``materialize_edge_table`` embeds in the table's field metadata is
-    validated here; a missing or mismatched tag raises.
-
-    The returned mapping is a :class:`CopurchaseFamily` — a plain dict
-    plus a ``release()`` method (VERDICT r12 item 4: uniform lifetime
-    contracts across the family product APIs). Two builders checkpoint
-    eagerly at construction time — khop's BFS retains its final visited
-    generation and pagerank its one-time symmetric-edge checkpoint;
-    without the handle those blocks had session lifetime, additive
-    across invocations — the same shape ``NgramFamily`` fixed for the
-    ngram pipeline."""
-    pairs = spark.read.parquet(edge_path)
-    require_source(
-        pairs,
-        "part_a",
-        _EDGE_SOURCE_KEY,
-        sf_dir,
-        table_desc="edge table",
-        path=edge_path,
-        consequence=(
-            "item_cooccurrence would mix basket statistics from one "
-            "source with edges from another"
-        ),
-        rebuild="materialize_edge_table(spark, sf_dir, path)",
-    )
-    li = load_table(spark, sf_dir, "lineitem")
-    # Snapshot-diff ownership (the OwnedFamily construction contract):
-    # two builders checkpoint eagerly at construction time — khop's BFS
-    # loop (CheckpointGenerations free superseded rounds but retain the
-    # final visited generation) and pagerank_fixed's one-time symmetric
-    # edge checkpoint; the other three are pure lazy plans. All
-    # checkpointing is eager, no lazy .persist() anywhere in the build,
-    # so the post-build diff is complete by construction.
-    _before = persistent_rdd_ids(spark)
-    family = {
-        "item_cooccurrence": _cooccurrence_from_pairs(pairs, _baskets(li)),
-        "pagerank_copurchase": _pagerank_from_pairs(pairs),
-        "triangle_count": _triangle_from_pairs(pairs),
-        "node_jaccard_linkpred": _jaccard_from_pairs(pairs),
-        "khop_reach": _khop_from_pairs(spark, pairs),
-    }
-    return CopurchaseFamily(family, spark, persistent_rdd_ids(spark) - _before)
-
-
-class CopurchaseFamily(OwnedFamily):
-    """The five co-purchase family DataFrames keyed by registry name,
-    plus ownership of every checkpoint block the build retains: the
-    khop BFS's final visited generation and pagerank's one-time
-    symmetric-edge checkpoint. Lifetime contract:
-    :class:`operators.checkpoint.OwnedFamily` — the same owned-release
-    shape as ``NgramFamily`` (VERDICT r12 item 4)."""

@@ -29,13 +29,8 @@ from pyspark.sql.window import Window
 
 from imperio_patitas_etl_spark.operators.checkpoint import (
     CheckpointGenerations,
-    OwnedFamily,
     persistent_rdd_ids,
     release_rdds,
-)
-from imperio_patitas_etl_spark.operators.provenance import (
-    require_source,
-    tag_source,
 )
 from imperio_patitas_etl_spark.sources.parquet import load_table
 
@@ -319,9 +314,8 @@ def _grouped_build(
 ) -> tuple[DataFrame, set[int], DataFrame, set[int]]:
     """Group-collapse + checkpoint stage over a shingled relation ``s``
     (doc_id, lang, shingles) — the ONE build path of the ngram-Jaccard
-    family. The registry keys pass ``_shingled(spark, sf_dir)``;
-    ``ngram_family_from_shingles`` passes the materialized shingle
-    table. Returns ``(groups, groups_ids, member_map, member_ids)``:
+    family. The registry keys pass ``_shingled(spark, sf_dir)``.
+    Returns ``(groups, groups_ids, member_map, member_ids)``:
 
     - ``groups`` — ONE wide (doc_id, lang, shingles) row per distinct
       (lang, shingle-set) group (the representative rows), checkpointed;
@@ -344,9 +338,9 @@ def _grouped_build(
     to the rep ids — one extra columnar pass in place of a full-corpus
     wide checkpoint (guide §8 — re-read from storage rather than
     materialize payloads). The rep rows are deduplicated on doc_id: the
-    member map is row-unique per doc_id, but a shingle table with a
-    repeated doc_id would otherwise emit its rep row once per copy and
-    every pair of that rep twice."""
+    member map is row-unique per doc_id, but a documents table with a
+    repeated doc_id (the parquet is outside input) would otherwise emit
+    its rep row once per copy and every pair of that rep twice."""
     _before = persistent_rdd_ids(spark)
     narrow_ck = _narrow_of(s).localCheckpoint()
     _n_ids = persistent_rdd_ids(spark) - _before
@@ -472,9 +466,9 @@ def _shingle_set_fp(col: str = "shingles") -> Column:
     sets is ~10^24/2^257 — negligible. ``shingles`` is never NULL by
     construction (``_shingles_of`` CASEs to ``array()``), so no
     array-level null guard; a NULL ELEMENT, impossible from
-    ``_shingles_of`` but unenforced on the externally materialized
-    shingle-table path, encodes as the explicit sentinel ``~`` (ADVICE
-    r17): the inner ``concat`` is NULL-propagating, so injectivity no
+    ``_shingles_of`` but unenforced for a shingle relation handed
+    straight to ``_grouped_build``, encodes as the explicit sentinel
+    ``~`` (ADVICE r17): the inner ``concat`` is NULL-propagating, so injectivity no
     longer rests on a no-NULL input contract — ``~`` is not a decimal
     digit, so the stream stays uniquely decodable (read ``~`` or read
     digits to ``:`` then that many chars), and ``array_sort`` places
@@ -542,7 +536,7 @@ def _member_map(narrow: DataFrame) -> DataFrame:
     gids = narrow.groupBy("lang", "_fp").agg(F.min("doc_id").alias("gid"))
     # aggregated to EXACTLY one row per doc_id (ADVICE r17): the raw
     # narrow⋈gids relation has one row per INPUT row, so a duplicated
-    # doc_id in an externally materialized shingle table would multiply
+    # doc_id in the documents parquet (outside input) would multiply
     # rows through downstream joins (2 input rows → 4 output rows) and
     # silently inflate every pair count. The min/max-agg makes the map
     # provably row-unique instead of resting on an unenforced uniqueness
@@ -559,11 +553,7 @@ def _member_map(narrow: DataFrame) -> DataFrame:
     )
 
 
-def _pairs_from_grouped(
-    groups: DataFrame,
-    member_map: DataFrame,
-    rep_pairs: DataFrame | None = None,
-) -> DataFrame:
+def _pairs_from_grouped(groups: DataFrame, member_map: DataFrame) -> DataFrame:
     """Near-dup pairs from the grouped build (``_grouped_build``):
     AllPairs index over the representative rows (``groups``,
     ``_pairs_from_shingled``), then relational expansion — cross-group
@@ -572,11 +562,8 @@ def _pairs_from_grouped(
     clique at jaccard 10000 (see ``_ngram_pair_build``'s collapse note
     for the proof obligations: empty sets and NULL langs are excluded to
     match the JACCARD_T3 guard and the lang equi-join — the member map's
-    group-uniform ``qual`` flag). Callers that also build the
-    connectivity edge set pass a shared (checkpointed) ``rep_pairs`` so
-    the index pass runs once."""
-    if rep_pairs is None:
-        rep_pairs = _pairs_from_shingled(groups)
+    group-uniform ``qual`` flag)."""
+    rep_pairs = _pairs_from_shingled(groups)
     # cross-group expansion: members inherit their representative's pairs
     ma = member_map.select(
         F.col("gid").alias("doc_a"), F.col("doc_id").alias("ma")
@@ -614,12 +601,8 @@ def _pairs_from_shingled(s: DataFrame) -> DataFrame:
     materialized shingled relation (doc_id, lang, shingles) — the
     AllPairs prefix index + PPJoin positional bound + exact
     array_intersect verify, exactly as ``_ngram_pair_build`` documents.
-    Split out in r11 so ``ngram_family_from_shingles`` can read the
-    relation from a written shingle TABLE (``materialize_shingle_table``)
-    instead of an in-session checkpoint; the registry keys delegate here
-    through ``_ngram_pair_build``, so both paths share one plan by
-    construction (row-equality additionally pinned in
-    tests/test_shingle_table.py)."""
+    The registry keys reach it through ``_pairs_from_grouped`` over the
+    representative rows."""
     docs = s.select("doc_id", "shingles")
     ex = s.select(
         "doc_id",
@@ -910,46 +893,6 @@ def _sig_bands(sigs: DataFrame) -> DataFrame:
                 ]
             )
         ).alias("band_idx", "band_sig"),
-    )
-
-
-def materialize_band_index(docs: DataFrame, table_name: str) -> None:
-    """Materialize the corpus (band_idx, band_sig) → doc_id LSH index as
-    a bucketed table — the write-once step the incremental docstring
-    names. Signing (shingle → minhash) happens HERE, once; every later
-    batch probe is an equi-join against this table with zero corpus-side
-    recompute, and the bucket layout pre-co-locates the band keys."""
-    (
-        _sig_bands(_minhash_sigs(docs))
-        .write.mode("overwrite")
-        .bucketBy(8, "band_idx", "band_sig")
-        .saveAsTable(table_name)
-    )
-
-
-def probe_band_index(
-    spark: SparkSession, new_docs: DataFrame, index_table: str
-) -> DataFrame:
-    """Batch probe of a materialized band index: sign ONLY the batch,
-    broadcast its bands onto the index scan. Returns distinct
-    (doc_new, doc_corpus) candidates — identical to what the inline
-    incremental path generates, minus the corpus re-signing
-    (tests/test_dedup_layout.py pins both equality and the index side
-    staying Exchange-free)."""
-    nb = _sig_bands(_minhash_sigs(new_docs))
-    return (
-        spark.table(index_table)
-        .alias("c")
-        .join(
-            F.broadcast(nb.alias("n")),
-            (F.col("c.band_idx") == F.col("n.band_idx"))
-            & (F.col("c.band_sig") == F.col("n.band_sig")),
-        )
-        .select(
-            F.col("n.doc_id").alias("doc_new"),
-            F.col("c.doc_id").alias("doc_corpus"),
-        )
-        .dropDuplicates(["doc_new", "doc_corpus"])
     )
 
 
@@ -2052,19 +1995,7 @@ def q_corpus_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     DataFrame plan — Catalyst sees the whole pipeline, so common scans
     dedupe and the three stages' doc_id-keyed outputs join on aligned
     partitioning."""
-    return _keep_list_from_clusters(
-        spark, sf_dir, q_dup_clusters(spark, sf_dir)
-    )
-
-
-def _keep_list_from_clusters(
-    spark: SparkSession, sf_dir: str, clusters: DataFrame
-) -> DataFrame:
-    """``corpus_keep_list``'s quality + decontamination + mask stage,
-    parameterized over the near-dup cluster relation so
-    ``ngram_family_from_shingles`` can feed it the clusters computed
-    ONCE from a materialized shingle table (one CC run serving both the
-    dup_clusters output and the keep list)."""
+    clusters = q_dup_clusters(spark, sf_dir)
     quality = q_gopher_filter(spark, sf_dir).select(
         "doc_id", F.col("keep").alias("keep_q")
     )
@@ -2390,131 +2321,3 @@ ORACLE = {
     "pmi_collocations": ORACLE_PMI,
     "bigram_logprob": ORACLE_BIGRAM_LOGPROB,
 }
-
-
-# --------------------------------------------------------------------------
-# materialized shingle table — the pipeline shape for the ngram-dedup family
-# --------------------------------------------------------------------------
-
-#: field-metadata key recording which sf_dir a shingle table was built from
-_SHINGLE_SOURCE_KEY = "ngram_shingle_source_sf_dir"
-
-
-def materialize_shingle_table(
-    spark: SparkSession, sf_dir: str, path: str
-) -> None:
-    """Write the shingled relation (doc_id, lang, shingles) to ``path`` —
-    the storage-layout step for the ngram-Jaccard dedup family, mirroring
-    the co-purchase tier's ``materialize_edge_table`` (queries/affinity.py)
-    and the ANN tier's cell layout (queries/vector.py).
-
-    Every registry key stays self-contained (shingles + localCheckpoint
-    per call — the benchmark shape, each key its own DuckDB oracle); a
-    real pipeline pays the split + transform + array_distinct shingle
-    pipeline ONCE at write time and the whole family —
-    ``ngram_jaccard_dedup`` / ``dup_clusters`` / ``dup_clusters_star`` /
-    ``corpus_keep_list`` — reads the result as a table. This is exactly
-    the write-once AllPairs index table SCALE.md describes: at 100 TB the
-    shingle build is a full-corpus text scan, and materializing it turns
-    four scans (plus four in-session checkpoints) into one write and four
-    cheap column-pruned parquet reads.
-
-    The table carries its source ``sf_dir`` as field metadata on
-    ``doc_id`` (operators/provenance.py, one contract across all three
-    materialized product tables) so ``ngram_family_from_shingles`` can
-    refuse a table materialized from a DIFFERENT source — the cluster
-    and keep-list consumers mix the shingle relation with the document
-    universe, Gopher-quality, and decontamination relations rebuilt from
-    ``sf_dir``, and a silent source mismatch would corrupt every
-    downstream mask (same contract as the co-purchase edge table,
-    ADVICE r10)."""
-    tag_source(
-        _shingled(spark, sf_dir), "doc_id", _SHINGLE_SOURCE_KEY, sf_dir
-    ).write.mode("overwrite").parquet(path)
-
-
-def ngram_family_from_shingles(
-    spark: SparkSession,
-    sf_dir: str,
-    shingle_path: str,
-) -> dict[str, DataFrame]:
-    """The four ngram-dedup family results computed FROM a materialized
-    shingle table (``materialize_shingle_table``) instead of an
-    in-session shingle checkpoint — identical downstream plans (asserted
-    row-equal to the registry keys in tests/test_shingle_table.py); only
-    the shingle-build subtree is replaced by a parquet scan, and the
-    min-label connected-components run is shared between ``dup_clusters``
-    and ``corpus_keep_list`` (the registry keys, each self-contained,
-    run CC once each). The quality / decontamination / document-universe
-    relations are rebuilt from ``sf_dir``, so the shingle table MUST have
-    been materialized from the SAME source; the provenance tag
-    ``materialize_shingle_table`` embeds in the table's field metadata is
-    validated here (operators/provenance.py) — a missing or mismatched
-    tag raises.
-
-    The returned mapping is a :class:`NgramFamily` — a plain dict plus a
-    ``release()`` method freeing the shared pair-checkpoint blocks once
-    every consumer has run (ADVICE r11: without the handle, repeated
-    pipeline invocations in a long-lived session accumulated checkpoint
-    generations with no way to reclaim them)."""
-    from imperio_patitas_etl_spark.operators.graph import (
-        connected_components_star,
-    )
-
-    s = spark.read.parquet(shingle_path)
-    require_source(
-        s,
-        "doc_id",
-        _SHINGLE_SOURCE_KEY,
-        sf_dir,
-        table_desc="shingle table",
-        path=shingle_path,
-        consequence=(
-            "the cluster/keep-list consumers would mix shingles from one "
-            "source with document, quality, and decontamination relations "
-            "from another"
-        ),
-        rebuild="materialize_shingle_table(spark, sf_dir, path)",
-    )
-    # One AllPairs candidate+verify pass total: the rep-pair relation is
-    # checkpointed once and feeds both the full pair expansion and both
-    # CC variants. The family handle owns EVERY checkpoint block the
-    # build leaves persisted (member map, rep pairs, pair list, and the
-    # final label generation of each CC run); checkpointing is eager, so
-    # the post-build snapshot diff is complete by construction. The rep
-    # arrays (``groups``) are dead once the pair checkpoints land.
-    _before = persistent_rdd_ids(spark)
-    groups, groups_ids, member_map, _member_ids = _grouped_build(spark, s)
-    members = member_map.filter("qual").select("doc_id", "gid")
-    rep_pairs = _pairs_from_shingled(groups).localCheckpoint()
-    pairs = _pairs_from_grouped(groups, member_map, rep_pairs).localCheckpoint()
-    release_rdds(spark, groups_ids)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    # both CC variants run on the REP graph only (r18,
-    # _clusters_via_rep_cc): the loop shuffles near-dup rep pairs, and
-    # membership lands once per variant as an equi-join on gid. The
-    # member and rep-pair checkpoints stay family-owned — the returned
-    # label plans read them.
-    clusters = _labels_from_rep_cc(
-        docs, members, rep_pairs, connected_components
-    )
-    clusters_star = _labels_from_rep_cc(
-        docs, members, rep_pairs, connected_components_star
-    )
-    family = {
-        "ngram_jaccard_dedup": pairs,
-        "dup_clusters": clusters,
-        "dup_clusters_star": clusters_star,
-        "corpus_keep_list": _keep_list_from_clusters(spark, sf_dir, clusters),
-    }
-    return NgramFamily(family, spark, persistent_rdd_ids(spark) - _before)
-
-
-class NgramFamily(OwnedFamily):
-    """The four ngram-dedup family DataFrames keyed by registry name,
-    plus ownership of EVERY checkpoint block the family build left
-    persisted: the shared pair table and the final connected-components
-    label generations of both CC variants (r11's fix owned only the pair
-    blocks; r12 widened ownership to the full build diff). Lifetime
-    contract: :class:`operators.checkpoint.OwnedFamily` — the same
-    owned-release shape as ``copurchase_family_from_edges``."""

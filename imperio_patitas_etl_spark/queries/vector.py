@@ -25,10 +25,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from imperio_patitas_etl_spark.operators.provenance import (
-    require_source,
-    tag_source,
-)
 from imperio_patitas_etl_spark.sources.parquet import load_table
 
 #: integer scaling: float32 → exact integer units (×1e7 < 2^31 for |x|<200)
@@ -389,114 +385,6 @@ ORACLE_ANN_IVF = f"""
         FROM scored
     ) WHERE rank <= {TOP_K}
 """
-
-
-#: field-metadata key recording which sf_dir a cell layout was built from
-_LAYOUT_SOURCE_KEY = "ann_cell_layout_source_sf_dir"
-
-
-def materialize_cell_layout(spark: SparkSession, sf_dir: str, path: str) -> None:
-    """Write the IVF-assigned corpus partitioned by ``cell=`` — the
-    storage-layout step SCALE.md names: pay the assignment pass once at
-    write time, and every later probe becomes a PARTITION-PRUNED read of
-    its nprobe cells instead of a full-corpus scan. The layout carries
-    (vec_id, ivec, norm2) so probing needs nothing else.
-
-    The layout embeds its source ``sf_dir`` as field metadata on
-    ``vec_id`` (operators/provenance.py, one contract across all three
-    materialized product tables) so ``ann_ivf_from_layout`` can refuse a
-    layout built from a DIFFERENT corpus — the probe side re-derives the
-    coarse quantizer from ``sf_dir``, and probing one corpus's cells
-    with another corpus's centroids is silently wrong (same contract as
-    the co-purchase edge and shingle tables, ADVICE r10)."""
-    v = _with_ivec(spark, sf_dir)
-    cent_ids, cent_mat, cent_norms = _collect_centroids(v)
-    _assign = _assign_fn(cent_ids, cent_mat, cent_norms, min(N_PROBE, len(cent_ids)))
-    (
-        tag_source(
-            v.mapInPandas(_assign, ASSIGN_SCHEMA).select(
-                "vec_id", "ivec", "norm2", "cell"
-            ),
-            "vec_id",
-            _LAYOUT_SOURCE_KEY,
-            sf_dir,
-        )
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(path)
-    )
-
-
-def ann_ivf_from_layout(
-    spark: SparkSession,
-    sf_dir: str,
-    layout_path: str,
-) -> DataFrame:
-    """IVF probe against a cell-partitioned layout: the probe cells land
-    in the scan's PartitionFilters, so only nprobe×nq cell directories
-    are listed and read (q_ann_ivf re-assigns and filters in-plan; this
-    is its at-scale twin, asserted equal in tests). The probe-cell list
-    is nq·nprobe values — bounded by the query batch, never the corpus.
-
-    The quantizer is re-derived from ``sf_dir``, so the layout MUST have
-    been materialized from the SAME source; the provenance tag
-    ``materialize_cell_layout`` embeds in the layout's field metadata is
-    validated here — a missing or mismatched tag raises."""
-    layout = spark.read.parquet(layout_path)
-    require_source(
-        layout,
-        "vec_id",
-        _LAYOUT_SOURCE_KEY,
-        sf_dir,
-        table_desc="cell layout",
-        path=layout_path,
-        consequence=(
-            "probing one corpus's cells with another corpus's centroids "
-            "is silently wrong"
-        ),
-        rebuild="materialize_cell_layout(spark, sf_dir, path)",
-    )
-    v = _with_ivec(spark, sf_dir)
-    cent_ids, cent_mat, cent_norms = _collect_centroids(v)
-    _assign = _assign_fn(cent_ids, cent_mat, cent_norms, min(N_PROBE, len(cent_ids)))
-    probes = (
-        v.filter(F.expr(QUERY_PRED))
-        .mapInPandas(_assign, ASSIGN_SCHEMA)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("ivec").alias("q_vec"),
-            F.col("norm2").alias("q_norm2"),
-            F.explode("probes").alias("probe_cell"),
-        )
-    )
-    probe_cells = sorted(
-        {r["probe_cell"] for r in probes.select("probe_cell").distinct().collect()}
-    )
-    corpus = layout.filter(F.col("cell").isin(probe_cells))
-    scored = (
-        corpus.join(
-            F.broadcast(probes),
-            (F.col("cell") == F.col("probe_cell"))
-            & (F.col("vec_id") != F.col("q_id")),
-        )
-        .select(
-            "q_id",
-            "vec_id",
-            "cell",
-            (
-                _dot("ivec", "q_vec")
-                / F.sqrt(
-                    F.col("norm2").cast("double") * F.col("q_norm2").cast("double")
-                )
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= TOP_K)
-        .select("q_id", "vec_id", "cell", F.round("cosine", 6).alias("cosine"), "rank")
-    )
 
 
 def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:

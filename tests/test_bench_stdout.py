@@ -66,6 +66,17 @@ def test_cli_all_and_headline_are_mutually_exclusive():
     assert_no_spark_startup(res.stdout, res.stderr)
 
 
+def test_cli_unknown_or_empty_keys_is_an_error():
+    res = run_bench_cli("--keys", "tpch_q1,no_such_query_key")
+    assert res.returncode != 0
+    assert "unknown registry keys: no_such_query_key" in res.stderr
+    assert_no_spark_startup(res.stdout, res.stderr)
+    res = run_bench_cli("--keys", ",")
+    assert res.returncode != 0
+    assert "empty" in res.stderr
+    assert_no_spark_startup(res.stdout, res.stderr)
+
+
 def _summary(n_keys: int, key_len: int = 20) -> tuple[dict, list]:
     top = [(f"{'k' * key_len}_{i:03d}", 1.0 + i / 1000) for i in range(n_keys)]
     out = {

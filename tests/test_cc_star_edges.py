@@ -200,3 +200,67 @@ def test_registry_cluster_keys_share_components_with_pair_list(spark, sf_dir):
         tuple(r) for r in text.q_dup_clusters(spark, sf_dir).collect()
     )
     assert got == want and len(got) > 0
+
+
+def test_set_fingerprint_separator_adversarial_grouping(spark):
+    """The r17 collapse key (VERDICT r16 item 2): ``_member_map``
+    groups on a 32-byte netstring-encoded sha2-256 of the sorted shingle
+    array instead of the array itself. This pins grouping EQUIVALENCE
+    with exact array equality on the token shapes that break every naive
+    separator join — tokens containing the ':' delimiter, empty tokens,
+    and tokens starting with digits (which attack the length prefix
+    itself). Each adversarial pair below collides under at least one
+    naive encoding; none may collide under the netstring fingerprint."""
+    from pyspark.sql import functions as F
+
+    rows = [
+        # (doc_id, lang, shingles) — pairs crafted to collide naively:
+        # colon-join collision: "a:b"+"c" vs "a"+"b:c" both join to "a:b:c"
+        (1, "es", ["a:b", "c"]),
+        (2, "es", ["a", "b:c"]),
+        # empty-separator collision: "ab"+"" vs "a"+"b" both concat to "ab"
+        (3, "es", ["ab", ""]),
+        (4, "es", ["a", "b"]),
+        # length-prefix attack: token starting with "digits:" — netstring
+        # "3:1:a" vs "1:12::a" stay distinct
+        (5, "es", ["1:a"]),
+        (6, "es", [":a", "1"]),
+        # true duplicates: same set, different element order and dup doc
+        (7, "es", ["x y z", "y z w"]),
+        (8, "es", ["y z w", "x y z"]),
+        (9, "es", ["x y z", "y z w"]),
+        # same set, different lang → different group
+        (10, "en", ["x y z", "y z w"]),
+        # empty sets collapse together (excluded from cliques downstream)
+        (11, "es", []),
+        (12, "es", []),
+    ]
+    s = spark.createDataFrame(
+        rows, "doc_id long, lang string, shingles array<string>"
+    )
+    got = {
+        r["doc_id"]: r["gid"]
+        for r in text._member_map(text._narrow_of(s)).collect()
+    }
+    # exact-equality reference grouping, computed driver-side
+    ref_gid: dict[tuple, int] = {}
+    want = {}
+    for doc_id, lang, sh in rows:
+        key = (lang, tuple(sorted(sh)))
+        ref_gid.setdefault(key, doc_id)
+        want[doc_id] = ref_gid[key]
+    assert got == want
+    # and the fingerprint column itself is injective on these sets
+    fps = [
+        r[0]
+        for r in s.select(text._shingle_set_fp("shingles")).collect()
+    ]
+    by_set: dict[tuple, bytes] = {}
+    for (doc_id, lang, sh), fp in zip(rows, fps):
+        key = tuple(sorted(sh))
+        if key in by_set:
+            assert by_set[key] == fp, (doc_id, key)
+        else:
+            assert fp not in by_set.values(), (doc_id, key)
+            by_set[key] = fp
+    assert len(fps[0]) == 32  # fixed 32-byte (sha2-256) group key

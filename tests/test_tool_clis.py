@@ -127,3 +127,61 @@ def test_scaling_curve_zero_reps_is_an_argument_error():
     assert res.returncode != 0
     assert "reps must be >= 1" in res.stderr
     assert_no_spark(res)
+
+
+#: a trimmed ``explain('formatted')`` of a two-table join: one shuffle
+#: Exchange and one BroadcastExchange, each named twice (tree + header)
+CANNED_PLAN = """== Physical Plan ==
+AdaptiveSparkPlan (9)
++- HashAggregate (8)
+   +- Exchange (7)
+      +- HashAggregate (6)
+         +- Project (5)
+            +- BroadcastHashJoin Inner BuildRight (4)
+               :- Scan parquet  (1)
+               +- BroadcastExchange (3)
+                  +- Scan ExistingRDD (2)
+
+
+(1) Scan parquet 
+Output [2]: [o_orderkey#0L, o_custkey#1L]
+
+(2) Scan ExistingRDD [codegen id : 1]
+Output [1]: [c_custkey#2L]
+
+(3) BroadcastExchange
+Input [1]: [c_custkey#2L]
+
+(4) BroadcastHashJoin [codegen id : 2]
+Left keys [1]: [o_custkey#1L]
+
+(5) Project [codegen id : 2]
+Output [1]: [o_orderkey#0L]
+
+(6) HashAggregate [codegen id : 2]
+Keys [1]: [o_orderkey#0L]
+
+(7) Exchange
+Input [1]: [o_orderkey#0L]
+Arguments: hashpartitioning(o_orderkey#0L, 4), ENSURE_REQUIREMENTS
+
+(8) HashAggregate [codegen id : 3]
+Keys [1]: [o_orderkey#0L]
+
+(9) AdaptiveSparkPlan
+Arguments: isFinalPlan=false
+"""
+
+
+def test_plan_counts_reads_one_header_per_node():
+    from tools.dump_plans import plan_counts
+
+    c = plan_counts(CANNED_PLAN)
+    assert CANNED_PLAN.count("Exchange") == 4  # the raw count that misled
+    assert c["Exchange"] == 1
+    assert c["BroadcastExchange"] == 1
+    assert c["BroadcastHashJoin"] == 1
+    assert c["Scan parquet"] == 1
+    assert c["Scan ExistingRDD"] == 1
+    assert c["HashAggregate"] == 2
+    assert sum(c.values()) == 9

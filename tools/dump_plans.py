@@ -15,6 +15,7 @@ demand instead of committed:
 from __future__ import annotations
 
 import argparse
+import collections
 import contextlib
 import io
 import os
@@ -63,6 +64,17 @@ FLAGSHIP = (
 #: row-bounded — and the post-execution executedPlan inspected; the
 #: restoration is pinned in tests/test_plans.py).
 FINAL_PLAN_KEYS = ("ngram_jaccard_dedup",)
+
+
+def plan_counts(plan: str) -> collections.Counter:
+    """Operator counts of an ``explain('formatted')`` string, read from
+    the "(n) Name" detail headers — one per node. The tree part repeats
+    every node name, so a raw substring count double-counts, and a
+    substring such as ``Exchange`` also matches ``BroadcastExchange``.
+    Scan nodes keep their format (``Scan parquet``, ``Scan ExistingRDD``)."""
+    return collections.Counter(
+        re.findall(r"^\(\d+\) (Scan \S+|\S+)", plan, re.M)
+    )
 
 
 def main(argv: list[str] | None = None) -> None:
@@ -140,12 +152,12 @@ def main(argv: list[str] | None = None) -> None:
             df.explain("formatted")
         plan = buf.getvalue().rstrip()
         plans[key] = plan
-        # count operator-detail headers "(n) Exchange" — the tree repeats
-        # each node name, so a raw substring count double-counts
-        n_shuffles = len(re.findall(r"^\(\d+\) Exchange", plan, re.M))
-        n_bcast = len(re.findall(r"^\(\d+\) BroadcastHashJoin", plan, re.M))
+        counts = plan_counts(plan)
         mark = " (*)" if key in FINAL_PLAN_KEYS else ""
-        out.append(f"| {key}{mark} | {n_shuffles} | {n_bcast} |")
+        out.append(
+            f"| {key}{mark} | {counts['Exchange']} | "
+            f"{counts['BroadcastHashJoin']} |"
+        )
     out.append("")
     for key in FINAL_PLAN_KEYS:
         if key not in final_dfs:

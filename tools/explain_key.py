@@ -27,6 +27,7 @@ def main(argv: list[str] | None = None) -> None:
 
     from imperio_patitas_etl_spark.session import get_spark
     from imperio_patitas_etl_spark.queries import all_queries
+    from tools.dump_plans import plan_counts
 
     spark = get_spark("explain_key")
     spark.sparkContext.setLogLevel("ERROR")
@@ -45,13 +46,18 @@ def main(argv: list[str] | None = None) -> None:
         path = os.path.join(out_dir, f"{key}_{opts.tag}.txt")
         with open(path, "w") as f:
             f.write(buf.getvalue())
-        txt = buf.getvalue()
+        c = plan_counts(buf.getvalue())
+        python = sum(
+            n for name, n in c.items()
+            if name.endswith("EvalPython") or name in ("MapInPandas", "MapInArrow")
+        )
         print(
             f"{key}: wrote {path}  "
-            f"Exchange={txt.count('Exchange')} "
-            f"ScanParquet={txt.count('Scan parquet')} "
-            f"ExistingRDD={txt.count('Scan ExistingRDD')} "
-            f"Python={txt.count('EvalPython') + txt.count('MapInPandas') + txt.count('MapInArrow')}",
+            f"Exchange={c['Exchange']} "
+            f"BroadcastExchange={c['BroadcastExchange']} "
+            f"ScanParquet={c['Scan parquet']} "
+            f"ExistingRDD={c['Scan ExistingRDD']} "
+            f"Python={python}",
             flush=True,
         )
 

@@ -91,15 +91,11 @@ def main() -> None:
         if not os.path.isdir(d):
             sys.exit(f"missing scale point {d} — build it with tools/make_sf1.py")
 
-    from pyspark.sql import SparkSession
+    from imperio_patitas_etl_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "48g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    # the session bench.py measures with: cores, heap and shuffle
+    # partitions sized from the machine, UTC, AQE
+    spark = get_spark("scaling_curve")
     spark.sparkContext.setLogLevel("ERROR")
     from imperio_patitas_etl_spark.operators.checkpoint import (
         persistent_rdd_ids,
