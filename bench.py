@@ -21,6 +21,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import statistics
 import sys
 import time
 
@@ -370,8 +371,7 @@ def main(argv: list[str] | None = None) -> None:
     if run_all:
         out["all_total"] = round(sum(timings.values()), 3)
     if opts.repeats > 1:
-        q_min = {k: min(v) for k, v in rep_ts.items()}
-        q_med = {k: sorted(v)[len(v) // 2] for k, v in rep_ts.items()}
+        q_min, q_med = repeat_stats(rep_ts)
         out["repeats"] = opts.repeats
         out["queries_min"] = q_min
         out["queries_median"] = q_med
@@ -415,6 +415,14 @@ def main(argv: list[str] | None = None) -> None:
     # the ONE stdout line, written to the fd saved before the redirect
     os.write(real_stdout, line.encode())
     os.close(real_stdout)
+
+
+def repeat_stats(rep_ts: dict[str, list[float]]) -> tuple[dict, dict]:
+    """Per-key min and median over the ``--repeats`` timings; an even count
+    takes the mean of the two middle values."""
+    q_min = {k: min(v) for k, v in rep_ts.items()}
+    q_med = {k: statistics.median(v) for k, v in rep_ts.items()}
+    return q_min, q_med
 
 
 def fit_stdout_line(

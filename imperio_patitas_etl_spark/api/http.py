@@ -13,8 +13,8 @@ reference route                    here
 ================================  =====================================
 POST /etl/clean-and-reload         POST /etl/clean-and-reload
 POST /etl/sync/{entity}            POST /etl/sync/<entity>?start_date=
-POST /scheduler/etl/daily          POST /scheduler/etl/daily
-POST /scheduler/etl/incremental    POST /scheduler/etl/incremental?days=
+POST /scheduler/etl/daily          POST /scheduler/etl/daily?as_of=
+POST /scheduler/etl/incremental    POST /scheduler/etl/incremental?days=&as_of=
 GET  /scheduler/health             GET  /scheduler/health
 GET  /scheduler/test-sample        GET  /scheduler/test-sample?n=
 ================================  =====================================
@@ -27,7 +27,9 @@ Design notes:
   now with the actual HTTP layer on top).
 - Unknown entity → 404; pipeline errors → 500 with the error string —
   the reference's status mapping (endpoints.py:101-106). A malformed
-  ``start_date``, ``days`` or ``n`` → 400 before the pipeline runs.
+  ``start_date``, ``as_of``, ``days`` or ``n`` → 400 before the pipeline
+  runs. ``as_of`` (YYYY-MM-DD) is the day the scheduler windows count back
+  from; without it they use the session's current date.
 - The reference runs scheduler jobs on a thread-pool to keep the event
   loop free; under Flask/WSGI each request already has its own worker
   thread, so the delegation is direct. Long jobs at 100 TB belong on a
@@ -66,6 +68,13 @@ def create_app(pipeline: EtlPipeline) -> Flask:
         app.logger.error("pipeline error: %s", traceback.format_exc())
         return jsonify({"status": "error", "detail": str(exc)}), status
 
+    def _bad_date(name: str):
+        """400 response if query arg ``name`` is given but not YYYY-MM-DD."""
+        value = request.args.get(name)
+        if value is not None and not _is_iso_date(value):
+            return jsonify({"status": "error", "detail": f"{name} must be YYYY-MM-DD"}), 400
+        return None
+
     @app.post("/etl/clean-and-reload")
     def clean_and_reload():
         """Truncate all warehouse tables and reload from the sources
@@ -94,27 +103,25 @@ def create_app(pipeline: EtlPipeline) -> Flask:
                 jsonify({"status": "error", "detail": f"Entidad '{entity}' no encontrada."}),
                 404,
             )
-        start_date = request.args.get("start_date")
         # validate before any work: a bad date would otherwise fail in the
         # documents step, after clients and products were already re-synced
-        if start_date is not None and not _is_iso_date(start_date):
-            return (
-                jsonify({"status": "error", "detail": "start_date must be YYYY-MM-DD"}),
-                400,
-            )
+        if bad := _bad_date("start_date"):
+            return bad
         try:
-            pipeline.sync(entity, start_date=start_date)
+            pipeline.sync(entity, start_date=request.args.get("start_date"))
         except Exception as e:  # noqa: BLE001
             return _fail(e)
         return jsonify({"status": "sincronización completada", "entity": entity})
 
     @app.post("/scheduler/etl/daily")
     def daily():
-        """Cron: full run with the trailing document window
+        """Cron: full run with the trailing document window, ?as_of=
         (scheduler_endpoints.py:19-69)."""
+        if bad := _bad_date("as_of"):
+            return bad
         t0 = time.time()
         try:
-            pipeline.daily()
+            pipeline.daily(as_of=request.args.get("as_of"))
         except Exception as e:  # noqa: BLE001
             return _fail(e)
         return jsonify(
@@ -128,7 +135,7 @@ def create_app(pipeline: EtlPipeline) -> Flask:
 
     @app.post("/scheduler/etl/incremental")
     def incremental():
-        """Cron: documents-only trailing window, ?days=N
+        """Cron: documents-only trailing window, ?days=N&as_of=
         (scheduler_endpoints.py:71-125)."""
         try:
             days = int(request.args.get("days", "1"))
@@ -137,9 +144,11 @@ def create_app(pipeline: EtlPipeline) -> Flask:
         if days < 0:
             # a negative window puts the cutoff in the future: loads nothing
             return jsonify({"status": "error", "detail": "days must be >= 0"}), 400
+        if bad := _bad_date("as_of"):
+            return bad
         t0 = time.time()
         try:
-            pipeline.incremental(days=days)
+            pipeline.incremental(days=days, as_of=request.args.get("as_of"))
         except Exception as e:  # noqa: BLE001
             return _fail(e)
         return jsonify(

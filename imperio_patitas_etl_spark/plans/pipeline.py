@@ -5,8 +5,8 @@ scheduler_endpoints.py:19-206) with a runner over DataFrame sources:
 
 - ``sync('clients'|'products'|'documents'|'all')``  ↔ POST /etl/sync/{entity}
 - ``clean_and_reload()``                            ↔ POST /etl/clean-and-reload
-- ``daily()``                                       ↔ POST /scheduler/etl/daily (7-day window)
-- ``incremental(days)``                             ↔ POST /scheduler/etl/incremental
+- ``daily(as_of)``                                  ↔ POST /scheduler/etl/daily (7-day window)
+- ``incremental(days, as_of)``                      ↔ POST /scheduler/etl/incremental
 - ``test_sample(n)``                                ↔ POST /scheduler/etl/test
 
 Run reports (valid/invalid counts per entity, A3) come back as a DataFrame
@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from datetime import date, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -165,19 +166,24 @@ class EtlPipeline:
         self.warehouse.truncate_all()
         self.sync("all")
 
-    def daily(self) -> None:
+    def daily(self, as_of: str | None = None) -> None:
         """Daily full run with a trailing 7-day document window
-        (scheduler_endpoints.py:184-206)."""
-        cutoff = self.spark.sql("SELECT date_format(date_sub(current_date(), 7), 'yyyy-MM-dd')").first()[0]
-        self.sync("all", start_date=cutoff)
+        (scheduler_endpoints.py:184-206), counted back from ``as_of``
+        (YYYY-MM-DD)."""
+        self.sync("all", start_date=self._cutoff(7, as_of))
 
-    def incremental(self, days: int = 1) -> None:
-        """4-hourly incremental: documents-only trailing window, idempotent
-        by upsert (scheduler_endpoints.py:71-125)."""
-        cutoff = self.spark.sql(
-            f"SELECT date_format(date_sub(current_date(), {int(days)}), 'yyyy-MM-dd')"
-        ).first()[0]
-        self.sync_documents(start_date=cutoff)
+    def incremental(self, days: int = 1, as_of: str | None = None) -> None:
+        """4-hourly incremental: documents-only trailing window of ``days``
+        before ``as_of`` (YYYY-MM-DD), idempotent by upsert
+        (scheduler_endpoints.py:71-125)."""
+        self.sync_documents(start_date=self._cutoff(days, as_of))
+
+    def _cutoff(self, days: int, as_of: str | None) -> str:
+        """``as_of`` (default: the session's ``current_date()``) minus
+        ``days`` days, as YYYY-MM-DD."""
+        if as_of is None:
+            as_of = self.spark.sql("SELECT date_format(current_date(), 'yyyy-MM-dd')").first()[0]
+        return (date.fromisoformat(as_of) - timedelta(days=int(days))).isoformat()
 
     def test_sample(self, n: int = 5) -> dict[str, list]:
         """Smoke endpoint: first n raw records per entity, no load

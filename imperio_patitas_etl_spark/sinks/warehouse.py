@@ -8,12 +8,15 @@ ensure-table DDL (bigquery_client.py:58-133). Here the same operations are
 DataFrame writes against a parquet directory layout:
 
 - schemas are declared ``StructType``s (never inferred at the sink);
-- ``upsert`` is one shuffle by the merge key (latest-wins over
-  target ∪ source), then an atomic directory swap — the plain-parquet
-  equivalent of a transactional MERGE;
-- writes default to snappy parquet; at 100 TB the tables would be
-  date-partitioned (``partition_cols``) so incremental upserts rewrite only
-  the touched partitions and readers prune by date.
+- ``upsert`` on an unpartitioned table is one shuffle by the merge key
+  (latest-wins over target ∪ source), then an atomic directory swap — the
+  plain-parquet equivalent of a transactional MERGE;
+- with ``partitioned=True`` the fact tables live in ``fecha_dia=`` date
+  directories, and ``upsert`` reads, merges and dynamically overwrites
+  only the directories of the dates in its source, so its cost follows the
+  window, not the history;
+- ``export_stringified`` (the Sheets mirror) reads the committed parquet
+  files with pyarrow on the driver, without a Spark job.
 
 The atomic swap (``swap_dir``: write to ``_tmp``, then rename) mirrors
 what a table format's commit protocol gives for free; it keeps readers
@@ -25,6 +28,8 @@ from __future__ import annotations
 import os
 import shutil
 
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -114,6 +119,18 @@ PARTITION_SPEC: dict[str, tuple[str, str]] = {
     "detalle_documento": ("fecha_dia", "fecha_creacion"),
 }
 
+#: directory value Spark writes for a NULL partition key
+HIVE_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+#: Arrow type of each warehouse column type, as the mirror reads the files
+_ARROW_TYPES = {
+    T.LongType(): pa.int64(),
+    T.IntegerType(): pa.int32(),
+    T.DoubleType(): pa.float64(),
+    T.StringType(): pa.string(),
+    T.TimestampType(): pa.timestamp("us"),
+}
+
 
 def swap_dir(tmp: str, final: str) -> None:
     """Replace directory ``final`` with the fully written ``tmp``.
@@ -145,35 +162,16 @@ class ParquetWarehouse:
 
     With ``partitioned=True`` the fact tables are laid out as
     ``fecha_dia=YYYY-MM-DD/`` date partitions (PARTITION_SPEC) and upserts
-    become PARTITION-SCOPED: only the dates present in the source are read,
-    merged, and dynamically overwritten, so an incremental day rewrites one
-    day's partitions, not the table. The dimension tables stay
-    unpartitioned (they are small and broadcast)."""
+    become PARTITION-SCOPED: only the partition directories of the dates
+    present in the source are read, merged, and dynamically overwritten, so
+    an incremental day reads and rewrites one day's partitions, not the
+    table. The dimension tables stay unpartitioned (they are small and
+    broadcast)."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        root: str,
-        partitioned: bool = False,
-        merge_skip_unchanged: bool = False,
-    ):
+    def __init__(self, spark: SparkSession, root: str, partitioned: bool = False):
         self.spark = spark
         self.root = root
         self.partitioned = partitioned
-        #: with merge_skip_unchanged=True the partition-scoped MERGE
-        #: compares each touched partition's merged content against what
-        #: is already on disk (order-insensitive multiset digest) and
-        #: skips the dynamic-overwrite commit for partitions that are
-        #: byte-equivalent — the dominant case on idempotent re-syncs,
-        #: where the r17 A/B isolated the full re-sync wall to ~2,405
-        #: per-partition commit overheads (SCALE.md §r18 candidate).
-        #: Off by default: the compare adds one columnar re-read of the
-        #: touched partitions to every merge, which only pays for itself
-        #: when most merges are no-ops (periodic full re-syncs, replayed
-        #: windows). A manifest table format gets the same skip from
-        #: content-addressed data files; this is the plain-parquet
-        #: equivalent.
-        self.merge_skip_unchanged = merge_skip_unchanged
         os.makedirs(root, exist_ok=True)
 
     def _part_col(self, table: str) -> tuple[str, str] | None:
@@ -237,27 +235,6 @@ class ParquetWarehouse:
         df = self._raw_read(table)
         part = self._part_col(table)
         return df.drop(part[0]) if part else df
-
-    def read_window(self, table: str, start_date: str, end_date: str | None = None) -> DataFrame:
-        """Incremental read: on a partitioned table the predicate lands on
-        the partition column, so the scan LISTS only the matching date
-        directories (partition pruning) — the 100 TB incremental path. On
-        unpartitioned tables it degrades to a normal filter."""
-        part = self._part_col(table)
-        if part:
-            df = self._raw_read(table)
-            cond = F.col(part[0]) >= start_date
-            if end_date:
-                cond = cond & (F.col(part[0]) <= end_date)
-            return df.filter(cond).drop(part[0])
-        ts_col = PARTITION_SPEC.get(table, (None, None))[1]
-        df = self.read(table)
-        if ts_col is None:
-            return df
-        cond = F.col(ts_col) >= F.to_timestamp(F.lit(start_date))
-        if end_date:
-            cond = cond & (F.col(ts_col) < F.date_add(F.to_timestamp(F.lit(end_date)), 1))
-        return df.filter(cond)
 
     def _conform(self, table: str, df: DataFrame) -> DataFrame:
         """Cast/reorder the incoming frame to the declared schema — the
@@ -345,10 +322,9 @@ class ParquetWarehouse:
         yields the same table (scheduler_endpoints.py:71-125).
 
         An unpartitioned table is merged latest-wins (operators/upsert.py)
-        and swapped in whole. A partitioned table is merged partition by
-        partition (``_upsert_partitioned``); with ``merge_skip_unchanged``
-        the touched partitions whose merged content equals what is on disk
-        skip their overwrite commit (``_changed_partition_values``).
+        and swapped in whole. A partitioned table merges only the
+        partitions its source touches (``_upsert_partitioned``); every
+        touched partition is rewritten, changed or not.
         """
         self.ensure_table(table)
         key = MERGE_KEYS[table]
@@ -363,122 +339,66 @@ class ParquetWarehouse:
     def _upsert_partitioned(
         self, table: str, src: DataFrame, key: str, part_name: str
     ) -> None:
-        """Partition-scoped MERGE: read only touched partitions, merge,
-        dynamic-overwrite exactly those partitions. Requires the partition
-        key to be stable per merge key (PARTITION_SPEC contract)."""
+        """Partition-scoped MERGE: read the existing directories of the
+        partitions the source touches (none on a first load or for new
+        days: the target is then empty), merge, stage, and
+        dynamic-overwrite exactly those partitions. Untouched partitions
+        are never listed or opened. Requires the partition key to be
+        stable per merge key (PARTITION_SPEC contract)."""
         src = self._with_part(table, src)
         days = [r[0] for r in src.select(part_name).distinct().collect()]
-        # NULL partition values (NULL timestamp → __HIVE_DEFAULT_PARTITION__)
-        # never match isin(); without the explicit isNull branch the
-        # existing null-partition rows would be dropped when dynamic
-        # overwrite replaces that directory with source-only rows
-        cond = F.col(part_name).isin([d for d in days if d is not None])
-        if any(d is None for d in days):
-            cond = cond | F.col(part_name).isNull()
-        target = self._raw_read(table).filter(cond)
+        root = self.path(table)
+        dirs = [
+            os.path.join(root, f"{part_name}={HIVE_NULL_PARTITION if d is None else d}")
+            for d in days
+        ]
+        dirs = [d for d in dirs if os.path.isdir(d)]
+        schema = self._storage_schema(table)
+        if dirs:
+            # naming the directories keeps Spark from listing the whole
+            # table; basePath recovers the partition column from the paths
+            target = (
+                self.spark.read.schema(schema).option("basePath", root).parquet(*dirs)
+            )
+        else:
+            target = self.spark.createDataFrame([], schema)
         update_cols = UPDATE_COLS[table]
         merged = upsert_latest_wins(target, src, key, update_cols)
         # materialize: merged reads the same files dynamic overwrite replaces
-        tmp = self.path(table) + "_stage"
+        tmp = root + "_stage"
         merged.write.mode("overwrite").parquet(tmp)
-        staged = self.spark.read.schema(self._storage_schema(table)).parquet(tmp)
-        if self.merge_skip_unchanged and self._has_partitions(table, part_name):
-            changed = self._changed_partition_values(staged, target, part_name)
-            if not changed:
-                # every touched partition merged to exactly what is on
-                # disk — the whole MERGE is a no-op; skip all commits
-                shutil.rmtree(tmp, ignore_errors=True)
-                return
-            if len(changed) < len(days):
-                # filter only when something is actually skippable — on
-                # an all-changed merge the unfiltered staged write is
-                # the exact default-path plan (no 10^3-literal isin in
-                # the write stage)
-                ccond = F.col(part_name).isin(
-                    [d for d in changed if d is not None]
-                )
-                if any(d is None for d in changed):
-                    ccond = ccond | F.col(part_name).isNull()
-                staged = staged.filter(ccond)
+        staged = self.spark.read.schema(schema).parquet(tmp)
         (
             staged.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy(part_name)
-            .parquet(self.path(table))
+            .parquet(root)
         )
         shutil.rmtree(tmp, ignore_errors=True)
-
-    def _has_partitions(self, table: str, part_name: str) -> bool:
-        """Cheap directory-listing probe: a table with no
-        ``<part_name>=`` directories (the first sync into a freshly
-        ensured table) has nothing skippable, so the digest compare is
-        bypassed entirely — no Spark job, no extra scan."""
-        p = self.path(table)
-        try:
-            return any(d.startswith(part_name + "=") for d in os.listdir(p))
-        except FileNotFoundError:
-            return False
-
-    def _changed_partition_values(
-        self, staged: DataFrame, target: DataFrame, part_name: str
-    ) -> list:
-        """Touched-partition values whose merged content differs from the
-        partition already on disk, by exact order-insensitive multiset
-        digest: per partition, row count plus two independent sums of
-        64-bit per-row hashes (``xxhash64`` over every storage column;
-        the second sum salts the hash with a literal prefix). Equal
-        digests ⇔ equal row multisets up to a ~2^-128 random-collision
-        bound — the inputs are the warehouse's own rows, not
-        attacker-chosen, so the non-cryptographic bound is the right
-        trade for a JVM-side whole-stage-codegen compare (same rationale
-        as ``table_checksum_blocks``, queries/analytics.py). Sum (not
-        XOR) folding: XOR cancels duplicate rows pairwise, so a
-        partition gaining two copies of an existing row would digest
-        equal; a sum shifts by 2·h. Both sides collect one row per
-        touched partition — bounded by the source's date span, never by
-        table size — and the scans are columnar reads of exactly the
-        touched partitions (partition-pruned on the target side).
-
-        At 100 TB this turns an idempotent re-sync from write-bound to
-        read-bound: the r17 compacted-layout A/B isolated the full
-        re-sync wall to ~2,405 per-partition dynamic-overwrite commits
-        whose staged content was byte-equivalent to the target
-        (BASELINE.md §r17); a manifest-committing table format would
-        skip those by content-addressed data files, and this is the
-        plain-parquet equivalent."""
-        cols = list(staged.columns)
-        h1 = F.xxhash64(*cols).cast("decimal(38,0)")
-        h2 = F.xxhash64(F.lit("resync-salt"), *cols).cast("decimal(38,0)")
-
-        def digests(df: DataFrame) -> dict:
-            rows = (
-                df.groupBy(part_name)
-                .agg(
-                    F.count(F.lit(1)).alias("cnt"),
-                    F.sum(h1).alias("s1"),
-                    F.sum(h2).alias("s2"),
-                )
-                .collect()
-            )
-            return {r[part_name]: (r["cnt"], r["s1"], r["s2"]) for r in rows}
-
-        a = digests(staged)
-        b = digests(target.select(*cols))
-        return [p for p in set(a) | set(b) if a.get(p) != b.get(p)]
 
     # -- K5: full-refresh export (Sheets analog) --------------------------
     def export_stringified(self, table: str) -> list[list[str]]:
         """Sheets mirror: header row + every cell stringified with '' for
-        NULL (sheets_sync.py:24-47). Driver-side egress — only sane for
-        small dims; errors here must stay non-fatal to the sync
-        (etl_service.py:737-741), which is the caller's contract."""
-        df = self.read(table)
-        header = list(df.columns)
-        body = [
-            ["" if v is None else str(v) for v in row]
-            for row in df.collect()
-        ]
-        return [header] + body
+        NULL (sheets_sync.py:24-47), in no particular row order (the mirror
+        is a full refresh). The committed parquet files are read with
+        pyarrow on the driver, declared columns only, so the partition
+        column drops out; each cell is ``str`` of the value a Spark ``Row``
+        carries (timestamps as local-zone naive ``datetime``). Driver-side
+        egress — only sane for small dims; errors here must stay non-fatal
+        to the sync (etl_service.py:737-741), which is the caller's
+        contract."""
+        self.ensure_table(table)
+        fields = WAREHOUSE_SCHEMAS[table].fields
+        header = [f.name for f in fields]
+        # the explicit schema also covers a table holding only _SUCCESS,
+        # where pyarrow would otherwise find no schema to infer
+        schema = pa.schema([(f.name, _ARROW_TYPES[f.dataType]) for f in fields])
+        fmt = ds.ParquetFileFormat(
+            read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+        )
+        data = ds.dataset(self.path(table), format=fmt, schema=schema).to_table()
+        cols = [_stringified(data.column(f.name), f.dataType) for f in fields]
+        return [header] + [list(row) for row in zip(*cols)]
 
     # -- K7: raw SQL ------------------------------------------------------
     def sql(self, query: str) -> DataFrame:
@@ -486,3 +406,12 @@ class ParquetWarehouse:
         for t in WAREHOUSE_SCHEMAS:
             self.read(t).createOrReplaceTempView(t)
         return self.spark.sql(query)
+
+
+def _stringified(col: pa.ChunkedArray, dtype: T.DataType) -> list[str]:
+    """``str`` of each value as a Spark ``Row`` holds it, '' for NULL."""
+    if isinstance(dtype, T.TimestampType):
+        to_py = dtype.fromInternal
+        values = col.cast(pa.int64()).to_pylist()
+        return ["" if v is None else str(to_py(v)) for v in values]
+    return ["" if v is None else str(v) for v in col.to_pylist()]

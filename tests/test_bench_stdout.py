@@ -9,8 +9,8 @@ parser — a typo'd ``--al`` was silently dropped, turning an intended
 full-registry sf1 sweep into a headline-only one. Arg-error paths exit
 before any pyspark import (asserted structurally, no Spark markers).
 
-No Spark needed: ``fit_stdout_line`` is pure; the CLI cases exit during
-argument handling.
+No Spark needed: ``fit_stdout_line`` and ``repeat_stats`` are pure; the
+CLI cases exit during argument handling.
 """
 
 from __future__ import annotations
@@ -20,7 +20,7 @@ import os
 import subprocess
 import sys
 
-from bench import fit_stdout_line
+from bench import fit_stdout_line, repeat_stats
 from conftest import assert_no_spark_startup
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -142,3 +142,11 @@ def test_real_r10_shaped_line_is_stable():
     out, top = _summary(10)
     line = fit_stdout_line(dict(out), top)
     assert len(line) < 600
+
+
+def test_repeat_median_of_two_is_their_mean():
+    """``--repeats 2``: the median is the mean of the two passes, not the
+    slower one."""
+    q_min, q_med = repeat_stats({"dup_clusters": [5.06, 3.48], "tpch_q3": [1.0, 2.0, 9.0]})
+    assert q_min == {"dup_clusters": 3.48, "tpch_q3": 1.0}
+    assert q_med == {"dup_clusters": (5.06 + 3.48) / 2, "tpch_q3": 2.0}

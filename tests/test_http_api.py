@@ -119,6 +119,44 @@ def test_daily_route(client):
     assert pipeline.warehouse.read("producto").count() > 0
 
 
+def test_scheduler_as_of_validation(client):
+    c, pipeline = client
+    for route in ("/scheduler/etl/daily", "/scheduler/etl/incremental?days=1&"):
+        sep = "" if route.endswith("&") else "?"
+        for bad in ("garbage", "2023-11-31", "2023-1-15", ""):
+            r = c.post(f"{route}{sep}as_of={bad}")
+            assert r.status_code == 400, (route, bad)
+            assert r.get_json()["detail"] == "as_of must be YYYY-MM-DD"
+    # refused before any entity was synced
+    assert pipeline.report().count() == 0
+    assert pipeline.warehouse.read("cliente").count() == 0
+
+
+def test_daily_window_counts_back_from_as_of(client):
+    """Fixture docs are emitted on 2023-11-14 (UTC): a daily run as of
+    2023-11-20 (cutoff 2023-11-13) loads them, one as of 2023-11-22
+    (cutoff 2023-11-15) does not."""
+    c, pipeline = client
+    assert c.post("/scheduler/etl/daily?as_of=2023-11-22").status_code == 200
+    assert pipeline.warehouse.read("cliente").count() == 2
+    assert pipeline.warehouse.read("documento_venta").count() == 0
+    assert c.post("/scheduler/etl/daily?as_of=2023-11-20").status_code == 200
+    docs = {r["id_documento"] for r in pipeline.warehouse.read("documento_venta").collect()}
+    assert docs == {10, 11, 14}
+
+
+def test_incremental_window_counts_back_from_as_of(client):
+    c, pipeline = client
+    r = c.post("/scheduler/etl/incremental?days=0&as_of=2023-11-15")
+    assert r.status_code == 200 and r.get_json()["days_processed"] == 0
+    assert pipeline.warehouse.read("documento_venta").count() == 0
+    assert c.post("/scheduler/etl/incremental?days=1&as_of=2023-11-15").status_code == 200
+    docs = {r["id_documento"] for r in pipeline.warehouse.read("documento_venta").collect()}
+    assert docs == {10, 11, 14}
+    # documents only: the dimensions stay empty
+    assert pipeline.warehouse.read("cliente").count() == 0
+
+
 def test_error_maps_to_500(client):
     c, pipeline = client
     pipeline.sources["clients"] = lambda: (_ for _ in ()).throw(RuntimeError("boom"))

@@ -1,10 +1,11 @@
 """Partitioned-warehouse tests: date-partition layout, partition-scoped
-upsert (only touched date directories rewritten), pruned incremental
-reads, and public-schema stability."""
+upsert (only touched date directories read and rewritten), and
+public-schema stability."""
 
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 
@@ -79,19 +80,46 @@ def test_partition_scoped_upsert_idempotent(wh, spark):
     assert snap1 == snap2
 
 
-def test_read_window_prunes_partitions(wh, spark):
+def test_upsert_never_lists_untouched_partitions(wh, spark):
+    """The merge reads only the touched days' directories: a stray
+    directory holding a file that is not parquet, in an untouched
+    partition, is neither listed nor removed. (Listing the table root
+    would fail on it: its depth conflicts with the partition layout.)"""
     wh.overwrite(
         "documento_venta",
-        _docs(spark, [(1, 10, 7, D1, 119.0), (2, 11, 8, D2, 119.0), (3, 12, 9, D3, 119.0)]),
+        _docs(spark, [(1, 10, 7, D1, 119.0), (2, 11, 8, D2, 119.0)]),
     )
-    win = wh.read_window("documento_venta", "2024-01-02")
-    assert {r["id_documento"] for r in win.collect()} == {2, 3}
-    # the physical plan must prune at the partition level, not post-filter:
-    # the predicate shows up as a PartitionFilter on the scan (file-listing
-    # level), not a data Filter above it
-    plan = win._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    assert "fecha_dia" in plan.split("PartitionFilters", 1)[1].split("]", 1)[0]
+    stray = os.path.join(wh.path("documento_venta"), "fecha_dia=2024-01-01", "stray=1")
+    os.makedirs(stray)
+    bogus = os.path.join(stray, "part-bogus.parquet")
+    with open(bogus, "w") as f:
+        f.write("not a parquet file")
+    wh.upsert("documento_venta", _docs(spark, [(2, 99, 8, D2, 238.0), (3, 12, 9, D3, 119.0)]))
+    assert os.path.exists(bogus)
+    shutil.rmtree(stray)
+    rows = {r["id_documento"]: r for r in wh.read("documento_venta").collect()}
+    assert set(rows) == {1, 2, 3}
+    assert rows[2]["id_cliente"] == 99
+
+
+def test_upsert_of_new_days_only_keeps_history(wh, spark):
+    """A source whose days have no directory yet merges against an empty
+    target and leaves every existing partition as it was."""
+    wh.overwrite(
+        "documento_venta",
+        _docs(spark, [(1, 10, 7, D1, 119.0), (2, 11, 8, D2, 119.0)]),
+    )
+    p = wh.path("documento_venta")
+    before = {d: sorted(os.listdir(os.path.join(p, d))) for d in os.listdir(p)
+              if d.startswith("fecha_dia=")}
+    wh.upsert("documento_venta", _docs(spark, [(3, 12, 9, D3, 119.0), (4, 13, 10, D3, 50.0)]))
+    for d, files in before.items():
+        assert sorted(os.listdir(os.path.join(p, d))) == files
+    assert sorted(d for d in os.listdir(p) if d.startswith("fecha_dia=")) == [
+        "fecha_dia=2024-01-01", "fecha_dia=2024-01-02", "fecha_dia=2024-01-03"
+    ]
+    rows = {r["id_documento"]: r["monto_total"] for r in wh.read("documento_venta").collect()}
+    assert rows == {1: 119.0, 2: 119.0, 3: 119.0, 4: 50.0}
 
 
 def test_detalle_partitioned_roundtrip(wh, spark):
@@ -111,8 +139,7 @@ def test_detalle_partitioned_roundtrip(wh, spark):
 def test_null_partition_rows_survive_upsert(wh, spark):
     """A NULL timestamp lands in __HIVE_DEFAULT_PARTITION__; an upsert whose
     source also carries NULL-partition rows must MERGE with the existing
-    ones, not replace the directory with source-only rows (the isin(days)
-    read never matched NULL, so the old rows weren't in the merge input)."""
+    ones, not replace the directory with source-only rows."""
     wh.overwrite(
         "documento_venta",
         _docs(spark, [(1, 10, 7, None, 119.0), (2, 11, 8, D1, 119.0)]),

@@ -27,9 +27,10 @@ at fixed key strides, so every validation branch carries real row volume:
 Timed phases (printed as one JSON line, appended to BASELINE.md):
 
   t_sync_all     pipeline.sync('all') into an empty warehouse
-  t_incremental  pipeline.incremental(days≈11.5k) — cutoff lands inside
-                 the o_orderdate range, so a real document subset
-                 re-syncs through the partition-scoped MERGE
+  t_incremental  pipeline.incremental(days=INCR_DAYS, as_of=INCR_AS_OF)
+                 — the cutoff (mid-1994) lands inside the o_orderdate
+                 range, so a real document subset re-syncs through the
+                 partition-scoped MERGE
   t_resync_all   second full sync('all') — the idempotent upsert pass
   idempotent     post-resync state equals post-sync state (per-table
                  exceptAll in both directions == 0)
@@ -52,9 +53,11 @@ sys.path.insert(0, REPO)
 SRC_DIR = "/tmp/pipeline_bench_src"
 WH_DIR = "/tmp/pipeline_bench_wh"
 
-#: cutoff ≈ current_date − 11500 d ≈ mid-1994 — inside the 1992-1998
-#: o_orderdate range, so the incremental window re-syncs a real subset
-INCR_DAYS = 11500
+#: incremental window: the 1,500 days before the end of the 1992-1998
+#: o_orderdate range, a cutoff of 1994-06-24, so the window re-syncs a
+#: real subset on every run, whatever the wall-clock date
+INCR_AS_OF = "1998-08-02"
+INCR_DAYS = 1500
 
 
 def build_sources(spark, sf_dir: str) -> None:
@@ -261,18 +264,6 @@ def main() -> None:
         help="source scale-factor directory (default: %(default)s)",
     )
     ap.add_argument(
-        "--skip-unchanged",
-        action="store_true",
-        help=(
-            "construct the warehouse with merge_skip_unchanged=True: the "
-            "partition-scoped MERGE digests each touched partition's "
-            "merged content against the on-disk partition and skips the "
-            "dynamic-overwrite commit when equal (SCALE.md §r18: the "
-            "idempotent re-sync wall is ~2,405 no-op per-partition "
-            "commits; this flag records the measured companion number)"
-        ),
-    )
-    ap.add_argument(
         "--compact",
         action="store_true",
         help=(
@@ -314,12 +305,7 @@ def main() -> None:
     }
     pipe = EtlPipeline(
         spark=spark,
-        warehouse=ParquetWarehouse(
-            spark,
-            WH_DIR,
-            partitioned=True,
-            merge_skip_unchanged=args.skip_unchanged,
-        ),
+        warehouse=ParquetWarehouse(spark, WH_DIR, partitioned=True),
         sources=sources,
     )
 
@@ -341,7 +327,7 @@ def main() -> None:
         t_compact = time.time() - t0
 
     t0 = time.time()
-    pipe.incremental(days=INCR_DAYS)
+    pipe.incremental(days=INCR_DAYS, as_of=INCR_AS_OF)
     t_incremental = time.time() - t0
 
     t0 = time.time()
@@ -362,7 +348,6 @@ def main() -> None:
         "t_incremental": round(t_incremental, 1),
         "t_resync_all": round(t_resync_all, 1),
         "idempotent": idempotent,
-        "skip_unchanged": args.skip_unchanged,
         "rows": counts,
         "first_run_report": rep,
     }
