@@ -5,9 +5,10 @@ logged reason (etl_service.py:20-201, catch-and-skip loops at :525-531,
 :626-633, :677-701). Here the same semantics are a single declarative spec
 compiled to ``filter(...).select(...)`` — Catalyst pushes the predicates
 into the scan and prunes unused columns, and the whole thing stays inside
-whole-stage codegen. The "logged reason" becomes a first-class rejects
-DataFrame (reason column included), replacing log-grepping with a queryable
-data-quality output.
+whole-stage codegen. The "logged reason" becomes a column: every input row
+is tagged with the name of its first failing rule (NULL when it passes), so
+the rejects and the valid/invalid counts are queries over one frame rather
+than log lines.
 """
 
 from __future__ import annotations
@@ -54,37 +55,40 @@ class EntitySpec:
         return pred
 
     def apply(self, df: DataFrame) -> "ValidationResult":
-        """Split into (accepted-and-projected, rejects-with-reason)."""
-        accepted = df.filter(self.accept_predicate())
-        projected = accepted.select(
-            *[expr.alias(name) for name, expr in self.projection.items()]
+        """Accepted rows, projected with their ``warn_*`` flags, plus every
+        input row tagged with its ``reject_reason``."""
+        accepted = df.filter(self.accept_predicate()).select(
+            *[expr.alias(name) for name, expr in self.projection.items()],
+            *[
+                F.coalesce(expr, F.lit(False)).alias(f"warn_{wname}")
+                for wname, expr in self.warnings.items()
+            ],
         )
-        if self.warnings:
-            projected = accepted.select(
-                *[expr.alias(name) for name, expr in self.projection.items()],
-                *[
-                    F.coalesce(expr, F.lit(False)).alias(f"warn_{wname}")
-                    for wname, expr in self.warnings.items()
-                ],
-            )
-        # Rejects: first failing rule wins as the reason (reference logs the
-        # first DataValidationError raised, etl_service.py:525-531).
+        # first failing rule wins as the reason (reference logs the first
+        # DataValidationError raised, etl_service.py:525-531)
         reason = F.lit(None).cast("string")
         for r in reversed(self.rules):
             reason = F.when(~F.coalesce(r.predicate, F.lit(False)), F.lit(r.name)).otherwise(
                 reason
             )
-        rejected = df.filter(~self.accept_predicate()).withColumn("reject_reason", reason)
-        return ValidationResult(accepted=projected, rejected=rejected)
+        return ValidationResult(accepted=accepted, tagged=df.withColumn("reject_reason", reason))
 
 
 @dataclass
 class ValidationResult:
+    """``accepted``: the rows passing every rule, projected. ``tagged``: every
+    input row plus ``reject_reason``, the name of its first failing rule or
+    NULL when all hold."""
+
     accepted: DataFrame
-    rejected: DataFrame
+    tagged: DataFrame
+
+    @property
+    def rejected(self) -> DataFrame:
+        return self.tagged.filter(F.col("reject_reason").isNotNull())
 
     def counts(self) -> DataFrame:
-        """A3: valid/invalid counters as a DataFrame (etl_service.py:522-533)."""
-        a = self.accepted.select(F.lit("valid").alias("status")).groupBy("status").count()
-        r = self.rejected.select(F.lit("invalid").alias("status")).groupBy("status").count()
-        return a.unionByName(r)
+        """A3: valid/invalid counters (etl_service.py:522-533) as one
+        aggregate over ``tagged``; a status with no rows has no row."""
+        status = F.when(F.col("reject_reason").isNull(), "valid").otherwise("invalid")
+        return self.tagged.groupBy(status.alias("status")).count()

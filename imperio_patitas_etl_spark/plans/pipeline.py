@@ -138,9 +138,8 @@ class EtlPipeline:
             return
         else:
             raise ValueError(f"unknown entity {entity!r}")
-        # per-entity mirror of just the synced tables (ADVICE r8: a
-        # deployment driving per-entity syncs must not leave the Sheets
-        # mirror silently stale)
+        # per-entity mirror of just the synced tables: a deployment driving
+        # per-entity syncs must not leave the Sheets mirror silently stale
         self.mirror(self._ENTITY_TABLES[entity])
 
     def mirror(self, tables) -> bool:
@@ -203,9 +202,9 @@ class EtlPipeline:
         )
 
     def _counted(self, table: str, res: ValidationResult) -> tuple[DataFrame, int, int]:
-        """Validated rows of ``res`` without their ``warn_*`` columns, plus
-        the accepted and rejected counts, recorded as a report row."""
-        accepted = res.accepted.drop(*[c for c in res.accepted.columns if c.startswith("warn_")])
-        n_valid, n_invalid = accepted.count(), res.rejected.count()
+        """Validated rows of ``res`` plus its accepted and rejected counts,
+        taken in one aggregate and recorded as a report row."""
+        counts = dict(res.counts().collect())
+        n_valid, n_invalid = counts.get("valid", 0), counts.get("invalid", 0)
         self._report_rows.append((table, n_valid, n_invalid))
-        return accepted, n_valid, n_invalid
+        return res.accepted, n_valid, n_invalid

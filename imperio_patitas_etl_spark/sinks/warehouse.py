@@ -12,15 +12,16 @@ DataFrame writes against a parquet directory layout:
   (latest-wins over target ∪ source), then an atomic directory swap — the
   plain-parquet equivalent of a transactional MERGE;
 - with ``partitioned=True`` the fact tables live in ``fecha_dia=`` date
-  directories, and ``upsert`` reads, merges and dynamically overwrites
-  only the directories of the dates in its source, so its cost follows the
+  directories, and ``upsert`` reads and merges only the directories of the
+  dates in its source and swaps each of them in, so its cost follows the
   window, not the history;
 - ``export_stringified`` (the Sheets mirror) reads the committed parquet
   files with pyarrow on the driver, without a Spark job.
 
-The atomic swap (``swap_dir``: write to ``_tmp``, then rename) mirrors
-what a table format's commit protocol gives for free; it keeps readers
-from ever observing a half-written table in plain-parquet mode.
+Every rewrite commits through one primitive, ``swap_dir``: the new copy is
+written in full beside the live one, then renamed in. It mirrors what a
+table format's commit protocol gives for free and keeps readers from ever
+observing a half-written table or partition in plain-parquet mode.
 """
 
 from __future__ import annotations
@@ -135,13 +136,16 @@ _ARROW_TYPES = {
 def swap_dir(tmp: str, final: str) -> None:
     """Replace directory ``final`` with the fully written ``tmp``.
 
-    The live directory moves aside to ``<final>_prev`` and ``tmp`` is
-    renamed in; if that rename raises, ``<final>_prev`` is renamed back
-    before re-raising, so ``final`` holds the old or the new table. A
-    ``<final>_prev`` left by a killed run is cleared first: ``os.rename``
-    onto a non-empty directory fails, so it would block every later swap.
+    The live directory moves aside to ``<tmp>_prev`` and ``tmp`` is renamed
+    in; if that rename raises, ``<tmp>_prev`` is renamed back before
+    re-raising, so ``final`` holds the old or the new copy. The old copy
+    waits beside ``tmp``, not beside ``final``: when ``final`` is a table
+    partition, a copy next to it would read as one more partition until it
+    is removed. A ``<tmp>_prev`` left by a killed run is cleared first:
+    ``os.rename`` onto a non-empty directory fails, so it would block every
+    later swap.
     """
-    prev = final + "_prev"
+    prev = tmp + "_prev"
     shutil.rmtree(prev, ignore_errors=True)
     if os.path.isdir(final):
         os.rename(final, prev)
@@ -156,15 +160,16 @@ def swap_dir(tmp: str, final: str) -> None:
 
 class ParquetWarehouse:
     """The 4-table warehouse rooted at a directory, one parquet dataset per
-    table. Whole-table rewrites (overwrite, truncate, compact and the
-    unpartitioned upsert) commit through ``swap_dir``, so a reader sees
-    either the old or the new table, never a partial write.
+    table. Every rewrite commits through ``swap_dir``: overwrite, truncate,
+    compact and the unpartitioned upsert swap the whole table, the
+    partitioned upsert swaps each partition it rewrites. A reader sees the
+    old or the new copy of each directory, never a partial write.
 
     With ``partitioned=True`` the fact tables are laid out as
     ``fecha_dia=YYYY-MM-DD/`` date partitions (PARTITION_SPEC) and upserts
     become PARTITION-SCOPED: only the partition directories of the dates
-    present in the source are read, merged, and dynamically overwritten, so
-    an incremental day reads and rewrites one day's partitions, not the
+    present in the source are read, merged and swapped in, so an
+    incremental day reads and rewrites one day's partitions, not the
     table. The dimension tables stay unpartitioned (they are small and
     broadcast)."""
 
@@ -341,10 +346,12 @@ class ParquetWarehouse:
     ) -> None:
         """Partition-scoped MERGE: read the existing directories of the
         partitions the source touches (none on a first load or for new
-        days: the target is then empty), merge, stage, and
-        dynamic-overwrite exactly those partitions. Untouched partitions
-        are never listed or opened. Requires the partition key to be
-        stable per merge key (PARTITION_SPEC contract)."""
+        days: the target is then empty), merge, write the merged rows once,
+        partitioned, to ``<table>_tmp``, and ``swap_dir`` each partition
+        written there into the table. Each partition commits atomically;
+        the upsert as a whole does not. Untouched partitions are never
+        listed or opened. Requires the partition key to be stable per merge
+        key (PARTITION_SPEC contract)."""
         src = self._with_part(table, src)
         days = [r[0] for r in src.select(part_name).distinct().collect()]
         root = self.path(table)
@@ -362,18 +369,14 @@ class ParquetWarehouse:
             )
         else:
             target = self.spark.createDataFrame([], schema)
-        update_cols = UPDATE_COLS[table]
-        merged = upsert_latest_wins(target, src, key, update_cols)
-        # materialize: merged reads the same files dynamic overwrite replaces
-        tmp = root + "_stage"
-        merged.write.mode("overwrite").parquet(tmp)
-        staged = self.spark.read.schema(schema).parquet(tmp)
-        (
-            staged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(part_name)
-            .parquet(root)
-        )
+        merged = upsert_latest_wins(target, src, key, UPDATE_COLS[table])
+        # written in full before any swap: merged reads the directories
+        # the swaps replace
+        tmp = root + "_tmp"
+        merged.write.mode("overwrite").partitionBy(part_name).parquet(tmp)
+        for d in os.listdir(tmp):
+            if d.startswith(part_name + "="):
+                swap_dir(os.path.join(tmp, d), os.path.join(root, d))
         shutil.rmtree(tmp, ignore_errors=True)
 
     # -- K5: full-refresh export (Sheets analog) --------------------------
@@ -399,13 +402,6 @@ class ParquetWarehouse:
         data = ds.dataset(self.path(table), format=fmt, schema=schema).to_table()
         cols = [_stringified(data.column(f.name), f.dataType) for f in fields]
         return [header] + [list(row) for row in zip(*cols)]
-
-    # -- K7: raw SQL ------------------------------------------------------
-    def sql(self, query: str) -> DataFrame:
-        """Run SQL against the warehouse tables registered as temp views."""
-        for t in WAREHOUSE_SCHEMAS:
-            self.read(t).createOrReplaceTempView(t)
-        return self.spark.sql(query)
 
 
 def _stringified(col: pa.ChunkedArray, dtype: T.DataType) -> list[str]:

@@ -1,10 +1,11 @@
 """Partitioned-warehouse tests: date-partition layout, partition-scoped
-upsert (only touched date directories read and rewritten), and
-public-schema stability."""
+upsert (only touched date directories read and rewritten, each swapped in
+on its own), and public-schema stability."""
 
 from __future__ import annotations
 
 import os
+import re
 import shutil
 
 import pytest
@@ -157,3 +158,67 @@ def test_null_partition_rows_survive_upsert(wh, spark):
     rows = {r["id_documento"]: r for r in wh.read("documento_venta").collect()}
     assert set(rows) == {1, 2, 3, 4}
     assert rows[1]["id_cliente"] == 99 and rows[1]["monto_total"] == 238.0
+
+
+def _by_id(wh):
+    rows = wh.read("documento_venta").collect()
+    by_id = {r["id_documento"]: r for r in rows}
+    assert len(by_id) == len(rows)  # each key once
+    return by_id
+
+
+def test_failed_partition_rename_keeps_that_partition(wh, spark, monkeypatch):
+    """The rename of one touched partition raising mid-commit rolls that
+    partition back; an untouched day stays as it was, and rerunning the
+    upsert converges."""
+    wh.overwrite(
+        "documento_venta",
+        _docs(spark, [(1, 10, 7, D1, 119.0), (2, 11, 8, D2, 119.0), (3, 12, 9, D3, 119.0)]),
+    )
+    before = _by_id(wh)
+    p = wh.path("documento_venta")
+    day3 = os.path.join(p, "fecha_dia=2024-01-03")
+    day3_files = sorted(os.listdir(day3))
+    failing = os.path.join(p + "_tmp", "fecha_dia=2024-01-02")
+    real_rename = os.rename
+
+    def rename(src, dst):
+        if src == failing:
+            raise OSError("injected rename failure")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename)
+    src = _docs(spark, [(1, 20, 7, D1, 200.0), (2, 21, 8, D2, 238.0)])
+    with pytest.raises(OSError, match="injected"):
+        wh.upsert("documento_venta", src)
+    monkeypatch.setattr(os, "rename", real_rename)
+    rows = _by_id(wh)
+    assert set(rows) == {1, 2, 3}
+    assert rows[2] == before[2]
+    assert rows[3] == before[3]
+    assert sorted(os.listdir(day3)) == day3_files
+    # day 1 committed or not, depending on the order of the swaps
+    assert rows[1]["monto_total"] in (119.0, 200.0)
+    wh.upsert("documento_venta", src)
+    rows = _by_id(wh)
+    assert {i: r["monto_total"] for i, r in rows.items()} == {1: 200.0, 2: 238.0, 3: 119.0}
+    assert rows[3] == before[3]
+
+
+def test_crash_before_cleanup_leaves_no_extra_partition(wh, spark, monkeypatch):
+    """A run that dies after its swaps but before removing the old copies
+    (``shutil.rmtree`` a no-op) leaves only partition directories and
+    Spark's marker files under the table root: every key reads once."""
+    wh.overwrite(
+        "documento_venta",
+        _docs(spark, [(1, 10, 7, D1, 119.0), (2, 11, 8, D2, 119.0)]),
+    )
+    monkeypatch.setattr(shutil, "rmtree", lambda *a, **k: None)
+    wh.upsert("documento_venta", _docs(spark, [(2, 99, 8, D2, 238.0), (3, 12, 9, D3, 119.0)]))
+    monkeypatch.undo()
+    rows = _by_id(wh)
+    assert set(rows) == {1, 2, 3}
+    assert rows[2]["id_cliente"] == 99
+    part = re.compile(r"fecha_dia=(\d{4}-\d{2}-\d{2}|__HIVE_DEFAULT_PARTITION__)")
+    for name in os.listdir(wh.path("documento_venta")):
+        assert part.fullmatch(name) or name in ("_SUCCESS", "._SUCCESS.crc"), name

@@ -8,6 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from imperio_patitas_etl_spark.plans.entities import transform_clients
 from imperio_patitas_etl_spark.plans.pipeline import EtlPipeline
 from imperio_patitas_etl_spark.sinks.warehouse import ParquetWarehouse
 
@@ -182,6 +183,21 @@ def test_report(pipeline):
     assert rep["cliente"] == (2, 3)
     assert rep["documento_venta"] == (3, 2)
     assert rep["detalle_documento"] == (3, 1)
+
+
+def test_all_valid_sync_reports_zero_invalid(spark, tmp_path):
+    """With no rejects the counts have no ``invalid`` row; the report
+    still says 0."""
+    valid = [RAW_CLIENTS[0], RAW_CLIENTS[3]]
+    pipe = EtlPipeline(
+        spark=spark,
+        warehouse=ParquetWarehouse(spark, str(tmp_path / "wh")),
+        sources={"clients": lambda: spark.createDataFrame(valid, CLIENT_SCHEMA)},
+    )
+    res = transform_clients(pipe.sources["clients"]())
+    assert [r["status"] for r in res.counts().collect()] == ["valid"]
+    assert pipe.sync_clients() == 2
+    assert [tuple(r) for r in pipe.report().collect()] == [("cliente", 2, 0)]
 
 
 def test_column_subset_update_documento(pipeline, spark):

@@ -74,3 +74,11 @@ def test_counts_report(spark):
     res = _spec().apply(_data(spark))
     counts = {r["status"]: r["count"] for r in res.counts().collect()}
     assert counts == {"valid": 2, "invalid": 2}
+
+
+def test_counts_is_one_aggregate(spark):
+    """Both counters come from one grouping of the tagged rows."""
+    res = _spec().apply(_data(spark))
+    plan = res.counts()._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Aggregate") == 1
+    assert "Union" not in plan

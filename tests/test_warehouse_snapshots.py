@@ -77,9 +77,9 @@ def test_failed_source_leaves_table_unchanged(wh, spark):
 
 
 def test_stale_prev_dir_does_not_block_upsert(wh, spark):
-    """A ``<table>_prev`` left by a killed run is cleared by the next swap."""
+    """A ``<table>_tmp_prev`` left by a killed run is cleared by the next swap."""
     wh.overwrite("cliente", _clients(spark, [(1, "ana", "1-9", "a@x.cl")]))
-    stale = wh.path("cliente") + "_prev"
+    stale = wh.path("cliente") + "_tmp_prev"
     os.makedirs(stale)
     with open(os.path.join(stale, "part-0.parquet"), "w") as f:
         f.write("left by a killed run")

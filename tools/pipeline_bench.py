@@ -1,4 +1,4 @@
-"""End-to-end warehouse pipeline at bench scale (VERDICT r15 item 5).
+"""End-to-end warehouse pipeline at bench scale.
 
 ``EtlPipeline`` full sync → incremental window re-sync → full re-sync
 idempotence check, against sf0.1-sized DIRTY Bsale-shaped inputs derived
@@ -36,6 +36,9 @@ Timed phases (printed as one JSON line, appended to BASELINE.md):
                  exceptAll in both directions == 0)
 
 Usage: python tools/pipeline_bench.py [sf_dir] (default testdata sf0.1)
+
+The session is ``session.get_spark``'s: ``SPARK_GRAFT_CPUS`` sets its
+core count and ``SPARK_GRAFT_DRIVER_MEM`` its heap.
 """
 
 from __future__ import annotations
@@ -270,9 +273,9 @@ def main() -> None:
             "run warehouse.compact() on every table after the initial "
             "full sync, so the incremental/re-sync walls measure the "
             "maintained layout instead of the worst-case one-file-per-"
-            "task layout (VERDICT r16 item 3: the ~2,400×60-row "
-            "fecha_dia layout makes the uncompacted walls metadata-"
-            "bound; this flag records the measured companion number)"
+            "task layout (the ~2,400×60-row fecha_dia layout makes "
+            "the uncompacted walls metadata-bound; this flag records "
+            "the measured companion number)"
         ),
     )
     args = ap.parse_args()
@@ -280,18 +283,11 @@ def main() -> None:
     if not os.path.isdir(sf_dir):
         ap.error(f"no such sf_dir: {sf_dir}")
 
-    from pyspark.sql import SparkSession
-
     from imperio_patitas_etl_spark.plans.pipeline import EtlPipeline
+    from imperio_patitas_etl_spark.session import get_spark
     from imperio_patitas_etl_spark.sinks.warehouse import ParquetWarehouse
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "48g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("pipeline_bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     t0 = time.time()
