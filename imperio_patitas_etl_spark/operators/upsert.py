@@ -6,7 +6,10 @@ to DELETE+INSERT (:296-325). In Spark the same semantics are set
 operations over DataFrames — one shuffle by key, no batching, idempotent:
 
 - ``upsert_latest_wins``    — the MERGE equivalent; the warehouse sink
-                              (sinks/warehouse.py) commits its result.
+                              (sinks/warehouse.py) commits its result. One
+                              ranked window over target ∪ source keeps one
+                              row per key, whether every column updates or
+                              only a subset does.
 - ``delete_insert``         — the fallback, as anti-join + union.
 
 Scale note: both shuffle once on the merge key. For repeated upserts
@@ -29,52 +32,45 @@ def upsert_latest_wins(
 ) -> DataFrame:
     """J6: MERGE ON key — matched → UPDATE, not matched → INSERT.
 
-    Implemented as "latest version wins" dedup over the union: source rows
-    outrank target rows with the same key. ``update_cols`` restricts which
-    columns the source overwrites on match (the documento MERGE updates only
-    id_cliente/monto_* — etl_service.py:452-457); unlisted columns keep the
-    target's value.
+    One window over target ∪ source, partitioned by ``key``: source rows
+    outrank target rows, and rows of equal rank (a key repeated within one
+    side) are ordered by their own values, descending, so every run keeps
+    the same row. The first row of each key is kept — one row per key, even
+    when the source repeats a key. ``update_cols`` restricts which columns
+    the source overwrites on a match (the documento MERGE updates only
+    id_cliente/monto_* — etl_service.py:452-457): when the kept row comes
+    from the source and the key has a target row, every other column takes
+    the target's value (the last row of the window). An inserted row keeps
+    all of its source values. Both sides carry full rows: ``source`` must
+    hold every column of ``target``.
     """
-    if update_cols is None:
-        src = source.select(target.columns)
-        ranked = target.withColumn("_rank", F.lit(0)).unionByName(
-            src.withColumn("_rank", F.lit(1))
-        )
-        w = Window.partitionBy(key).orderBy(F.col("_rank").desc())
-        return (
-            ranked.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rank", "_rn")
-        )
-    # Column-subset update: full-outer join old+new, pick per column.
-    value_cols = [c for c in target.columns if c != key]
-    src_cols = [c for c in value_cols if c in set(source.columns)]
-    t = target.withColumn("_t_exists", F.lit(True)).alias("t")
-    s = (
-        source.select(key, *src_cols)
-        .withColumn("_s_exists", F.lit(True))
-        .alias("s")
+    cols = target.columns
+    ranked = target.withColumn("_rank", F.lit(0)).unionByName(
+        source.select(cols).withColumn("_rank", F.lit(1))
     )
-    joined = t.join(s, on=F.col(f"t.{key}") == F.col(f"s.{key}"), how="full_outer")
-    s_exists = F.coalesce(F.col("s._s_exists"), F.lit(False))
-    t_exists = F.coalesce(F.col("t._t_exists"), F.lit(False))
-    out = [F.coalesce(F.col(f"t.{key}"), F.col(f"s.{key}")).alias(key)]
-    for c in value_cols:
-        s_val = F.col(f"s.{c}") if c in src_cols else F.lit(None)
-        if c in update_cols:
-            # matched or inserted → source value (MERGE SET assigns even NULL);
-            # target-only rows keep their value.
-            out.append(F.when(s_exists, s_val).otherwise(F.col(f"t.{c}")).alias(c))
-        else:
-            # non-updated column: target value survives a match; new rows get
-            # the source value (INSERT lists all columns, etl_service.py:458-467).
-            out.append(F.when(t_exists, F.col(f"t.{c}")).otherwise(s_val).alias(c))
-    return joined.select(*out)
+    w = Window.partitionBy(key).orderBy(
+        F.col("_rank").desc(), *[F.col(c).desc() for c in cols if c != key]
+    )
+    kept = set() if update_cols is None else set(cols) - set(update_cols) - {key}
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    matched = F.last("_rank").over(whole) < F.col("_rank")
+    out = [
+        F.when(matched, F.last(c).over(whole)).otherwise(F.col(c)).alias(c)
+        if c in kept
+        else F.col(c)
+        for c in cols
+    ]
+    return (
+        ranked.select(*out, F.row_number().over(w).alias("_rn"))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
 
 
 def delete_insert(target: DataFrame, source: DataFrame, key: str) -> DataFrame:
     """K3: DELETE rows whose key ∈ source keys, then INSERT source
     (etl_service.py:296-325) — anti-join + unionByName. Same end state as
-    ``upsert_latest_wins`` when source has full rows."""
+    ``upsert_latest_wins`` when each key appears at most once in the source
+    and in the target; a repeated source key is inserted once per row."""
     survivors = target.join(source.select(key).distinct(), on=key, how="left_anti")
     return survivors.unionByName(source.select(target.columns))

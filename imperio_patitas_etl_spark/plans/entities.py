@@ -26,7 +26,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from imperio_patitas_etl_spark.functions import cleaning as c
 from imperio_patitas_etl_spark.operators.dedup import dedup_first_wins
@@ -158,12 +157,7 @@ def transform_products(
     deduped = dedup_first_wins(
         active, "variant_id", [F.col(order_col), F.col("v_pos")]
     )
-    w = Window.partitionBy("product_id").orderBy("v_pos")
-    candidate = (
-        deduped.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    candidate = dedup_first_wins(deduped, "product_id", [F.col("v_pos")])
 
     priced = broadcast_lookup(
         candidate,

@@ -326,8 +326,10 @@ class ParquetWarehouse:
         not matched → INSERT. Idempotent — re-running with the same source
         yields the same table (scheduler_endpoints.py:71-125).
 
-        An unpartitioned table is merged latest-wins (operators/upsert.py)
-        and swapped in whole. A partitioned table merges only the
+        The merge is ``upsert_latest_wins`` (operators/upsert.py): the table
+        keeps one row per key, and a key the source repeats is stored once,
+        as the same row on every run. An unpartitioned table is merged and
+        swapped in whole. A partitioned table merges only the
         partitions its source touches (``_upsert_partitioned``); every
         touched partition is rewritten, changed or not.
         """

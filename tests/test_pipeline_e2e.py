@@ -222,3 +222,29 @@ def test_column_subset_update_documento(pipeline, spark):
     assert row["id_cliente"] == 999      # updated column
     assert row["monto_neto"] == 2000.0   # updated column
     assert row["folio"] == 7             # NOT in update set → target wins
+
+
+@pytest.mark.parametrize("partitioned", [False, True])
+def test_repeated_document_is_stored_once(spark, tmp_path, partitioned):
+    """A documents batch that carries one document twice (with its detail
+    lines) stores each header and line once, and a re-run leaves both
+    tables unchanged."""
+    docs = RAW_DOCS + [RAW_DOCS[0]]
+    pipe = EtlPipeline(
+        spark=spark,
+        warehouse=ParquetWarehouse(spark, str(tmp_path / "wh"), partitioned=partitioned),
+        sources={"documents": lambda: spark.createDataFrame(docs, DOC_SCHEMA)},
+    )
+    tables = ("documento_venta", "detalle_documento")
+
+    def snapshot():
+        return {t: sorted(map(tuple, pipe.warehouse.read(t).collect())) for t in tables}
+
+    pipe.sync("documents")
+    first = snapshot()
+    ids = [r[0] for r in first["documento_venta"]]
+    lines = [r[0] for r in first["detalle_documento"]]
+    assert sorted(ids) == [10, 11, 14]
+    assert sorted(lines) == [91, 92, 95]
+    pipe.sync("documents")
+    assert snapshot() == first

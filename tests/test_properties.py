@@ -1,6 +1,7 @@
 """Property-based invariants (SURVEY.md §5.4) over random row sets:
 
-- upsert never yields duplicate keys, and is idempotent;
+- upsert never yields duplicate keys, and is idempotent — also when
+  either side repeats a key, with or without a column-subset update;
 - validation partitions the input (accepted + rejected = input, and every
   rejected row violates at least one declared rule);
 - delete+insert and latest-wins upsert agree on full-row sources.
@@ -49,6 +50,21 @@ def test_upsert_no_dup_keys_and_idempotent(spark, target, source):
     assert len(keys) == len(set(keys))
     assert set(keys) == {r[0] for r in target} | {r[0] for r in source}
     again = upsert_latest_wins(out, s, "k")
+    assert sorted(map(tuple, again.collect())) == sorted(map(tuple, out.collect()))
+
+
+@_settings
+@given(target=rows, source=rows, update_cols=st.sampled_from([None, ["v"]]))
+def test_upsert_repeated_keys_keep_one_row_and_rerun_stably(
+    spark, target, source, update_cols
+):
+    # no dedup: either side may repeat a key, with different values
+    t, s = _df(spark, target), _df(spark, source)
+    out = upsert_latest_wins(t, s, "k", update_cols)
+    keys = [r["k"] for r in out.select("k").collect()]
+    assert len(keys) == len(set(keys))
+    assert set(keys) == {r[0] for r in target} | {r[0] for r in source}
+    again = upsert_latest_wins(out, s, "k", update_cols)
     assert sorted(map(tuple, again.collect())) == sorted(map(tuple, out.collect()))
 
 
