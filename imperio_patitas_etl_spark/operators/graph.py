@@ -23,9 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from imperio_patitas_etl_spark.operators.checkpoint import (
-    CheckpointGenerations,
-)
+from imperio_patitas_etl_spark.operators.checkpoint import release
 
 STAR_MAX_ROUNDS = 40
 
@@ -81,22 +79,18 @@ def connected_components_star(docs: DataFrame, edges: DataFrame) -> DataFrame:
     Convergence: both edge sets are DISTINCT, so set equality is
     |cur| = |nxt| AND nxt\\cur = ∅ — ONE aggregate per round over a left
     join of the new checkpoint against the old yields both the
-    cardinality and the novel-edge count (r19: the r18 count +
-    ``exceptAll`` probe was two jobs on converged rounds; on the tiny
-    rep graphs the cluster keys feed this loop, per-job overhead IS the
-    round cost)."""
-    gens = CheckpointGenerations(edges.sparkSession)
+    cardinality and the novel-edge count (a count + ``exceptAll`` probe
+    would be two jobs on converged rounds; on the tiny rep graphs the
+    cluster keys feed this loop, per-job overhead IS the round cost)."""
     cur = (
         edges.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
         .localCheckpoint()
     )
-    gens.mark()
     n_cur = cur.count()
     for _ in range(STAR_MAX_ROUNDS):
         nxt = _small_star(_large_star(cur)).localCheckpoint()
-        gens.mark()
         # both sides distinct ⇒ the left join is row-preserving on nxt:
         # count(*) = |nxt|, unmatched rows = |nxt \ cur|
         probe = (
@@ -116,7 +110,7 @@ def connected_components_star(docs: DataFrame, edges: DataFrame) -> DataFrame:
         n_nxt = probe["n"]
         changed = n_nxt != n_cur or probe["novel"] > 0
         # cur's blocks are dead once the convergence probe has read them
-        gens.release_previous()
+        release(cur)
         cur, n_cur = nxt, n_nxt
         if not changed:
             break

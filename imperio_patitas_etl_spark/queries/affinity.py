@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from imperio_patitas_etl_spark.operators.checkpoint import release
 from imperio_patitas_etl_spark.operators.graph import pagerank_fixed
 from imperio_patitas_etl_spark.operators.reconcile import classify_snapshot_diff
 from imperio_patitas_etl_spark.sources.parquet import load_table
@@ -814,17 +815,11 @@ def q_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the traversal predictable on a 100 TB graph — unbounded reach
     on a connected component is the whole graph."""
     li = load_table(spark, sf_dir, "lineitem")
-    return _khop_from_pairs(spark, _copurchase_pairs(li))
+    return _khop_from_pairs(_copurchase_pairs(li))
 
 
-def _khop_from_pairs(spark: SparkSession, copurchase: DataFrame) -> DataFrame:
+def _khop_from_pairs(copurchase: DataFrame) -> DataFrame:
     """`khop_reach` downstream of the pair relation."""
-    from imperio_patitas_etl_spark.operators.checkpoint import (
-        CheckpointGenerations,
-        persistent_rdd_ids,
-        release_rdds,
-    )
-
     edges = (
         copurchase
         .filter(F.col("pair_cnt") >= MIN_PAIR_SUPPORT)
@@ -838,24 +833,18 @@ def _khop_from_pairs(spark: SparkSession, copurchase: DataFrame) -> DataFrame:
     # sf0.1 (guide §2.4/§5 — reuse demands materialization; Catalyst does
     # not CSE across DataFrame references, and only the loop's OWN rounds
     # were checkpointed, same lesson as connected_components' edge set).
-    # Checkpointed BEFORE generation tracking starts (the
-    # CheckpointGenerations contract above) and released once the loop's
-    # final visited checkpoint no longer reads it.
-    _before_sym = persistent_rdd_ids(spark)
+    # Released once the loop's final visited checkpoint no longer reads it.
     sym = edges.select(
         F.col("part_a").alias("src"), F.col("part_b").alias("dst")
     ).unionAll(
         edges.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst"))
     ).localCheckpoint()
-    _sym_ids = persistent_rdd_ids(spark) - _before_sym
     nodes = sym.select("src").distinct()
-    gens = CheckpointGenerations(spark)
     frontier = (
         nodes.filter(F.col("src") % KHOP_SEED_MOD == 0)
         .select("src", F.lit(0).cast("long").alias("hops"))
         .localCheckpoint()
     )
-    gens.mark()
     visited = frontier
     for hop in range(1, KHOP_MAX + 1):
         nxt = (
@@ -865,15 +854,13 @@ def _khop_from_pairs(spark: SparkSession, copurchase: DataFrame) -> DataFrame:
             .join(visited.select("src"), "src", "left_anti")
             .select("src", F.lit(hop).cast("long").alias("hops"))
         )
-        visited = visited.unionAll(nxt).localCheckpoint()
-        gens.mark()
-        gens.release_previous()
+        prev, visited = visited, visited.unionAll(nxt).localCheckpoint()
+        release(prev)
         # re-derive the frontier FROM the new checkpoint — keeping `nxt`
         # would lazily reference the generation just released
         frontier = visited.filter(F.col("hops") == hop)
-    # the returned plan reads only the final visited checkpoint — the
-    # edge blocks are dead here
-    release_rdds(spark, _sym_ids)
+    # the returned plan reads only the final visited checkpoint
+    release(sym)
     return visited.select(F.col("src").alias("part_id"), "hops")
 
 

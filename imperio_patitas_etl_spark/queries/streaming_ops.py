@@ -85,7 +85,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys counted per event type (streaming/events.py:dedup_counts; the
     streaming path uses dropDuplicatesWithinWatermark and is asserted
     stream ≡ batch in tests/test_streaming.py)."""
-    return dedup_counts(load_table(spark, sf_dir, "events"), streaming=False)
+    return dedup_counts(load_table(spark, sf_dir, "events"))
 
 
 ORACLE_STREAM_DEDUP = """
@@ -311,8 +311,7 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics, pre-grouped."""
     from imperio_patitas_etl_spark.streaming.events import clicks_after_errors
 
-    e = load_table(spark, sf_dir, "events")
-    return clicks_after_errors(e, streaming=False)
+    return clicks_after_errors(load_table(spark, sf_dir, "events"))
 
 
 ORACLE_STREAM_INTERVAL_JOIN = """
@@ -344,9 +343,7 @@ def q_stream_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         rolling_distinct_daily,
     )
 
-    return rolling_distinct_daily(
-        load_table(spark, sf_dir, "events"), streaming=False
-    )
+    return rolling_distinct_daily(load_table(spark, sf_dir, "events"))
 
 
 ORACLE_STREAM_ROLLING = """

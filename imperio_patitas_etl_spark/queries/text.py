@@ -27,11 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from imperio_patitas_etl_spark.operators.checkpoint import (
-    CheckpointGenerations,
-    persistent_rdd_ids,
-    release_rdds,
-)
+from imperio_patitas_etl_spark.operators.checkpoint import release
 from imperio_patitas_etl_spark.sources.parquet import load_table
 
 # MinHash constants — fixed, mirrored literally into the oracle SQL.
@@ -260,16 +256,9 @@ def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "lang", F.expr(_shingles_of("__t")).alias("shingles"))
 
 
-def _ngram_pair_build(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, set[int]]:
-    """Shared pair-build stage for the ngram-Jaccard family: returns the
-    lazy near-dup-pair plan AND the block ids of the shingle checkpoint
-    the plan reads (see below). Split out in r9 so ``dup_clusters`` /
-    ``dup_clusters_star`` / ``corpus_keep_list`` can release those blocks
-    the moment connected-components materializes its edge checkpoint
-    (VERDICT r8 item 1: the composed keep-list plan was paying the
-    shingle pipeline ~4×).
+def _ngram_pair_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pair-build stage of the ``ngram_jaccard_dedup`` key: the lazy
+    near-dup-pair plan over the grouped build.
 
     The shingled relation is ``localCheckpoint``-ed ONCE: it feeds the
     document-frequency aggregate, the prefix index, and BOTH verify
@@ -277,13 +266,9 @@ def _ngram_pair_build(
     checkpointed, the split+transform+array_distinct pipeline ran ~4× per
     query (measured 4.4 s → 1.8 s at sf0.1 for the standalone key). At
     warehouse scale this materialization is the write-once AllPairs index
-    table SCALE.md describes; in-session it is block-manager-backed and
-    the CALLER owns the release:
-
-    - cluster-family callers release after CC checkpoints the edge set;
-    - the standalone registry key leaves the blocks alive because its
-      RETURNED plan reads them (one bounded shingle table per call, the
-      same lifetime contract as the CC final-label checkpoint).
+    table SCALE.md describes; in-session it is block-manager-backed, and
+    the returned plan reads it, so its blocks outlive the call until the
+    harness frees them.
 
     IDENTICAL SHINGLE SETS ARE COLLAPSED FIRST (the minhash hot-bucket
     fix applied to the AllPairs key): Jaccard is a function of the
@@ -303,19 +288,15 @@ def _ngram_pair_build(
     term scale with DISTINCT texts only while the emitted clique pairs
     stay output-bounded.
     """
-    groups, groups_ids, member_map, member_ids = _grouped_build(
-        spark, _shingled(spark, sf_dir)
-    )
-    return _pairs_from_grouped(groups, member_map), groups_ids | member_ids
+    groups, member_map = _grouped_build(_shingled(spark, sf_dir))
+    return _pairs_from_grouped(groups, member_map)
 
 
-def _grouped_build(
-    spark: SparkSession, s: DataFrame
-) -> tuple[DataFrame, set[int], DataFrame, set[int]]:
+def _grouped_build(s: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Group-collapse + checkpoint stage over a shingled relation ``s``
     (doc_id, lang, shingles) — the ONE build path of the ngram-Jaccard
     family. The registry keys pass ``_shingled(spark, sf_dir)``.
-    Returns ``(groups, groups_ids, member_map, member_ids)``:
+    Returns ``(groups, member_map)``:
 
     - ``groups`` — ONE wide (doc_id, lang, shingles) row per distinct
       (lang, shingle-set) group (the representative rows), checkpointed;
@@ -341,12 +322,9 @@ def _grouped_build(
     member map is row-unique per doc_id, but a documents table with a
     repeated doc_id (the parquet is outside input) would otherwise emit
     its rep row once per copy and every pair of that rep twice."""
-    _before = persistent_rdd_ids(spark)
     narrow_ck = _narrow_of(s).localCheckpoint()
-    _n_ids = persistent_rdd_ids(spark) - _before
     member_map = _member_map(narrow_ck).localCheckpoint()
-    member_ids = persistent_rdd_ids(spark) - _before - _n_ids
-    release_rdds(spark, _n_ids)
+    release(narrow_ck)
     groups = (
         s.join(
             member_map.filter(F.col("doc_id") == F.col("gid")).select("doc_id"),
@@ -355,10 +333,7 @@ def _grouped_build(
         .dropDuplicates(["doc_id"])
         .localCheckpoint()
     )
-    groups_ids = (
-        persistent_rdd_ids(spark) - _before - _n_ids - member_ids
-    )
-    return groups, groups_ids, member_map, member_ids
+    return groups, member_map
 
 
 def _clusters_via_rep_cc(
@@ -367,14 +342,13 @@ def _clusters_via_rep_cc(
     """Duplicate clustering for the cluster consumers (``dup_clusters``
     / ``dup_clusters_star`` / ``corpus_keep_list``): connected
     components over the REPRESENTATIVE graph only, members labeled
-    through their group id afterwards. This supersedes the r17 star-edge
-    build (rep pairs ∪ (gid, member) star edges, all fed into the CC
-    loop): the star edges carried one row PER QUALIFYING DOCUMENT
-    through every CC round — O(rounds · n) shuffled rows at 100 TB just
-    to tell each member what its gid already says. Here the iterative
-    loop sees only the near-dup REP pairs (the output-bounded AllPairs
-    result), and membership is applied once, outside the loop, as a
-    single equi-join on gid (r18; guide §2.3 — shuffle keys and
+    through their group id afterwards. Feeding (gid, member) star
+    edges into the CC loop instead would carry one row PER QUALIFYING
+    DOCUMENT through every round — O(rounds · n) shuffled rows at 100 TB
+    just to tell each member what its gid already says. Here the
+    iterative loop sees only the near-dup REP pairs (the output-bounded
+    AllPairs result), and membership is applied once, outside the loop,
+    as a single equi-join on gid (guide §2.3 — shuffle keys and
     metadata, move the bulk exactly once).
 
     PROOF the output equals CC over the full pair list (the oracle's
@@ -392,14 +366,12 @@ def _clusters_via_rep_cc(
     tests/test_cc_star_edges.py and end-to-end on real data.
 
     Lifetime: the returned plan reads the skinny (doc_id, gid, qual)
-    member checkpoint and the CC label checkpoint; the wide rep arrays
-    (``groups``) are released here the moment the rep pairs are
-    materialized — no wide relation outlives the build (r19: the member
-    qualification flag rides the member-map checkpoint, so the separate
-    qualifying-members checkpoint job is gone too)."""
-    groups, groups_ids, member_map, _member_ids = _grouped_build(
-        spark, _shingled(spark, sf_dir)
-    )
+    member checkpoint and the CC label checkpoint (the star contraction's
+    also reads the rep pairs, through its endpoint seed); the rep-pair
+    checkpoint is left for the harness. The wide rep arrays (``groups``)
+    are released here the moment the rep pairs are materialized — no
+    wide relation outlives the build."""
+    groups, member_map = _grouped_build(_shingled(spark, sf_dir))
     members = member_map.filter("qual").select("doc_id", "gid")
     # rep-pair checkpoint: the AllPairs index+verify pass runs exactly
     # once — both the CC edge input and the endpoint seed read it (an
@@ -409,7 +381,7 @@ def _clusters_via_rep_cc(
         .select("doc_a", "doc_b")
         .localCheckpoint()
     )
-    release_rdds(spark, groups_ids)
+    release(groups)
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     return _labels_from_rep_cc(docs, members, rep_pairs, cc_fn)
 
@@ -702,11 +674,7 @@ def q_ngram_jaccard_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     lexicographic order can land stopword shingles in every prefix. Costs
     one extra count aggregate over the postings plus a per-doc window
     rank — both shuffle-bounded, nothing quadratic."""
-    out, _shingle_ids = _ngram_pair_build(spark, sf_dir)
-    # the returned lazy plan reads the shingle checkpoint from both
-    # verify sides — its blocks stay alive for the session (bounded: one
-    # shingle table per call; cluster-family callers DO release them)
-    return out
+    return _ngram_pair_build(spark, sf_dir)
 
 
 ORACLE_NGRAM_JACCARD = f"""
@@ -1100,25 +1068,16 @@ def q_simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the 15-bit band keyspace (32k values) keeps buckets small as the
     corpus grows (see SIMHASH_NEAR_BITS note).
 
-    The signature relation is ``localCheckpoint``-ed once (r9): both
-    sides of the banded self-join read it and Catalyst does not CSE
-    across self-join subtrees, so un-checkpointed the word-explode +
-    60-bit-vote groupBy ran twice per query (the same lesson as
-    ``_ngram_pair_build``). One narrow row per doc — bounded; the
-    returned plan reads the blocks, same lifetime contract as the
-    standalone ngram key.
-
-    Release contract (ADVICE r9): there is deliberately no in-function
-    release seam — the checkpoint must outlive the returned plan. A
-    composed caller owns release exactly as the ngram cluster family
-    does around ``_ngram_pair_build``: snapshot
-    ``operators.checkpoint.persistent_rdd_ids(spark)`` before the call,
-    diff after, and ``release_rdds`` the difference once every action
-    reading the result has run. Accumulation is bounded at ONE persisted
-    generation (one narrow row per doc) per invocation — pinned by
-    tests/test_plans.py::test_simhash_checkpoint_is_caller_releasable —
-    so the driver's repeated-invocation pattern grows linearly in calls
-    and is fully reclaimable."""
+    The signature relation is ``localCheckpoint``-ed once: both sides of
+    the banded self-join read it and Catalyst does not CSE across
+    self-join subtrees, so un-checkpointed the word-explode + 60-bit-vote
+    groupBy ran twice per query (the same lesson as
+    ``_ngram_pair_build``). One narrow row per doc — bounded. The
+    returned plan reads the blocks, so the function cannot free them;
+    the harness releases them once every action reading the result has
+    run (operators/checkpoint.py). Accumulation is bounded at ONE
+    persisted generation per invocation — pinned by
+    tests/test_plans.py::test_simhash_checkpoint_is_caller_releasable."""
     sigs = _simhash_sigs(spark, sf_dir, SIMHASH_NEAR_BITS).localCheckpoint()
     band_width = SIMHASH_NEAR_BITS // 4
     bands = sigs.select(
@@ -1559,26 +1518,13 @@ def connected_components(docs: DataFrame, edges: DataFrame) -> DataFrame:
     to ``operators/graph.py:connected_components_star`` — the alternating
     large-star/small-star contraction, O(log n) rounds — if diameters
     were unbounded)."""
-    sym = edges.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).union(edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-    # The edge relation is read EVERY round, so it must be materialized
-    # BEFORE generation tracking starts — as a localCheckpoint, not a
-    # persist(): a lazy .persist() cache first registers its RDD during
-    # round 1's checkpoint job, gets attributed to that generation by
-    # CheckpointGenerations.mark(), and is unpersisted mid-loop by
-    # release_previous() — after which every later round (and, via
-    # CacheManager plan-matching, every later CALL in the session)
-    # recomputes the full edge pipeline per round. Measured: the second
-    # dup_clusters run in one session degraded 8 s → 23 s under the
-    # persist() variant; checkpointing first holds both runs at ~8 s.
-    spark = docs.sparkSession
-    _before_sym = persistent_rdd_ids(spark)
-    sym = sym.localCheckpoint()
-    _sym_ids = persistent_rdd_ids(spark) - _before_sym
-    gens = CheckpointGenerations(spark)
+    # the edge relation is read EVERY round: materialize it once
+    sym = (
+        edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+        .union(edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
+        .localCheckpoint()
+    )
     labels = docs.select("doc_id", F.col("doc_id").alias("label")).localCheckpoint()
-    gens.mark()
     prev_sum = labels.agg(F.sum(F.col("label").cast("decimal(38,0)"))).first()[0]
     for _ in range(CC_MAX_ITERS):
         nbr = (
@@ -1587,7 +1533,7 @@ def connected_components(docs: DataFrame, edges: DataFrame) -> DataFrame:
             .groupBy("doc_id")
             .agg(F.min("nbr_label").alias("nbr_min"))
         )
-        labels = (
+        nxt = (
             labels.join(nbr, "doc_id", "left")
             .select(
                 "doc_id",
@@ -1595,20 +1541,18 @@ def connected_components(docs: DataFrame, edges: DataFrame) -> DataFrame:
             )
             .localCheckpoint()
         )
-        gens.mark()
         # the superseded round's blocks die once the new one is
         # materialized (localCheckpoint is eager)
-        gens.release_previous()
+        release(labels)
+        labels = nxt
         cur_sum = labels.agg(F.sum(F.col("label").cast("decimal(38,0)"))).first()[0]
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
     else:
         raise RuntimeError(f"connected_components did not converge in {CC_MAX_ITERS} rounds")
-    # the returned plan reads only the final labels checkpoint — the edge
-    # blocks are dead here (df.unpersist() is a no-op on a checkpointed
-    # frame; the block-id release is the real free)
-    release_rdds(spark, _sym_ids)
+    # the returned plan reads only the final labels checkpoint
+    release(sym)
     return labels.select("doc_id", F.col("label").alias("cluster_id"))
 
 
@@ -1620,9 +1564,8 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     minimum doc_id of its duplicate cluster. Keeping rows where doc_id =
     cluster_id IS the deduplicated corpus; everything else maps to its
     canonical survivor. The CC loop runs on the REPRESENTATIVE graph
-    only — members are labeled through
-    their gid by one join outside the loop (``_clusters_via_rep_cc``,
-    r18; proof there), so the oracle is unchanged while per-round
+    only — members are labeled through their gid by one join outside
+    the loop (``_clusters_via_rep_cc``; proof there), so the oracle is unchanged while per-round
     shuffle volume scales with near-dup rep pairs, not corpus size."""
     return _clusters_via_rep_cc(spark, sf_dir, connected_components)
 
@@ -1651,7 +1594,7 @@ ORACLE_DUP_CLUSTERS = f"""
 def q_dup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same contract as ``dup_clusters`` — (doc_id, cluster_id = min doc_id
     of the duplicate component) over the SAME representative graph
-    (``_clusters_via_rep_cc``, r18) — but the rep-level components come
+    (``_clusters_via_rep_cc``) — but the rep-level components come
     from the alternating large-star/small-star contraction
     (``operators/graph.py:connected_components_star``), the O(log n)-round
     path for graphs whose diameter is unbounded. Both algorithms reach the

@@ -131,9 +131,7 @@ def session_counts(events: DataFrame, gap: str = "30 minutes", watermark: str = 
     )
 
 
-def dedup_counts(
-    events: DataFrame, watermark: str = "2 hours", streaming: bool = True
-) -> DataFrame:
+def dedup_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     """Watermarked stream dedup: at-least-once sources replay rows, so
     near-line pipelines dedup on a business key before aggregating. Key =
     (user_id, event_type, minute bucket); output = distinct-key counts per
@@ -141,17 +139,17 @@ def dedup_counts(
     survives — the property that lets stream (first-arrival wins) and
     batch (arbitrary-survivor dropDuplicates) agree exactly.
 
-    Streaming mode chains two stateful operators (dropDuplicates
-    WithinWatermark → aggregation), supported since Spark 3.5 with a
-    shared watermark; the watermark bounds dedup state, without which
-    100 TB of replayed events means unbounded state."""
+    On a streaming ``events`` frame it chains two stateful operators
+    (dropDuplicatesWithinWatermark → aggregation), supported since Spark
+    3.5 with a shared watermark; the watermark bounds dedup state,
+    without which 100 TB of replayed events means unbounded state."""
     keyed = events.select(
         "user_id",
         "event_type",
         F.date_trunc("minute", F.col("ts")).alias("minute"),
         "ts",
     )
-    if streaming:
+    if events.isStreaming:
         deduped = keyed.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
             ["user_id", "event_type", "minute"]
         )
@@ -165,7 +163,6 @@ def rolling_distinct_daily(
     window: str = "7 days",
     slide: str = "1 day",
     watermark: str = "14 days",
-    streaming: bool = True,
 ) -> DataFrame:
     """Exact trailing-window distinct active users (the WAU curve) as a
     streaming plan: COUNT(DISTINCT) per sliding window is rewritten as
@@ -176,14 +173,14 @@ def rolling_distinct_daily(
     same collapse the batch twin (``rolling_distinct_users``) relies
     on. Output labels the window by its exclusive-end day cast to DATE.
 
-    Batch mode swaps ``dropDuplicatesWithinWatermark`` for plain
-    ``dropDuplicates`` — the count is survivor-independent, so stream
+    On a batch ``events`` frame ``dropDuplicatesWithinWatermark`` becomes
+    plain ``dropDuplicates`` — the count is survivor-independent, so stream
     (first-arrival wins) and batch (arbitrary survivor) agree exactly,
     the same argument as ``dedup_counts``."""
     keyed = events.select(
         "user_id", F.window("ts", window, slide).alias("w"), "ts"
     )
-    if streaming:
+    if events.isStreaming:
         deduped = keyed.withWatermark(
             "ts", watermark
         ).dropDuplicatesWithinWatermark(["user_id", "w"])
@@ -257,19 +254,18 @@ def clicks_after_errors(
     events: DataFrame,
     window: str = "10 minutes",
     watermark: str = "30 minutes",
-    streaming: bool = True,
 ) -> DataFrame:
     """Stream-stream INTERVAL self-join: every click landing inside the
     ``window`` after an error event of the same user — the event-time
     join family (alerts correlation, attribution) Structured Streaming
     serves with bounded state.
 
-    Streaming mode watermarks BOTH sides and bounds the join condition
-    with an event-time range, which is exactly what lets Spark expire
-    state: an error row can only ever match clicks within
+    On a streaming ``events`` frame it watermarks BOTH sides and bounds
+    the join condition with an event-time range, which is exactly what
+    lets Spark expire state: an error row can only ever match clicks within
     [err_ts, err_ts + window), so once the click watermark passes that
     bound the buffered error is dropped (state ∝ watermark × rate, not
-    the stream's history). Batch mode is the same join without
+    the stream's history). On a batch frame it is the same join without
     watermarks — the twin the test compares against; the registry's
     ``range_join`` covers the same semantics through the bin-equi-join
     plan for the batch/backfill path at scale."""
@@ -283,7 +279,7 @@ def clicks_after_errors(
         F.col("ts").alias("click_ts"),
         F.col("value").alias("click_value"),
     )
-    if streaming:
+    if events.isStreaming:
         e = e.withWatermark("err_ts", watermark)
         c = c.withWatermark("click_ts", watermark)
     return e.join(

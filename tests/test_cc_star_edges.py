@@ -59,7 +59,7 @@ def _grouped(spark, docs):
     ).select(
         "doc_id", "lang", F.expr(text._shingles_of("__t")).alias("shingles")
     )
-    groups, _gids, member_map, _mids = text._grouped_build(spark, s)
+    groups, member_map = text._grouped_build(s)
     return groups, member_map
 
 
@@ -149,7 +149,7 @@ def test_member_map_is_row_unique_on_duplicated_doc_id(spark):
             s.schema,
         )
     )
-    groups, _gids, member_map, _mids = text._grouped_build(spark, s)
+    groups, member_map = text._grouped_build(s)
     assert sorted(r.doc_id for r in groups.collect()) == [1, 3]
     pairs = sorted(
         tuple(r) for r in _pairs_from_grouped(groups, member_map).collect()
@@ -185,9 +185,7 @@ def test_registry_cluster_keys_share_components_with_pair_list(spark, sf_dir):
     """End-to-end on real data: the registry cluster key (rep-graph CC)
     equals CC over the full pair list — the clique-vs-rep equivalence on
     the actual corpus, not just the synthetic fixture."""
-    groups, _gids, member_map, _mids = text._grouped_build(
-        spark, _shingled(spark, sf_dir)
-    )
+    groups, member_map = text._grouped_build(_shingled(spark, sf_dir))
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
     want = sorted(
         tuple(r)

@@ -84,15 +84,13 @@ def test_simhash_near_dup_is_banded_equijoin(spark, sf_dir):
 
 
 def test_simhash_checkpoint_is_caller_releasable(spark, sf_dir):
-    """ADVICE r9: ``q_simhash_near_dup`` localCheckpoints its signature
-    relation with no in-function release seam (accepted — the RETURNED
-    plan reads the blocks, the standalone-key contract shared with
-    ``_ngram_pair_build``). This pins the two facts a composed caller
-    relies on: accumulation is bounded at exactly ONE new persisted
-    generation per invocation (the driver's repeated-invocation pattern
-    grows linearly in calls, never per-row), and the documented
-    capture-around-the-call pattern reclaims it once the result is
-    consumed."""
+    """``q_simhash_near_dup`` localCheckpoints its signature relation
+    and cannot free it — the RETURNED plan reads the blocks. This pins
+    the two facts a harness relies on: accumulation is bounded at
+    exactly ONE new persisted generation per invocation (repeated
+    invocations grow linearly in calls, never per-row), and releasing
+    the ids that appeared during the call reclaims it once the result
+    is consumed."""
     from imperio_patitas_etl_spark.operators.checkpoint import (
         persistent_rdd_ids,
         release_rdds,

@@ -31,8 +31,8 @@ def test_stream_batch_schema_identity(spark, sf_dir):
     for fn in (tumbling_counts, session_counts):
         assert fn(stream_in).schema == fn(batch_in).schema
     assert (
-        dedup_counts(stream_in, streaming=True).schema
-        == dedup_counts(batch_in, streaming=False).schema
+        dedup_counts(stream_in).schema
+        == dedup_counts(batch_in).schema
     )
 
 
@@ -55,9 +55,9 @@ def test_stream_dedup_equals_batch(spark, sf_dir):
     """dropDuplicatesWithinWatermark chained into an aggregation (two
     stateful operators) must produce the batch-dedup result — the output
     counts distinct keys, so it can't depend on which duplicate survived."""
-    stream = dedup_counts(read_events_stream(spark, sf_dir), streaming=True)
+    stream = dedup_counts(read_events_stream(spark, sf_dir))
     got = run_stream_to_memory(stream, "t_dedup")
-    want = dedup_counts(read_events_batch(spark, sf_dir), streaming=False)
+    want = dedup_counts(read_events_batch(spark, sf_dir))
     assert _as_set(got) == _as_set(want)
     assert got.count() > 0
 
@@ -164,7 +164,7 @@ def test_stream_stream_interval_join_equals_batch(spark, sf_dir):
         "t_ss_join",
         mode="append",
     )
-    want = clicks_after_errors(read_events_batch(spark, sf_dir), streaming=False)
+    want = clicks_after_errors(read_events_batch(spark, sf_dir))
     assert _as_set(got) == _as_set(want)
     assert got.count() > 0
 
@@ -198,9 +198,9 @@ def test_stream_rolling_distinct_equals_batch(spark, sf_dir):
     )
 
     stream = rolling_distinct_daily(
-        read_events_stream(spark, sf_dir), streaming=True
+        read_events_stream(spark, sf_dir)
     )
     got = run_stream_to_memory(stream, "t_rolling_distinct")
-    want = rolling_distinct_daily(read_events_batch(spark, sf_dir), streaming=False)
+    want = rolling_distinct_daily(read_events_batch(spark, sf_dir))
     assert _as_set(got) == _as_set(want)
     assert got.count() > 0

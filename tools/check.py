@@ -185,6 +185,11 @@ def main() -> int:
         from imperio_patitas_etl_spark.session import get_spark
 
         spark = get_spark("check")
+    from imperio_patitas_etl_spark.operators.checkpoint import (
+        persistent_rdd_ids,
+        release_rdds,
+    )
+
     con = duckdb.connect()
     # pin the session TZ like the Spark side (session.py): DuckDB's
     # TIMESTAMPTZ→TIMESTAMP casts otherwise use the HOST timezone, shifting
@@ -202,6 +207,7 @@ def main() -> int:
             continue
         n_checked += 1
         t0 = time.time()
+        before = persistent_rdd_ids(spark)
         try:
             sdf = fn(spark, sf_dir)
             s_cols = sdf.columns
@@ -211,6 +217,10 @@ def main() -> int:
             failures.append(key)
             print(f"FAIL {key}: spark error: {e}")
             continue
+        finally:
+            # the rows are collected: free the checkpoints the key left
+            # behind, so later keys do not schedule around them
+            release_rdds(spark, persistent_rdd_ids(spark) - before)
         if key not in oracles:
             print(f"ok   {key}: rows-only ({len(s_rows)} rows, {time.time()-t0:.1f}s)")
             continue
