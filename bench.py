@@ -4,9 +4,8 @@ compact JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {key: sec for the 10 slowest keys}, "sf": ..., "n_keys": ...,
 "all_total": ..., "queries_full": "BENCH_out*.json"}. The FULL per-key
 timing map is written to BENCH_out*.json (mode-suffixed); stdout stays
-under 1.5 kB so the driver's stdout-tail capture always parses it
-(VERDICT r9 item 2 — the 6 kB full map got front-clipped three rounds
-running).
+under 1.5 kB so the driver's stdout-tail capture always parses it (a
+6 kB full map gets front-clipped).
 
 Each query is executed to completion through a `noop`-format write: every
 result column is fully computed and materialized executor-side, so Catalyst
@@ -98,7 +97,7 @@ HEADLINE = [
     "asof_join",
     "range_join",
     "salted_join_skew",
-    # r7c scan/statistics + behavioral tier
+    # scan/statistics + behavioral tier
     "resample_ffill",
     "incremental_agg_merge",
     "rolling_distinct_users",
@@ -118,60 +117,58 @@ HEADLINE = [
     "bom_rollup",
     "khop_reach",
     "scd2_time_weighted",
-    # r7d sketch/temporal/replication/LM tier
+    # sketch/temporal/replication/LM tier
     "hll_distinct_sketch",
     "interval_concurrency",
     "cdc_apply",
     "table_checksum_blocks",
     "bigram_logprob",
-    # r7e sampling/estimation/trend tier
+    # sampling/estimation/trend tier
     "weighted_sample_aes",
     "kmv_join_cardinality",
     "group_linear_fit",
-    # r7f optimizer-diagnostics tier
+    # optimizer-diagnostics tier
     "key_skew_audit",
     "join_strategy_advisor",
     "group_corr",
     "funnel_time_bounded",
-    # r7h robust-stats/experimentation tier
+    # robust-stats/experimentation tier
     "trimmed_mean",
     "ab_test_summary",
-    # r7i exact linear-algebra + sketch-merge tier
+    # exact linear-algebra + sketch-merge tier
     "power_iteration_pc",
     "hll_merge_audit",
-    # r7j rolling-robust-stats + experiment-health tier
+    # rolling-robust-stats + experiment-health tier
     "rolling_median_daily",
     "srm_check",
     "cusum_changepoint",
     "dow_seasonal_residual",
     "lag_features",
-    # r7m multimodal plumbing completion
+    # multimodal plumbing completion
     "multimodal_frame_sample",
     "multimodal_resize_stub",
-    # r7n retrieval evaluation
+    # retrieval evaluation
     "ndcg_eval",
 ]
 
 
 def main(argv: list[str] | None = None) -> None:
-    # Modes (VERDICT r6 items 5/7), parsed via argparse (r15 — the last
-    # hand-rolled sys.argv slicer; a typo'd --al used to be silently
-    # dropped, turning an intended full-registry sf1 sweep into a
-    # headline-only one):
+    # Modes, parsed via argparse so a typo'd --al is an error instead of
+    # silently turning an intended full-registry sf1 sweep into a
+    # headline-only one:
     #   (default)     sweep EVERY registry key at $SPARK_GRAFT_SF_DIR —
     #                 HEADLINE order first, the unbenched tier after — so
     #                 regressions in the trivial-tier keys are visible in
-    #                 every BENCH_r{N}. `value` stays the HEADLINE subtotal
-    #                 (the baseline-comparable metric, same key set and
-    #                 meaning as every prior round); the full-registry sum
-    #                 is reported separately as `all_total`.
-    #   --headline    HEADLINE keys only (the pre-r7 default).
+    #                 every sweep. `value` stays the HEADLINE subtotal
+    #                 (the baseline-comparable metric); the full-registry
+    #                 sum is reported separately as `all_total`.
+    #   --headline    HEADLINE keys only.
     #   --keys a,b    the named registry keys only, in registry order;
     #                 with --repeats N this is the per-key min-of-N probe.
     #   --sf1 [dir]   standing scale gate: build the replicated sf1 tree
     #                 (tools/make_sf1.py) if absent, run HEADLINE there;
     #                 add --all to sweep the FULL registry at sf1 (the
-    #                 per-key 10x-data ratio record, VERDICT r7 item 6).
+    #                 per-key 10x-data ratio record).
     import argparse
 
     ap = argparse.ArgumentParser(
@@ -216,9 +213,8 @@ def main(argv: list[str] | None = None) -> None:
         default=1,
         help="re-time each key N times (N-1 extra full sweep passes) and "
         "add per-key min/median to BENCH_out*.json; the default single "
-        "pass and every existing output field are unchanged (r19 — this "
-        "box's minute-scale noise makes single-shot sweeps unusable as "
-        "round-over-round evidence)",
+        "pass and every existing output field are unchanged (minute-scale "
+        "host noise makes single-shot sweeps unusable as A/B evidence)",
     )
     opts = ap.parse_args(argv)
     if opts.repeats < 1:
@@ -239,10 +235,10 @@ def main(argv: list[str] | None = None) -> None:
         if unknown:
             ap.error(f"unknown registry keys: {' '.join(unknown)}")
 
-    # Lossless driver capture (VERDICT r8 item 4): BENCH_r07/r08.json both
-    # lost the result header to stdout-tail truncation because JVM startup
-    # noise (Ivy, log4j banner, SparkContext INFO lines before
-    # setLogLevel lands) shares fd 1 with the result line. Park the real
+    # Lossless driver capture: a result header can be lost to
+    # stdout-tail truncation because JVM startup noise (Ivy, log4j
+    # banner, SparkContext INFO lines before setLogLevel lands) shares
+    # fd 1 with the result line. Park the real
     # stdout on a duplicate fd and point fd 1 at stderr for the WHOLE run
     # — the JVM inherits the redirected fd — then write the single JSON
     # result line to the saved fd at the end. stdout therefore carries
@@ -294,10 +290,9 @@ def main(argv: list[str] | None = None) -> None:
     # downstream shapes (broadcast stratum-total join + integer-expr
     # filter = pps_systematic_sample; crossJoin(broadcast(spec)) + join
     # on (stratum, rank) = group_quantiles_exact / dq_anomaly_mad).
-    # Warming only the range-shuffle stage (the pre-r11 warmup) left the
-    # consumer stages cold, and their first-run codegen read as a 2-3x
-    # phantom regression on whichever of the two keys ran first in every
-    # driver sweep (VERDICT r10 item 3).
+    # Warming only the range-shuffle stage leaves the consumer stages
+    # cold, and their first-run codegen reads as a 2-3x phantom
+    # regression on whichever of the two keys runs first in a sweep.
     from imperio_patitas_etl_spark.operators.prefix_sum import (
         partitioned_prefix_sum,
     )
@@ -307,9 +302,9 @@ def main(argv: list[str] | None = None) -> None:
         (F.col("id") % 4).alias("s"), "id", F.lit(1).alias("w")
     )
     cum = partitioned_prefix_sum(tiny, "s", ["id"], "w", "cum", 8)
-    # totals from the INPUT relation, mirroring the r18 consumers
-    # (pps/equi-depth/quantiles now derive stratum totals without a
-    # second Arrow pass over the scan output)
+    # totals from the INPUT relation, mirroring the consumers
+    # (pps/equi-depth/quantiles derive stratum totals without a second
+    # Arrow pass over the scan output)
     tot = tiny.groupBy("s").agg(F.sum("w").alias("t"))
     cum.join(F.broadcast(tot), "s").filter(
         F.expr("(2*cum + t - 1) div (2*t) >= 1")
@@ -336,23 +331,19 @@ def main(argv: list[str] | None = None) -> None:
     # any one key are separated by a whole sweep and a host-noise burst
     # cannot poison all of them at once. Pass 0 is the single-shot record
     # printed on stdout; min/median per key go only to the durable
-    # BENCH_out*.json. Each key's query-owned checkpoint blocks are
+    # BENCH_out*.json. The checkpoints each key's result reads are
     # released after its write, outside its timing, so every pass and
     # every key starts from the same block-manager state.
-    from imperio_patitas_etl_spark.operators.checkpoint import (
-        persistent_rdd_ids,
-        release_rdds,
-    )
+    from imperio_patitas_etl_spark.operators.checkpoint import release_plan
 
     rep_ts: dict[str, list[float]] = {k: [] for k in keys}
     for _ in range(opts.repeats):
         for key in keys:
-            before = persistent_rdd_ids(spark)
             t0 = time.perf_counter()
             df = qs[key](spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             rep_ts[key].append(round(time.perf_counter() - t0, 3))
-            release_rdds(spark, persistent_rdd_ids(spark) - before)
+            release_plan(df)
     timings = {k: v[0] for k, v in rep_ts.items()}
 
     headline_total = round(
@@ -380,11 +371,10 @@ def main(argv: list[str] | None = None) -> None:
         )
         if run_all:
             out["all_total_min"] = round(sum(q_min.values()), 3)
-    # Compact stdout variant (VERDICT r9 item 2): BENCH_r07-r09.json all
-    # came back `"parsed": null` because the full per-key map is ~6 kB and
-    # the driver's stdout-tail capture (~2 kB) clips its FRONT, so the line
-    # can never parse. stdout therefore carries a summary small enough to
-    # survive any tail window — same contract shape, but `queries` holds
+    # Compact stdout variant: the full per-key map is ~6 kB and the
+    # driver's stdout-tail capture (~2 kB) clips its FRONT, so that line
+    # would parse as null. stdout therefore carries a summary small
+    # enough to survive any tail window — same contract shape, but `queries` holds
     # only the top-10 slowest keys; the full map lives in the committed
     # BENCH_out*.json (`queries_full` names the file).
     stdout_out = dict(out)
@@ -396,9 +386,9 @@ def main(argv: list[str] | None = None) -> None:
     top10 = sorted(timings.items(), key=lambda kv: -kv[1])[:10]
     stdout_out["queries"] = dict(top10)
     stdout_out["n_keys"] = len(timings)
-    # Durable record (VERDICT r7 item 3; mode-suffixed per ADVICE r8):
-    # BENCH_out.json is the driver-comparable default sweep; other modes
-    # write their own file so a --sf1 run can't clobber the sf0.1 record.
+    # Durable record, mode-suffixed: BENCH_out.json is the
+    # driver-comparable default sweep; other modes write their own file
+    # so a --sf1 run can't clobber the sf0.1 record.
     if opts.keys is not None:
         mode = "sf1_keys" if sf1_mode else "keys"
     elif sf1_mode:
@@ -432,10 +422,10 @@ def fit_stdout_line(
     top-5 → top-3 → none) until the line fits ``limit`` bytes.
 
     The line MUST fit the driver's ~2 kB stdout-tail capture or it
-    front-clips and parses as null (BENCH_r07-r09 lesson). The previous
-    guard was a bare assert — stripped under ``python -O``, and when it
-    fired it ate the round's stdout record AFTER the durable-file write —
-    so this always returns an emittable line instead (ADVICE r10)."""
+    front-clips and parses as null. A bare assert would be stripped under
+    ``python -O``, and when it fired it would eat the stdout record AFTER
+    the durable-file write — so this always returns an emittable line
+    instead."""
     line = json.dumps(stdout_out) + "\n"
     for n_top in (5, 3, 0):
         if len(line) < limit:
@@ -443,7 +433,7 @@ def fit_stdout_line(
         stdout_out["queries"] = dict(top_slowest[:n_top])
         line = json.dumps(stdout_out) + "\n"
     if len(line) >= limit:
-        # Last resort (ADVICE r11): even with the per-key map stripped the
+        # Last resort: even with the per-key map stripped the
         # line is oversize — some non-queries field ballooned — so emit
         # only the headline fields; a minimal parseable record beats a
         # front-clipped null.

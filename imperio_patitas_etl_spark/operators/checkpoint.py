@@ -16,12 +16,13 @@ exactly the blocks ``df`` names — a superseded loop round once the next
 round is materialized and every action reading the old one has run, an
 intermediate once the checkpoint built from it exists. It cannot free a
 cache or checkpoint it does not name. Inside a query, every loop frees
-its superseded rounds and every build frees its intermediates. The
-harness (``bench.py``, ``tools/check.py``, the perfbench sweep) frees
-the rest after each key: the checkpoints the returned plan reads, and
-the edge checkpoints the cluster keys hand to connected components. It
-diffs ``persistent_rdd_ids`` around the call and passes the difference
-to ``release_rdds``.
+its superseded rounds and every build frees every checkpoint its result
+does not read, so a key leaves persisted exactly the checkpoints its
+returned plan reads. The harness (``bench.py``, ``tools/check.py``,
+``tools/dump_plans.py``, ``tools/scaling_curve.py``) frees those after
+consuming the frame with ``release_plan``. ``release_plan`` frees every
+checkpoint a plan reads, so inside a query it may only be called on a
+frame nothing else will read.
 """
 
 from __future__ import annotations
@@ -38,6 +39,23 @@ def release(*frames: DataFrame) -> None:
         if plan.nodeName() != "LogicalRDD" or not plan.rdd().isCheckpointed():
             raise ValueError(f"not a checkpointed frame: {plan.nodeName()}")
         plan.rdd().unpersist(False)
+
+
+def release_plan(df: DataFrame) -> set[int]:
+    """Unpersist (non-blocking) every checkpoint ``df``'s plan reads —
+    each ``LogicalRDD`` leaf over a checkpointed RDD, subqueries
+    included — and return their RDD ids. Other ``LogicalRDD`` leaves
+    (a ``createDataFrame`` over local rows) are left alone."""
+    freed: set[int] = set()
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "LogicalRDD" and node.rdd().isCheckpointed():
+            node.rdd().unpersist(False)
+            freed.add(node.rdd().id())
+        for nodes in (node.children(), node.subqueries()):
+            stack += [nodes.apply(i) for i in range(nodes.size())]
+    return freed
 
 
 def persistent_rdd_ids(spark: SparkSession) -> set[int]:

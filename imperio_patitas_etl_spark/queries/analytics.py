@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from imperio_patitas_etl_spark.functions.cleaning import epoch_us
+from imperio_patitas_etl_spark.operators.checkpoint import release_plan
 from imperio_patitas_etl_spark.operators.prefix_sum import (
     partitioned_prefix_sum,
 )
@@ -1340,31 +1341,40 @@ def q_dq_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Group sizes are identical for both median passes (dev has exactly
     # one row per event), so ONE counts relation serves both; and the
-    # 5-row median/MAD tables are localCheckpoint-ed because each is
+    # 5-row median/MAD tables become driver rows because each is
     # referenced twice (dev build + final projection; mad pick + final
     # projection) — un-materialized, every reference re-ran its whole
     # prefix-scan pipeline including the Arrow pass (16 MapInPandas / 26
     # Exchange nodes in the static plan,
     # plans/r18/dq_anomaly_mad_before.txt; now 2 MapInPandas — one per
     # pass — with the final aggregate reading the Python-free dev
-    # relation). Guide §4.1/§3.3.
+    # relation). Guide §4.1/§3.3. Once collected, nothing reads a
+    # pass's prefix-scan checkpoint, so it is freed at once.
     counts = e.groupBy("event_type").agg(F.count("*").alias("n"))
-    med = _exact_group_median(
-        e, "event_type", "vm", "med_micro", counts=counts
-    ).localCheckpoint()
+
+    def driver_rows(plan: DataFrame) -> DataFrame:
+        rows = spark.createDataFrame(plan.collect(), plan.schema)
+        release_plan(plan)
+        return rows
+
+    med = driver_rows(
+        _exact_group_median(e, "event_type", "vm", "med_micro", counts=counts)
+    )
     dev = e.join(F.broadcast(med), "event_type").select(
         "event_id",
         "event_type",
         "vm",
         F.abs(F.col("vm") - F.col("med_micro")).alias("dev"),
     )
-    mad = _exact_group_median(
-        dev.select("event_id", "event_type", F.col("dev").alias("vm")),
-        "event_type",
-        "vm",
-        "mad_micro",
-        counts=counts,
-    ).localCheckpoint()
+    mad = driver_rows(
+        _exact_group_median(
+            dev.select("event_id", "event_type", F.col("dev").alias("vm")),
+            "event_type",
+            "vm",
+            "mad_micro",
+            counts=counts,
+        )
+    )
     return (
         dev.join(F.broadcast(mad), "event_type")
         .groupBy("event_type")

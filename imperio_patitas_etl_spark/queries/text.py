@@ -366,11 +366,12 @@ def _clusters_via_rep_cc(
     tests/test_cc_star_edges.py and end-to-end on real data.
 
     Lifetime: the returned plan reads the skinny (doc_id, gid, qual)
-    member checkpoint and the CC label checkpoint (the star contraction's
-    also reads the rep pairs, through its endpoint seed); the rep-pair
-    checkpoint is left for the harness. The wide rep arrays (``groups``)
-    are released here the moment the rep pairs are materialized — no
-    wide relation outlives the build."""
+    member checkpoint and the CC label checkpoint; the star
+    contraction's also reads the rep pairs, through its endpoint seed.
+    Plain CC's labels do not, so its rep-pair checkpoint is released
+    here once the labels exist. The wide rep arrays (``groups``) are
+    released the moment the rep pairs are materialized — no wide
+    relation outlives the build."""
     groups, member_map = _grouped_build(_shingled(spark, sf_dir))
     members = member_map.filter("qual").select("doc_id", "gid")
     # rep-pair checkpoint: the AllPairs index+verify pass runs exactly
@@ -383,7 +384,10 @@ def _clusters_via_rep_cc(
     )
     release(groups)
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    return _labels_from_rep_cc(docs, members, rep_pairs, cc_fn)
+    labels = _labels_from_rep_cc(docs, members, rep_pairs, cc_fn)
+    if cc_fn is connected_components:
+        release(rep_pairs)
+    return labels
 
 
 def _labels_from_rep_cc(
@@ -396,7 +400,8 @@ def _labels_from_rep_cc(
     ``rep_pairs`` must be cheap to evaluate repeatedly (checkpointed or
     parquet-backed): ``cc_fn`` reads the edges and the endpoint seed,
     and the returned plan reads ``members`` (plus, for the star
-    contraction, the endpoint seed again)."""
+    contraction, the endpoint seed again). A checkpointed ``rep_pairs``
+    is the caller's to free once the result no longer reads it."""
     endpoints = (
         rep_pairs.select(F.col("doc_a").alias("doc_id"))
         .union(rep_pairs.select(F.col("doc_b").alias("doc_id")))

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from imperio_patitas_etl_spark.operators.checkpoint import release
 from imperio_patitas_etl_spark.sources.parquet import load_table
 
 #: integer scaling: float32 → exact integer units (×1e7 < 2^31 for |x|<200)
@@ -629,7 +630,9 @@ def q_embedding_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the near-dup set; everyone else labels itself through one left
     join outside the loop. The edge list is checkpointed
     (output-bounded — that is the LSH prefilter's point) because both
-    the endpoint seed and the loop read it."""
+    the endpoint seed and the loop read it; the CC result reads only its
+    final label checkpoint, so the edge list is released once it
+    returns."""
     from imperio_patitas_etl_spark.queries.text import connected_components
 
     pairs = (
@@ -643,6 +646,7 @@ def q_embedding_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     cc = connected_components(endpoints, pairs)
+    release(pairs)
     vecs = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("doc_id")
     )

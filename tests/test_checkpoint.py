@@ -1,9 +1,9 @@
-"""Checkpoint release by handle (operators/checkpoint.py).
+"""Checkpoint release by handle and by plan (operators/checkpoint.py).
 
 ``release`` frees exactly the blocks a checkpointed frame names, and the
 iterative operators free every superseded round with it: after a key is
 built and consumed, the only persisted RDDs left are the checkpoints its
-returned plan reads.
+returned plan reads, which ``release_plan`` frees.
 """
 
 from __future__ import annotations
@@ -13,7 +13,7 @@ import pytest
 from imperio_patitas_etl_spark.operators.checkpoint import (
     persistent_rdd_ids,
     release,
-    release_rdds,
+    release_plan,
 )
 
 
@@ -51,33 +51,66 @@ def test_release_rejects_a_frame_that_is_not_a_checkpoint(spark, make):
         release(ck)
 
 
-def _checkpoints_read(df) -> set[int]:
-    """RDD ids of the checkpoint leaves in ``df``'s logical plan."""
-    leaves = df._jdf.queryExecution().logical().collectLeaves()
-    return {
-        leaves.apply(i).rdd().id()
-        for i in range(leaves.size())
-        if leaves.apply(i).nodeName() == "LogicalRDD"
-    }
+@pytest.mark.parametrize(
+    "combine",
+    [
+        lambda a, b, spark: a.filter("id > 3").join(b, "id"),
+        lambda a, b, spark: a.union(b).filter("id % 2 = 0"),
+        lambda a, b, spark: spark.sql(
+            "SELECT id FROM {a} WHERE id < (SELECT max(id) FROM {b})", a=a, b=b
+        ),
+    ],
+    ids=["filter_join", "union", "scalar_subquery"],
+)
+def test_release_plan_frees_every_checkpoint_the_plan_reads(spark, combine):
+    before = persistent_rdd_ids(spark)
+    a = spark.range(10).localCheckpoint()
+    b = spark.range(5).localCheckpoint()
+    df = combine(a, b, spark)
+    df.collect()
+    left = persistent_rdd_ids(spark) - before
+    assert len(left) == 2
+    assert release_plan(df) == left
+    assert not persistent_rdd_ids(spark) - before
 
 
-#: key → (checkpoints its returned plan reads, persisted RDDs left after
-#: the call). ngram: member map + rep groups; dup_clusters and
-#: corpus_keep_list: member map + final labels, plus the rep-pair edge
-#: checkpoint; the star key's plan reads its rep pairs through the
-#: endpoint seed; embedding clusters: final labels, plus the pair list;
-#: khop: final visited set. An edge checkpoint the plan does not read is
-#: left for the harness, and the JVM's ContextCleaner may free it first
-#: once its frame is garbage-collected, so the left count is an upper
-#: bound. A superseded loop round or a transient build checkpoint that
-#: leaked would exceed it.
+def test_release_plan_skips_a_plain_rdd_leaf(spark):
+    rows = spark.createDataFrame(
+        spark.sparkContext.parallelize([(1,), (2,)]), "x long"
+    )
+    ck = spark.range(3).localCheckpoint()
+    ck_id = ck._jdf.queryExecution().logical().rdd().id()
+    assert release_plan(rows) == set()
+    assert release_plan(rows.crossJoin(ck)) == {ck_id}
+    assert rows.count() == 2
+
+
+def test_release_plan_leaves_an_unrelated_checkpoint_readable(spark):
+    before = persistent_rdd_ids(spark)
+    a = spark.range(10).localCheckpoint()
+    a_ids = persistent_rdd_ids(spark) - before
+    b = spark.range(20).localCheckpoint()
+    release_plan(b.filter("id > 3"))
+    assert persistent_rdd_ids(spark) - before == a_ids
+    assert a.count() == 10
+    release(a)
+
+
+#: key → checkpoints left after the call, all of them read by its
+#: returned plan. ngram: member map + rep groups; dup_clusters and
+#: corpus_keep_list: member map + final labels (the rep-pair edge
+#: checkpoint is freed in the query); the star key's plan also reads its
+#: rep pairs through the endpoint seed; embedding clusters: final labels
+#: (the pair list is freed in the query); khop: final visited set. A
+#: superseded loop round, a transient build checkpoint or an edge
+#: checkpoint that leaked would be left without being read.
 LEFT_BEHIND = {
-    "ngram_jaccard_dedup": (2, 2),
-    "dup_clusters": (2, 3),
-    "dup_clusters_star": (3, 3),
-    "corpus_keep_list": (2, 3),
-    "embedding_dup_clusters": (1, 2),
-    "khop_reach": (1, 1),
+    "ngram_jaccard_dedup": 2,
+    "dup_clusters": 2,
+    "dup_clusters_star": 3,
+    "corpus_keep_list": 2,
+    "embedding_dup_clusters": 1,
+    "khop_reach": 1,
 }
 
 
@@ -85,12 +118,13 @@ LEFT_BEHIND = {
 def test_iterative_keys_free_superseded_checkpoints(spark, sf_dir, key):
     from imperio_patitas_etl_spark.queries import all_queries
 
-    n_read, max_left = LEFT_BEHIND[key]
     before = persistent_rdd_ids(spark)
     df = all_queries()[key](spark, sf_dir)
     df.count()
     left = persistent_rdd_ids(spark) - before
-    read = _checkpoints_read(df)
-    release_rdds(spark, left)
-    assert len(read) == n_read and read <= left, (sorted(read), sorted(left))
-    assert len(left) <= max_left, sorted(left)
+    read = release_plan(df)
+    assert left == read and len(read) == LEFT_BEHIND[key], (
+        sorted(read),
+        sorted(left),
+    )
+    assert not persistent_rdd_ids(spark) - before

@@ -88,12 +88,12 @@ def test_simhash_checkpoint_is_caller_releasable(spark, sf_dir):
     and cannot free it — the RETURNED plan reads the blocks. This pins
     the two facts a harness relies on: accumulation is bounded at
     exactly ONE new persisted generation per invocation (repeated
-    invocations grow linearly in calls, never per-row), and releasing
-    the ids that appeared during the call reclaims it once the result
-    is consumed."""
+    invocations grow linearly in calls, never per-row), and
+    ``release_plan`` on the consumed result frees exactly that
+    generation."""
     from imperio_patitas_etl_spark.operators.checkpoint import (
         persistent_rdd_ids,
-        release_rdds,
+        release_plan,
     )
     from imperio_patitas_etl_spark.queries import all_queries
 
@@ -102,8 +102,8 @@ def test_simhash_checkpoint_is_caller_releasable(spark, sf_dir):
     new_ids = persistent_rdd_ids(spark) - before
     assert len(new_ids) == 1, new_ids
     df.count()  # consume while the checkpoint is alive
-    release_rdds(spark, new_ids)
-    assert not (persistent_rdd_ids(spark) & new_ids)
+    assert release_plan(df) == new_ids
+    assert not persistent_rdd_ids(spark) - before
 
 
 def test_cosine_dedup_is_bucket_equijoin(spark, sf_dir):

@@ -1,9 +1,9 @@
 """Local stand-in for the driver's correctness gate — Arrow-type strict.
 
-Round-1 lesson (VERDICT.md "What's wrong"): the old checker rounded floats
-and stripped timezones, which masked 6 oracle-side type bugs (DuckDB
-``SUM(BIGINT)`` → HUGEINT/decimal128, ``to_timestamp`` → TIMESTAMPTZ) that
-the driver's type-sensitive hash caught. This version compares a CANONICAL
+A checker that rounds floats and strips timezones masks oracle-side type
+bugs (DuckDB ``SUM(BIGINT)`` → HUGEINT/decimal128, ``to_timestamp`` →
+TIMESTAMPTZ) that the driver's type-sensitive hash catches. This version
+compares a CANONICAL
 TYPE per column on both sides — decimal, hugeint, and tz-aware timestamps
 never canonicalize to Spark's int64/float64/naive-timestamp, so the whole
 class fails loudly here before the driver sees it — and compares values
@@ -129,11 +129,9 @@ def _normalize(rows, colnames):
 
 
 def main() -> int:
-    # argparse (VERDICT r13 item 4, matching sweep_batch's r13 rebuild):
-    # a typo'd flag like --vanila errors during parsing instead of
-    # landing in the key-subset filter and passing "0/0" with exit 0
-    # (the silent-scope failure family, ADVICE r12); both `--flag` and
-    # `--flag=value` spellings parse uniformly.
+    # argparse: a typo'd flag like --vanila errors during parsing instead
+    # of landing in the key-subset filter and passing "0/0" with exit 0;
+    # both `--flag` and `--flag=value` spellings parse uniformly.
     import argparse
 
     parser = argparse.ArgumentParser(
@@ -166,7 +164,7 @@ def main() -> int:
     import __spark_entry__ as m
 
     # Validate the key subset BEFORE building the Spark session and the
-    # DuckDB views (ADVICE r13): the registry import is enough, so a
+    # DuckDB views: the registry import is enough, so a
     # typo'd key errors in ~1 s instead of after a full JVM spin-up.
     qs, oracles = m.queries(), m.oracle_sql()
     unknown = sorted(only - set(qs))
@@ -177,7 +175,7 @@ def main() -> int:
     if vanilla:
         # the DRIVER's condition: a bare session with none of get_spark's
         # configs — any query that only passes under the tuned session is
-        # a bug this flag exists to catch (verify skill, r8)
+        # a bug this flag exists to catch
         from pyspark.sql import SparkSession
 
         spark = SparkSession.builder.master("local[8]").getOrCreate()
@@ -185,10 +183,7 @@ def main() -> int:
         from imperio_patitas_etl_spark.session import get_spark
 
         spark = get_spark("check")
-    from imperio_patitas_etl_spark.operators.checkpoint import (
-        persistent_rdd_ids,
-        release_rdds,
-    )
+    from imperio_patitas_etl_spark.operators.checkpoint import release_plan
 
     con = duckdb.connect()
     # pin the session TZ like the Spark side (session.py): DuckDB's
@@ -207,20 +202,18 @@ def main() -> int:
             continue
         n_checked += 1
         t0 = time.time()
-        before = persistent_rdd_ids(spark)
         try:
             sdf = fn(spark, sf_dir)
             s_cols = sdf.columns
             s_types = {f.name: _canon_spark_type(f.dataType) for f in sdf.schema.fields}
             s_rows = [tuple(r) for r in sdf.collect()]
+            # the rows are collected: free the checkpoints the result
+            # reads, so later keys do not schedule around them
+            release_plan(sdf)
         except Exception as e:
             failures.append(key)
             print(f"FAIL {key}: spark error: {e}")
             continue
-        finally:
-            # the rows are collected: free the checkpoints the key left
-            # behind, so later keys do not schedule around them
-            release_rdds(spark, persistent_rdd_ids(spark) - before)
         if key not in oracles:
             print(f"ok   {key}: rows-only ({len(s_rows)} rows, {time.time()-t0:.1f}s)")
             continue

@@ -5,8 +5,8 @@ line — shuffle (Exchange) count and broadcast-join count at sf0.01 — and
 for the ~dozen flagship plans, the full ``explain('formatted')`` output,
 so plan properties (pushed filters, pruned read schemas, codegen spans)
 can be reviewed without running Spark. The full dump of every plan is
-420 kB of churn per round (VERDICT r6 item 8), so it is generated on
-demand instead of committed:
+~420 kB of churn per change, so it is generated on demand instead of
+committed:
 
     python tools/dump_plans.py [sf_dir]           # summary + flagship plans
     python tools/dump_plans.py [sf_dir] --full    # every plan, full text
@@ -39,13 +39,13 @@ FLAGSHIP = (
     "sessionize_sharded",
     "dup_clusters_star",
     "range_join",
-    # r7 tiers
+    # extension tiers
     "span_dedup",
     "event_funnel",
     "scd2_incremental",
     "bloom_prefilter_join",
     "pareto_frontier_2d",
-    # r7c scan/statistics + behavioral tier
+    # scan/statistics + behavioral tier
     "equi_depth_histogram",
     "pps_systematic_sample",
     "triangle_count",
@@ -78,11 +78,10 @@ def plan_counts(plan: str) -> collections.Counter:
 
 
 def main(argv: list[str] | None = None) -> None:
-    # argparse like the rest of tools/ (ADVICE r12 family): a typo'd
-    # flag such as ``--ful`` used to be silently dropped from the
-    # positional list, producing the SUMMARY dump where the caller
-    # asked for the full one — the same silent-scope failure class the
-    # check.py / sweep_batch rewrites closed.
+    # argparse like the rest of tools/: a hand-rolled parser would
+    # silently drop a typo'd flag such as ``--ful`` from the positional
+    # list, producing the SUMMARY dump where the caller asked for the
+    # full one.
     ap = argparse.ArgumentParser(
         prog="dump_plans.py",
         allow_abbrev=False,
@@ -129,17 +128,13 @@ def main(argv: list[str] | None = None) -> None:
         "| query | shuffles (Exchange) | broadcast joins |",
         "|---|---|---|",
     ]
-    from imperio_patitas_etl_spark.operators.checkpoint import (
-        persistent_rdd_ids,
-        release_rdds,
-    )
+    from imperio_patitas_etl_spark.operators.checkpoint import release_plan
 
     plans: dict[str, str] = {}
-    # the final-plan pass reuses the static pass's DataFrame (ADVICE
-    # r17: re-instantiating qs[key] eagerly materialized a SECOND
-    # corpus-sized shingle/pair checkpoint generation)
+    # the final-plan pass reuses the static pass's DataFrame:
+    # re-instantiating qs[key] would eagerly materialize a SECOND
+    # corpus-sized shingle/pair checkpoint generation
     final_dfs: dict[str, "object"] = {}
-    _before_plans = persistent_rdd_ids(spark)
     keys = [k for k in HEADLINE if k in qs] + [
         k for k in qs if k not in set(HEADLINE)
     ]
@@ -152,6 +147,8 @@ def main(argv: list[str] | None = None) -> None:
             df.explain("formatted")
         plan = buf.getvalue().rstrip()
         plans[key] = plan
+        if key not in FINAL_PLAN_KEYS:
+            release_plan(df)
         counts = plan_counts(plan)
         mark = " (*)" if key in FINAL_PLAN_KEYS else ""
         out.append(
@@ -165,6 +162,7 @@ def main(argv: list[str] | None = None) -> None:
         fdf = final_dfs[key]
         fdf.collect()
         final = fdf._jdf.queryExecution().executedPlan().toString()
+        release_plan(fdf)
         fb = final.count("BroadcastHashJoin")
         fs = final.count("SortMergeJoin")
         out += [
@@ -179,14 +177,9 @@ def main(argv: list[str] | None = None) -> None:
             "tests/test_plans.py).",
             "",
         ]
-    # every plan string is captured — the checkpoint generations the
-    # query builds accumulated are dead; release them instead of holding
-    # the blocks until process exit (ADVICE r17)
-    release_rdds(spark, persistent_rdd_ids(spark) - _before_plans)
-
     # committed form: flagship headline plans only; --full honors the
     # docstring's "every plan, full text" — ALL registry keys, headline
-    # order first (pre-r15 it silently emitted only the headline keys)
+    # order first
     emit_keys = keys if full else [k for k in HEADLINE]
     for key in emit_keys:
         if key not in plans:

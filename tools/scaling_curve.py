@@ -1,5 +1,4 @@
-"""Three-point scaling curve for the superlinear-watch keys (VERDICT r15
-item 4).
+"""Three-point scaling curve for the superlinear-watch keys.
 
 The 10×-data table (BASELINE.md) flags keys by a single sf0.1→sf1 wall
 ratio, which conflates fixed overhead, box noise, and genuine scaling.
@@ -17,7 +16,7 @@ The sf1→sf2 segment is the more trustworthy one (both points amortize
 fixed overhead); it is printed separately.
 
 Usage: python tools/scaling_curve.py [--reps N] [key ...]
-Default keys: every row ≥ 3× in the committed 10×-data table (r15).
+Default keys: every row ≥ 3× in the committed 10×-data table.
 Prints one JSON line per key plus a markdown table on stderr for
 BASELINE.md.
 """
@@ -34,7 +33,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-#: rows >= 3x in the r15 10x-data table (BASELINE.md)
+#: rows >= 3x in the 10x-data table (BASELINE.md)
 WATCH_KEYS = (
     "ngram_jaccard_dedup",
     "cosine_dedup_recall",
@@ -71,7 +70,7 @@ def main() -> None:
         "keys",
         nargs="*",
         default=None,
-        help="registry query keys (default: the r15 superlinear-watch set)",
+        help="registry query keys (default: the superlinear-watch set)",
     )
     ap.add_argument(
         "--reps", type=int, default=3, help="warm reps per point (min is kept)"
@@ -97,20 +96,17 @@ def main() -> None:
     # partitions sized from the machine, UTC, AQE
     spark = get_spark("scaling_curve")
     spark.sparkContext.setLogLevel("ERROR")
-    from imperio_patitas_etl_spark.operators.checkpoint import (
-        persistent_rdd_ids,
-        release_rdds,
-    )
+    from imperio_patitas_etl_spark.operators.checkpoint import release_plan
 
     qs = registry
-    # per-KEY checkpoint reclamation (r16 code review): the ngram/CC keys
-    # retain localCheckpoint blocks per call; 13 keys × 3 points × reps
-    # would pile ~100 generations into one driver and skew the later
-    # keys' minima. Released BETWEEN keys (never between reps: the
-    # bench A/B in SCALE.md §r16 measured the non-blocking unpersist
-    # storm bleeding into the next timed window — min-of-reps absorbs
-    # one polluted first rep, but per-rep release would pollute all).
-    baseline_ids = persistent_rdd_ids(spark)
+    # per-KEY checkpoint reclamation: the ngram/CC keys' results read
+    # localCheckpoint blocks; 13 keys × 3 points × reps would pile ~100
+    # generations into one driver and skew the later keys' minima.
+    # Released BETWEEN keys (never between reps: a full-sweep A/B
+    # (SCALE.md, "negative result: per-key checkpoint release") measured
+    # the non-blocking unpersist storm bleeding into the next timed
+    # window — min-of-reps absorbs one polluted first rep, but per-rep
+    # release would pollute all).
     md = [
         "| query key | sf0.1 s | sf1 s | sf2 s | exp 0.1→2 | exp 1→2 |",
         "|---|---|---|---|---|---|",
@@ -118,12 +114,15 @@ def main() -> None:
     for key in keys:
         fn = qs[key]
         best: dict[str, float] = {}
+        consumed = []
         for label, d, _scale in POINTS:
             times = []
             for _ in range(args.reps):
                 t0 = time.time()
-                fn(spark, d).write.format("noop").mode("overwrite").save()
+                df = fn(spark, d)
+                df.write.format("noop").mode("overwrite").save()
                 times.append(time.time() - t0)
+                consumed.append(df)
             best[label] = min(times)
         e_full = math.log(best["sf2"] / best["sf0.1"]) / math.log(20.0)
         e_seg = math.log(best["sf2"] / best["sf1"]) / math.log(2.0)
@@ -140,7 +139,8 @@ def main() -> None:
             f"| {key} | {rec['sf0.1']} | {rec['sf1']} | {rec['sf2']} "
             f"| {rec['exp_full']} | {rec['exp_sf1_sf2']} |"
         )
-        release_rdds(spark, persistent_rdd_ids(spark) - baseline_ids)
+        for df in consumed:
+            release_plan(df)
     print("\n".join(md), file=sys.stderr)
     spark.stop()
 
