@@ -54,16 +54,22 @@ class EntitySpec:
             pred = pred & F.coalesce(r.predicate, F.lit(False))
         return pred
 
-    def apply(self, df: DataFrame) -> "ValidationResult":
-        """Accepted rows, projected with their ``warn_*`` flags, plus every
-        input row tagged with its ``reject_reason``."""
-        accepted = df.filter(self.accept_predicate()).select(
+    def accept(self, df: DataFrame) -> DataFrame:
+        """The rows of ``df`` passing every rule, projected with their
+        ``warn_*`` flags. The filter runs before the projection, so a cast
+        in the projection only ever sees accepted rows (Spark's ANSI casts
+        raise on the values some rules reject)."""
+        return df.filter(self.accept_predicate()).select(
             *[expr.alias(name) for name, expr in self.projection.items()],
             *[
                 F.coalesce(expr, F.lit(False)).alias(f"warn_{wname}")
                 for wname, expr in self.warnings.items()
             ],
         )
+
+    def apply(self, df: DataFrame) -> "ValidationResult":
+        """Accepted rows (``accept``) plus every input row tagged with its
+        ``reject_reason``."""
         # first failing rule wins as the reason (reference logs the first
         # DataValidationError raised, etl_service.py:525-531)
         reason = F.lit(None).cast("string")
@@ -71,24 +77,24 @@ class EntitySpec:
             reason = F.when(~F.coalesce(r.predicate, F.lit(False)), F.lit(r.name)).otherwise(
                 reason
             )
-        return ValidationResult(accepted=accepted, tagged=df.withColumn("reject_reason", reason))
+        return ValidationResult(
+            spec=self, accepted=self.accept(df), tagged=df.withColumn("reject_reason", reason)
+        )
 
 
 @dataclass
 class ValidationResult:
-    """``accepted``: the rows passing every rule, projected. ``tagged``: every
-    input row plus ``reject_reason``, the name of its first failing rule or
-    NULL when all hold."""
+    """``accepted``: the rows passing every rule of ``spec``, projected.
+    ``tagged``: every input row plus ``reject_reason``, the name of its
+    first failing rule or NULL when all hold. ``spec.accept`` over
+    ``tagged`` without ``reject_reason`` gives ``accepted`` again, so a
+    caller that materializes ``tagged`` once can derive the accepted rows
+    and both counters from that one copy."""
 
+    spec: EntitySpec
     accepted: DataFrame
     tagged: DataFrame
 
     @property
     def rejected(self) -> DataFrame:
         return self.tagged.filter(F.col("reject_reason").isNotNull())
-
-    def counts(self) -> DataFrame:
-        """A3: valid/invalid counters (etl_service.py:522-533) as one
-        aggregate over ``tagged``; a status with no rows has no row."""
-        status = F.when(F.col("reject_reason").isNull(), "valid").otherwise("invalid")
-        return self.tagged.groupBy(status.alias("status")).count()

@@ -245,20 +245,31 @@ def detail_spec() -> EntitySpec:
     )
 
 
+def document_lines(raw_documents: DataFrame, headers: DataFrame) -> ValidationResult:
+    """The validated detail lines of ``raw_documents`` whose id has an
+    accepted header in ``headers`` (``document_spec`` accepted rows).
+
+    The filter is a left-semi join on the accepted ids, not on the header
+    rows themselves: when a batch repeats a document id and one copy is
+    valid, the lines of every copy load, and the upsert keeps one row per
+    line id."""
+    valid_ids = headers.select(F.col("id_documento").alias("id"))
+    with_lines = raw_documents.join(F.broadcast(valid_ids), on="id", how="left_semi")
+    return detail_spec().apply(explode_nested(with_lines, "details.items", "d"))
+
+
 def transform_documents(
     raw_documents: DataFrame,
 ) -> tuple[ValidationResult, ValidationResult]:
-    """sync_documents (etl_service.py:652-722): one input, two outputs.
+    """sync_documents (etl_service.py:652-722): one input, two outputs,
+    ``(headers, lines)``, each with ``.accepted``.
 
     Headers keep documents with zero detail lines (outer semantics, J5);
-    lines come from an inner explode of ``details.items`` of the VALID
-    headers only (the reference validates the document before iterating its
-    details, :683-694). FK validation is intentionally absent (:667-670) —
-    dangling id_cliente / id_producto pass through.
+    lines come from an inner explode of ``details.items`` of the documents
+    with a VALID header (``document_lines``; the reference validates the
+    document before iterating its details, :683-694). FK validation is
+    intentionally absent (:667-670) — dangling id_cliente / id_producto
+    pass through.
     """
     headers = document_spec().apply(raw_documents)
-    valid_ids = headers.accepted.select(F.col("id_documento").alias("id"))
-    with_lines = raw_documents.join(F.broadcast(valid_ids), on="id", how="left_semi")
-    lines_flat = explode_nested(with_lines, "details.items", "d")
-    lines = detail_spec().apply(lines_flat)
-    return headers, lines
+    return headers, document_lines(raw_documents, headers.accepted)

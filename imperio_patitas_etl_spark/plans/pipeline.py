@@ -9,8 +9,16 @@ scheduler_endpoints.py:19-206) with a runner over DataFrame sources:
 - ``incremental(days, as_of)``                      ↔ POST /scheduler/etl/incremental
 - ``test_sample(n)``                                ↔ POST /scheduler/etl/test
 
+Each validated batch is materialized once: one ``localCheckpoint`` job
+writes every input row with its ``reject_reason`` and, through an
+``Observation`` on that same job, counts the valid and invalid rows and the
+rejects per rule. The upsert then reads the checkpoint, so the entity
+transform (explode, broadcast joins, windows) runs once per sync, and the
+checkpoint is freed when the sync's upserts have run, raised or not.
+
 Run reports (valid/invalid counts per entity, A3) come back as a DataFrame
-instead of log lines. Sources are pluggable callables returning DataFrames
+instead of log lines, and the latest run's reject histogram per table as a
+dict (``rejects()``). Sources are pluggable callables returning DataFrames
 — parquet fixtures in tests, a rate-limited REST reader in production (the
 extract boundary stays driver-side exactly like the reference's
 BsaleClient; everything after it is distributed).
@@ -25,17 +33,20 @@ emission date, so this predicate prunes whole partitions.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from datetime import date, timedelta
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from imperio_patitas_etl_spark.operators.checkpoint import release
 from imperio_patitas_etl_spark.operators.validate import ValidationResult
 from imperio_patitas_etl_spark.plans.entities import (
+    document_lines,
+    document_spec,
     transform_clients,
-    transform_documents,
     transform_products,
 )
 from imperio_patitas_etl_spark.sinks.warehouse import WAREHOUSE_SCHEMAS, ParquetWarehouse
@@ -57,6 +68,8 @@ class EtlPipeline:
     exporter: Callable[[str, list[list[str]]], None] | None = None
     #: collected per-run (entity, valid, invalid) tuples
     _report_rows: list[tuple[str, int, int]] = field(default_factory=list)
+    #: latest run's rejects per rule, per table
+    _rejects: dict[str, dict[str, int]] = field(default_factory=dict)
 
     # -- entity syncs -----------------------------------------------------
 
@@ -64,9 +77,9 @@ class EtlPipeline:
         """sync_clients (etl_service.py:508-547): validate → upsert cliente."""
         self.warehouse.ensure_all()
         res = transform_clients(self.sources["clients"]())
-        accepted, n_valid, _ = self._counted("cliente", res)
-        if n_valid:  # F6: skip load when 0 valid rows (etl_service.py:535-537)
-            self.warehouse.upsert("cliente", accepted)
+        with self._counted("cliente", res) as (res, n_valid, _):
+            if n_valid:  # F6: skip load when 0 valid rows (etl_service.py:535-537)
+                self.warehouse.upsert("cliente", res.accepted)
         return n_valid
 
     def sync_products(self) -> int:
@@ -79,11 +92,11 @@ class EtlPipeline:
             self.sources["price_list"](),
             self.sources["costs"](),
         )
-        accepted, n_valid, n_invalid = self._counted("producto", res)
-        if n_valid == 0 and n_invalid > 0:
-            raise ValueError("product sync: all rows invalid")
-        if n_valid:
-            self.warehouse.upsert("producto", accepted)
+        with self._counted("producto", res) as (res, n_valid, n_invalid):
+            if n_valid == 0 and n_invalid > 0:
+                raise ValueError("product sync: all rows invalid")
+            if n_valid:
+                self.warehouse.upsert("producto", res.accepted)
         return n_valid
 
     def sync_documents(self, start_date: str | None = None) -> int:
@@ -100,13 +113,16 @@ class EtlPipeline:
                 F.timestamp_seconds(F.col("emissionDate"))
                 >= F.to_timestamp(F.lit(start_date))
             )
-        headers, lines = transform_documents(raw)
-        h_acc, n_h, _ = self._counted("documento_venta", headers)
-        l_acc, n_l, _ = self._counted("detalle_documento", lines)
-        if n_h:
-            self.warehouse.upsert("documento_venta", h_acc)
-        if n_l:
-            self.warehouse.upsert("detalle_documento", l_acc)
+        # transform_documents, with the lines built from the header
+        # checkpoint instead of a second read and validation of ``raw``
+        headers = document_spec().apply(raw)
+        with self._counted("documento_venta", headers) as (headers, n_h, _):
+            lines = document_lines(headers.tagged.drop("reject_reason"), headers.accepted)
+            with self._counted("detalle_documento", lines) as (lines, n_l, _):
+                if n_h:
+                    self.warehouse.upsert("documento_venta", headers.accepted)
+                if n_l:
+                    self.warehouse.upsert("detalle_documento", lines.accepted)
         return n_h
 
     # -- orchestration (endpoints.py:50-106, scheduler_endpoints.py) ------
@@ -201,10 +217,44 @@ class EtlPipeline:
             self._report_rows, "entity string, valid long, invalid long"
         )
 
-    def _counted(self, table: str, res: ValidationResult) -> tuple[DataFrame, int, int]:
-        """Validated rows of ``res`` plus its accepted and rejected counts,
-        taken in one aggregate and recorded as a report row."""
-        counts = dict(res.counts().collect())
-        n_valid, n_invalid = counts.get("valid", 0), counts.get("invalid", 0)
-        self._report_rows.append((table, n_valid, n_invalid))
-        return res.accepted, n_valid, n_invalid
+    def rejects(self) -> dict[str, dict[str, int]]:
+        """The latest run's reject histogram per table: for each rule of the
+        table's spec, how many rows it rejected as their first failing
+        rule (zeros included). The counts add up to the table's latest
+        ``invalid``."""
+        return {table: dict(hist) for table, hist in self._rejects.items()}
+
+    @contextmanager
+    def _counted(
+        self, table: str, res: ValidationResult
+    ) -> Iterator[tuple[ValidationResult, int, int]]:
+        """Materialize ``res.tagged`` in one eager ``localCheckpoint`` and
+        yield ``res`` rebuilt over that checkpoint, with its valid and
+        invalid counts. The checkpoint is freed when the block exits,
+        raised or not, so the caller's upserts run inside it.
+
+        An ``Observation`` on the checkpointed frame takes both counters
+        and the per-rule histogram in the checkpoint's own job; the counts
+        become a report row and the histogram ``rejects()[table]``. The
+        yielded ``accepted`` is ``spec.accept`` over the checkpoint, so an
+        upsert reads the materialized rows instead of re-running the
+        transform."""
+        obs = Observation()
+        reason = F.col("reject_reason")
+        rules = [r.name for r in res.spec.rules]
+        ck = res.tagged.observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            F.count(reason).alias("invalid"),
+            *[F.count_if(reason == name).alias(f"rule.{name}") for name in rules],
+        ).localCheckpoint()
+        try:
+            metrics = obs.get
+            n_invalid = metrics["invalid"]
+            n_valid = metrics["rows"] - n_invalid
+            self._report_rows.append((table, n_valid, n_invalid))
+            self._rejects[table] = {name: metrics[f"rule.{name}"] for name in rules}
+            accepted = res.spec.accept(ck.drop("reject_reason"))
+            yield ValidationResult(spec=res.spec, accepted=accepted, tagged=ck), n_valid, n_invalid
+        finally:
+            release(ck)

@@ -8,9 +8,14 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from imperio_patitas_etl_spark.plans.entities import transform_clients
+from imperio_patitas_etl_spark.operators.checkpoint import persistent_rdd_ids
+from imperio_patitas_etl_spark.plans.entities import (
+    transform_clients,
+    transform_documents,
+    transform_products,
+)
 from imperio_patitas_etl_spark.plans.pipeline import EtlPipeline
-from imperio_patitas_etl_spark.sinks.warehouse import ParquetWarehouse
+from imperio_patitas_etl_spark.sinks.warehouse import WAREHOUSE_SCHEMAS, ParquetWarehouse
 
 CLIENT_SCHEMA = (
     "id long, firstName string, lastName string, code string, email string, "
@@ -186,16 +191,13 @@ def test_report(pipeline):
 
 
 def test_all_valid_sync_reports_zero_invalid(spark, tmp_path):
-    """With no rejects the counts have no ``invalid`` row; the report
-    still says 0."""
+    """With no rejects the report still says 0 invalid."""
     valid = [RAW_CLIENTS[0], RAW_CLIENTS[3]]
     pipe = EtlPipeline(
         spark=spark,
         warehouse=ParquetWarehouse(spark, str(tmp_path / "wh")),
         sources={"clients": lambda: spark.createDataFrame(valid, CLIENT_SCHEMA)},
     )
-    res = transform_clients(pipe.sources["clients"]())
-    assert [r["status"] for r in res.counts().collect()] == ["valid"]
     assert pipe.sync_clients() == 2
     assert [tuple(r) for r in pipe.report().collect()] == [("cliente", 2, 0)]
 
@@ -248,3 +250,160 @@ def test_repeated_document_is_stored_once(spark, tmp_path, partitioned):
     assert sorted(lines) == [91, 92, 95]
     pipe.sync("documents")
     assert snapshot() == first
+
+
+def _stored(wh, table):
+    return sorted(map(tuple, wh.read(table).collect()))
+
+
+def _as_stored(df, table):
+    cols = [F.col(f.name).cast(f.dataType) for f in WAREHOUSE_SCHEMAS[table].fields]
+    return sorted(map(tuple, df.select(*cols).collect()))
+
+
+@pytest.mark.parametrize("partitioned", [False, True])
+def test_repeated_document_with_one_valid_copy_loads_lines_of_both(
+    spark, tmp_path, partitioned
+):
+    """A batch that carries document 10 twice, once valid and once with a
+    negative net, stores the valid header once and the lines of BOTH
+    copies: lines are kept by a semi-join on the accepted header ids, as
+    ``transform_documents`` builds them."""
+    invalid_copy = (10, 1700000000, 7, (1,), (5,), -1.0, 190.0, 1190.0,
+                    ([(96, (101,), 1.0, 50.0, 0.0, 50.0)],))
+    docs = RAW_DOCS + [invalid_copy]
+    pipe = EtlPipeline(
+        spark=spark,
+        warehouse=ParquetWarehouse(spark, str(tmp_path / "wh"), partitioned=partitioned),
+        sources={"documents": lambda: spark.createDataFrame(docs, DOC_SCHEMA)},
+    )
+    pipe.sync_documents()
+    headers, lines = transform_documents(pipe.sources["documents"]())
+    stored = _stored(pipe.warehouse, "detalle_documento")
+    assert stored == _as_stored(lines.accepted, "detalle_documento")
+    assert sorted(r[0] for r in stored) == [91, 92, 95, 96]
+    assert _stored(pipe.warehouse, "documento_venta") == _as_stored(
+        headers.accepted, "documento_venta"
+    )
+    assert [tuple(r) for r in pipe.report().collect()] == [
+        ("documento_venta", 3, 3),
+        ("detalle_documento", 4, 1),
+    ]
+
+
+def test_rejects_match_tagged_reasons(pipeline, spark):
+    """``rejects()`` holds, per table, the count of each first failing rule
+    that grouping the tagged rows by ``reject_reason`` gives, and a later
+    sync replaces its table's histogram."""
+    pipeline.sync("all")
+    src = pipeline.sources
+    headers, lines = transform_documents(src["documents"]())
+    results = {
+        "cliente": transform_clients(src["clients"]()),
+        "producto": transform_products(src["products"](), src["price_list"](), src["costs"]()),
+        "documento_venta": headers,
+        "detalle_documento": lines,
+    }
+    rejects = pipeline.rejects()
+    invalid = {r["entity"]: r["invalid"] for r in pipeline.report().collect()}
+    assert set(rejects) == set(results)
+    for table, res in results.items():
+        want = {
+            r["reject_reason"]: r["count"]
+            for r in res.tagged.groupBy("reject_reason").count().collect()
+            if r["reject_reason"] is not None
+        }
+        assert want, table  # every fixture table has rejects
+        assert set(rejects[table]) == {rule.name for rule in res.spec.rules}
+        assert {rule: n for rule, n in rejects[table].items() if n} == want
+        assert sum(rejects[table].values()) == invalid[table]
+
+    src["clients"] = lambda: spark.createDataFrame([RAW_CLIENTS[0]], CLIENT_SCHEMA)
+    pipeline.sync_clients()
+    assert set(pipeline.rejects()["cliente"].values()) == {0}
+    assert tuple(pipeline.report().collect()[-1]) == ("cliente", 1, 0)
+
+
+class _FailingWarehouse(ParquetWarehouse):
+    """A warehouse whose every upsert raises."""
+
+    def upsert(self, table, source):
+        raise RuntimeError(f"upsert of {table} failed")
+
+
+def _new_persisted(spark, fn):
+    """RDD ids persisted after ``fn()`` that were not before. A difference,
+    not an equality: the ContextCleaner may free an earlier test's blocks
+    meanwhile, which says nothing about what ``fn`` left."""
+    before = persistent_rdd_ids(spark)
+    fn()
+    return persistent_rdd_ids(spark) - before
+
+
+def test_sync_all_leaves_no_checkpoint(pipeline, spark):
+    assert _new_persisted(spark, lambda: pipeline.sync("all")) == set()
+
+
+def test_all_invalid_product_sync_raises_and_leaves_no_checkpoint(pipeline, spark):
+    invalid = [r for r in RAW_PRODUCTS if r[1] in (5, 6, 7)]  # no price / no SKU
+    pipeline.sources["products"] = lambda: spark.createDataFrame(invalid, PRODUCT_SCHEMA)
+
+    def sync():
+        with pytest.raises(ValueError, match="all rows invalid"):
+            pipeline.sync_products()
+
+    assert _new_persisted(spark, sync) == set()
+    assert tuple(pipeline.report().collect()[-1]) == ("producto", 0, 3)
+
+
+@pytest.mark.parametrize("entity", ["clients", "products", "documents"])
+def test_failed_upsert_leaves_no_checkpoint(pipeline, spark, tmp_path, entity):
+    pipeline.warehouse = _FailingWarehouse(spark, str(tmp_path / "failing"))
+
+    def sync():
+        with pytest.raises(RuntimeError, match="upsert of"):
+            pipeline.sync(entity)
+
+    assert _new_persisted(spark, sync) == set()
+
+
+def test_empty_sources_report_zero_and_skip_the_load(spark, tmp_path):
+    """Empty sources count (0, 0) from the checkpoint's job and load
+    nothing: the warehouse here raises on any upsert."""
+    schemas = {
+        "clients": CLIENT_SCHEMA,
+        "products": PRODUCT_SCHEMA,
+        "price_list": PRICE_SCHEMA,
+        "costs": COSTS_SCHEMA,
+        "documents": DOC_SCHEMA,
+    }
+    pipe = EtlPipeline(
+        spark=spark,
+        warehouse=_FailingWarehouse(spark, str(tmp_path / "wh")),
+        sources={
+            name: (lambda schema=schema: spark.createDataFrame([], schema))
+            for name, schema in schemas.items()
+        },
+    )
+    assert _new_persisted(spark, lambda: pipe.sync("all")) == set()
+    assert [tuple(r) for r in pipe.report().collect()] == [
+        (t, 0, 0) for t in ("cliente", "producto", "documento_venta", "detalle_documento")
+    ]
+
+
+def test_counted_runs_one_job(pipeline, spark):
+    """Materializing a batch, its counts and its histogram is one Spark job
+    (the client transform has no join, so no broadcast job either)."""
+    sc = spark.sparkContext
+    res = transform_clients(pipeline.sources["clients"]())
+    group = "test_counted_runs_one_job"
+    sc.setJobGroup(group, group)
+    try:
+        with pipeline._counted("cliente", res) as (_, n_valid, n_invalid):
+            pass
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert (n_valid, n_invalid) == (2, 3)

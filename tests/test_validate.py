@@ -70,15 +70,11 @@ def test_warning_flags_dont_drop(spark):
     assert warns == {1: False, 3: True}
 
 
-def test_counts_report(spark):
+def test_accept_over_tagged_is_accepted(spark):
+    """``spec.accept`` over the tagged rows (without ``reject_reason``)
+    gives ``accepted`` again, which is how the pipeline derives the
+    accepted rows from its one materialized copy of ``tagged``."""
     res = _spec().apply(_data(spark))
-    counts = {r["status"]: r["count"] for r in res.counts().collect()}
-    assert counts == {"valid": 2, "invalid": 2}
-
-
-def test_counts_is_one_aggregate(spark):
-    """Both counters come from one grouping of the tagged rows."""
-    res = _spec().apply(_data(spark))
-    plan = res.counts()._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("Aggregate") == 1
-    assert "Union" not in plan
+    again = res.spec.accept(res.tagged.drop("reject_reason"))
+    assert again.columns == res.accepted.columns
+    assert sorted(map(tuple, again.collect())) == sorted(map(tuple, res.accepted.collect()))
