@@ -1,16 +1,14 @@
 """Type-2 SCD maintenance as a reusable operator.
 
-``scd2_apply`` is the single implementation behind both the registry's
-``scd2_incremental`` query (oracle-certified equal to the batch rebuild)
-and the streaming ``foreachBatch`` sink (streaming/scd2_sink.py): given
-the existing history and a batch of changes, number the batch's versions
-from each key's existing max, close the previously-open interval at the
-batch's first change, and pass every untouched row through.
+``scd2_apply`` is the implementation behind the registry's
+``scd2_incremental`` query (oracle-certified equal to the batch rebuild):
+given the existing history and a batch of changes, number the batch's
+versions from each key's existing max, close the previously-open interval
+at the batch's first change, and pass every untouched row through.
 
-Correctness precondition (asserted by the callers' split): within each
+Correctness precondition (asserted by the caller's split): within each
 key, every batch change must postdate the key's existing history — true
-whenever batches arrive in order of the version-ordering column, which
-is exactly the micro-batch arrival order in the streaming case.
+whenever batches arrive in order of the version-ordering column.
 """
 
 from __future__ import annotations

@@ -17,7 +17,7 @@ entity pipeline (app/services/etl_service.py) is feeding it —
 
 Exactness: every aggregate is integer (units/micro-nats); every divide
 is integral ``div`` on DECIMAL(38,0) operands (Spark) mirrored by ``//``
-on HUGEINT (DuckDB) — per ADVICE r6, operands are widened BEFORE any
+on HUGEINT (DuckDB) — operands are widened BEFORE any
 multiply so no product can wrap at any corpus size. The only float op
 is the per-distinct-term ``ln`` in BM25's idf, computed on an identical
 double in both engines (the ``unigram_logprob`` convention).

@@ -326,7 +326,7 @@ def q_bloom_prefilter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe row pay three ``array_contains`` LINEAR scans of a position
     set whose length grows with the build side, so 10× data cost 10×
     rows × ~10× scan length — measured 6.9× wall at sf0.1→sf1 (the
-    BASELINE.md superlinear table's bloom row, VERDICT r15 item 2).
+    BASELINE.md superlinear table's bloom row).
     The bitmap's membership test is ``element_at(bits, pos div 64 + 1)``
     — an O(1) array index plus a bit mask — and the broadcast payload
     is a CONSTANT 8 KiB regardless of build cardinality. The bit set is
@@ -467,9 +467,7 @@ def q_scd2_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     existing history joined batch-side; untouched keys' rows pass
     through unread (in a real table, untouched PARTITIONS pass through
     unwritten — the MERGE machinery of operators/upsert.py). The apply
-    itself is ``operators/scd2.py:scd2_apply`` — the same function the
-    streaming foreachBatch sink commits per micro-batch, so this green
-    row certifies the streaming path's math too."""
+    itself is ``operators/scd2.py:scd2_apply``."""
     from imperio_patitas_etl_spark.operators.scd2 import (
         scd2_apply,
         scd2_from_orders,
@@ -1581,7 +1579,8 @@ def q_scd2_time_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     (epoch_us(valid_to) − epoch_us(valid_from)); the weighted sum
     widens to DECIMAL(38,0) BEFORE the multiply (cents·µs reaches
     ~10¹⁹ for one multi-year interval — past int64) and one integral
-    ``div`` at the end yields the answer, the ADVICE-r6 convention.
+    ``div`` at the end yields the answer, the repo's widen-before-multiply
+    convention.
 
     Scale: composes on the scd2_history build — one natural-key window
     shuffle — then a combinable per-key aggregate; nothing new

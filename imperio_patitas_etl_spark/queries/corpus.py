@@ -139,9 +139,8 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "n_tok",
         # integral `div`, not float-divide-then-cast: at warehouse scale
-        # start_tok is an unbounded running sum, and the repo rule
-        # (ADVICE r6 on Q8) is that bucketing arithmetic never rides a
-        # double
+        # start_tok is an unbounded running sum, and the repo rule is
+        # that bucketing arithmetic never rides a double
         F.expr(f"start_tok div {PACK_BUDGET}").alias("bin_id"),
     )
     return (
@@ -372,7 +371,7 @@ def q_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     counts = d.groupBy("source").agg(F.count("*").alias("n_docs"))
     num = _mix_num(F.col("source"))
-    # all quota arithmetic in integral `div` (ADVICE r6 discipline):
+    # all quota arithmetic in integral `div`:
     # counts are unbounded at warehouse scale, and a double quotient one
     # ulp under an exact integer truncates to quota-1
     sized = counts.select(

@@ -9,8 +9,8 @@ table as a batch plan with an exact DuckDB oracle:
 - session window → gaps-and-islands (lag + cumulative session starts);
 - props JSON access → ``get_json_object`` ↔ ``json_extract_string``.
 
-The true ``readStream`` paths (file source, availableNow, foreachBatch
-MERGE) are covered by tests/test_streaming.py, which asserts stream ≡ batch
+The true ``readStream`` paths (file source, availableNow) are covered
+by tests/test_streaming.py, which asserts stream ≡ batch
 on the same input — the correctness argument is transitivity: stream ≡
 batch (test) and batch ≡ oracle (driver t2 gate).
 """

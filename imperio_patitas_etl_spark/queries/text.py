@@ -445,7 +445,7 @@ def _shingle_set_fp(col: str = "shingles") -> Column:
     array-level null guard; a NULL ELEMENT, impossible from
     ``_shingles_of`` but unenforced for a shingle relation handed
     straight to ``_grouped_build``, encodes as the explicit sentinel
-    ``~`` (ADVICE r17): the inner ``concat`` is NULL-propagating, so injectivity no
+    ``~``: the inner ``concat`` is NULL-propagating, so injectivity no
     longer rests on a no-NULL input contract — ``~`` is not a decimal
     digit, so the stream stays uniquely decodable (read ``~`` or read
     digits to ``:`` then that many chars), and ``array_sort`` places
@@ -467,11 +467,11 @@ def _narrow_of(s: DataFrame) -> DataFrame:
     """Skinny (doc_id, lang, _fp, qual) projection of a shingled
     relation — the group-collapse input. ``_fp`` is the fixed 32-byte
     injective-encoding digest of the sorted array (``_shingle_set_fp``),
-    NOT the array itself (the r16 plan): hashing/sorting the full
-    shingle array as the exchange key shipped every document's entire
-    set through the shuffle — the "wide span text never travels as a
-    shuffle key" violation SCALE.md's span-dedup rule names (VERDICT r16
-    item 2). ``qual`` = the doc can carry edges in the full pair list
+    NOT the array itself: hashing/sorting the full shingle array as the
+    exchange key would ship every document's entire set through the
+    shuffle — the "wide span text never travels as a shuffle key"
+    violation SCALE.md's span-dedup rule names. ``qual`` = the doc can
+    carry edges in the full pair list
     (non-empty shingles, non-NULL lang — group-uniform)."""
     return s.select(
         "doc_id",
@@ -511,7 +511,7 @@ def _member_map(narrow: DataFrame) -> DataFrame:
     across the fork, so the caller must pass a relation cheap to
     evaluate twice — a localCheckpoint (``_grouped_build``)."""
     gids = narrow.groupBy("lang", "_fp").agg(F.min("doc_id").alias("gid"))
-    # aggregated to EXACTLY one row per doc_id (ADVICE r17): the raw
+    # aggregated to EXACTLY one row per doc_id: the raw
     # narrow⋈gids relation has one row per INPUT row, so a duplicated
     # doc_id in the documents parquet (outside input) would multiply
     # rows through downstream joins (2 input rows → 4 output rows) and
@@ -597,7 +597,7 @@ def _pairs_from_shingled(s: DataFrame) -> DataFrame:
     )
     a = pref.alias("a")
     b = pref.alias("b")
-    # PPJoin positional refinement (VERDICT r8 item 5), applied per
+    # PPJoin positional refinement, applied per
     # matched prefix entry BEFORE pair dedup. For the FIRST common token
     # under the shared (df, tok) order, every common token sits at or
     # after its position in both docs, so overlap ≤ 1 + min(n_a − rn_a,
@@ -746,10 +746,10 @@ def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
     # (plans/r18/dedup_minhash_lsh_before.txt: 4 full corpus re-reads at
     # runtime). One localCheckpoint bounds it to one pass (guide
     # §3.3/§5), and ONLY the skinny (doc_id, rfp, ok3) projection is
-    # materialized (≤48 B/row — the CC edge-checkpoint size class): the
-    # r18 version checkpointed the full corpus TEXT here, a corpus-sized
-    # executor-local copy with no lineage fault-tolerance (guide §5;
-    # VERDICT/ADVICE r18). Representative text is recovered from the
+    # materialized (≤48 B/row — the CC edge-checkpoint size class), not
+    # the full corpus TEXT, which would be a corpus-sized executor-local
+    # copy with no lineage fault-tolerance (guide §5). Representative
+    # text is recovered from the
     # parquet scan by an id join instead — at 100 TB one extra
     # fault-tolerant columnar scan in place of a full-corpus local write.
     fp = docs.select(
@@ -988,7 +988,7 @@ def _sql_minhash_bands() -> str:
 
 SIMHASH_MAX_HAMMING = 3  # banding guarantee: 4 bands find every d <= 3
 #: near-dup uses the full 60-bit md5-prefix hash width, split into 4 bands
-#: of 15 bits. Band keyspace is the scale lever (VERDICT r3): each band
+#: of 15 bits. Band keyspace is the scale lever: each band
 #: must take enough distinct values that band buckets stay small — 8-bit
 #: bands cap at 256 values/band so bucket sizes (and the band self-join)
 #: grow O(n²/256); 15-bit bands give 32,768 values/band, and the
@@ -1696,11 +1696,10 @@ def q_tfidf_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers — order-independent and identical across engines — rather
     than a float accumulation whose engine-specific addition order could
     flip a rounding boundary (the repo-wide integerize-before-sum
-    discipline; the float library form lives in
-    ``operators/vectorize.py:tfidf``). The remaining float ops (one ln
+    discipline). The remaining float ops (one ln
     per distinct (term, df), one sqrt + division per triple) run on
     identical inputs in both engines. w_u is cast to DECIMAL(38,0) BEFORE
-    squaring (ADVICE r6), so Σw² cannot wrap however large tf grows —
+    squaring, so Σw² cannot wrap however large tf grows —
     no assumed tf bound remains.
     n_docs is a one-scalar parquet count (metadata-cheap; the
     vocabulary-style constant every TF-IDF needs)."""

@@ -903,7 +903,7 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(vol_units).alias("total_units"),
         )
     )
-    # Exact integer division (ADVICE r6): the numerator mixes 1e-4
+    # Exact integer division: the numerator mixes 1e-4
     # currency units and a ×20000 scale, so at sf≳1 it exceeds 2^53 and a
     # double quotient can land one ulp under the true integer. DECIMAL(38,0)
     # operands + `div` (Catalyst IntegralDivide) keep the whole

@@ -696,7 +696,7 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nodes, plans/r18/ann_recall_before.txt) and each ran at runtime —
     # the k·n_queries-row result is checkpointed instead (bounded,
     # corpus-independent; guide §3.3/§5). The shared integerization is
-    # checkpointed too (r19, VERDICT r18 item 5): un-materialized, the
+    # checkpointed too: un-materialized, the
     # float→×10⁷-integer transform re-ran over the full corpus once per
     # search pipeline reference — 6 executions per call (bf queries +
     # candidates, LSH table + plane collect, IVF assign + centroid

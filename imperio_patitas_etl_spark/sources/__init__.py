@@ -1,5 +1,5 @@
-"""Sources: parquet table catalog, nested-JSON reader, rate-limited REST."""
+"""Sources: parquet table catalog and rate-limited REST client."""
 
-from imperio_patitas_etl_spark.sources.parquet import load_table, load_tables
+from imperio_patitas_etl_spark.sources.parquet import load_table
 
-__all__ = ["load_table", "load_tables"]
+__all__ = ["load_table"]

@@ -14,20 +14,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TPCH_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
 def ensure_nanos_conf(spark: SparkSession) -> None:
     """Set ``spark.sql.legacy.parquet.nanosAsLong`` on the session.
 
@@ -36,12 +22,12 @@ def ensure_nanos_conf(spark: SparkSession) -> None:
     TIMESTAMP(NANOS) events table — without it the scan fails outright.
     Centralized here so the batch and streaming readers share one
     documented mutation point instead of each reader touching session
-    state (ADVICE r6)."""
+    state."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
 #: Footer-peeked events schemas by path — the streaming reader needs a
-#: declared schema, and re-peeking per call is hidden I/O (ADVICE r6).
+#: declared schema, and re-peeking per call is hidden I/O.
 _EVENTS_SCHEMA_CACHE: dict = {}
 
 
@@ -84,10 +70,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             ),
         )
     return df
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TPCH_TABLES
-) -> dict[str, DataFrame]:
-    """Scan several tables; lazy — nothing is read until an action runs."""
-    return {n: load_table(spark, sf_dir, n) for n in names}

@@ -2,7 +2,6 @@
 
 from imperio_patitas_etl_spark.streaming.events import (  # noqa: F401
     clicks_after_errors,
-    foreach_batch_upsert,
     read_events_batch,
     read_events_stream,
     run_stream_to_memory,

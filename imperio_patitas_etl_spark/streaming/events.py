@@ -3,17 +3,14 @@ phase 3).
 
 The reference has no streams — its "incremental sync" is a cron that
 re-pulls a trailing window and re-upserts (scheduler_endpoints.py:71-125).
-The streaming generalization keeps those semantics:
+The streaming operators generalize that trailing-window policy:
 
 - ``read_events_stream``      — file-source ``readStream`` with declared schema;
 - ``tumbling_counts`` / ``sliding_value_sum`` — watermarked windowed aggs
   (the watermark is the explicit form of the reference's implicit
   late-data policy: its trailing-window re-pull bounds how late an update
   can arrive, SURVEY.md §2.7);
-- ``session_counts``          — built-in ``session_window`` (gap-based);
-- ``foreach_batch_upsert``    — micro-batch sink: every batch MERGEs into a
-  warehouse table, so the stream inherits the idempotent-upsert property
-  the reference relies on.
+- ``session_counts``          — built-in ``session_window`` (gap-based).
 
 Scale notes: windowed aggs shuffle once on (key, window); the watermark
 bounds state size — without it, 100 TB of events means unbounded state.
@@ -25,7 +22,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from imperio_patitas_etl_spark.sources.parquet import events_schema
 
@@ -35,7 +31,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     File streams require a declared schema; it comes from the CACHED
     footer peek in ``sources.parquet.events_schema`` (one metadata read
-    per path per process, not per call — ADVICE r6), so the stream tracks
+    per path per process, not per call), so the stream tracks
     however the testdata encodes ``ts`` — TIMESTAMP(NANOS) (arrives as
     long under ``nanosAsLong``, converted here) or plain micros (arrives
     as a timestamp type, passed through) — instead of hardcoding one
@@ -47,8 +43,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ts`` to LTZ at the source. ``read_events_batch`` below applies the
     SAME cast to the batch scan, so every streaming operator sees one
     event-time type in both modes and the stream/batch equality tests
-    compare plans with identical schemas — no boundary casts
-    (ADVICE r6-low / VERDICT r7 item 5).
+    compare plans with identical schemas — no boundary casts.
     """
     schema = events_schema(spark, sf_dir)
     raw = (
@@ -72,8 +67,8 @@ def read_events_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     the streaming reader emits. Under the pinned-UTC session the cast is
     wall-clock exact, so a streaming operator applied to this frame is
     the streaming plan's schema-identical batch twin — equality tests
-    compare the two directly, with no cast at the comparison boundary
-    (VERDICT r7 item 5). The oracle-checked registry twins
+    compare the two directly, with no cast at the comparison boundary.
+    The oracle-checked registry twins
     (queries/streaming_ops.py) keep reading through ``load_table``; the
     checker canonicalizes LTZ and NTZ to one timestamp label, so both
     spellings certify the same values."""
@@ -192,61 +187,6 @@ def rolling_distinct_daily(
         .select(
             F.col("w.end").cast("date").alias("window_end"), "n_users_7d"
         )
-    )
-
-
-def user_tier_dim(spark, n_users: int = 1024) -> DataFrame:
-    """Static enrichment dimension: user_id → tier, derived by pure
-    arithmetic so stream and batch (and any oracle) agree bit-for-bit.
-    Stands in for the profile table a real pipeline would load."""
-    return spark.range(0, n_users).select(
-        F.col("id").alias("user_id"),
-        F.element_at(
-            F.array(F.lit("bronze"), F.lit("silver"), F.lit("gold")),
-            (F.col("id") % 3 + 1).cast("int"),
-        ).alias("tier"),
-    )
-
-
-def tier_enriched_counts(
-    events: DataFrame, dim: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
-    """Stream-static enrichment: the unbounded event stream joins the
-    BROADCAST static dimension (no state, no stream-stream machinery —
-    the static side re-broadcasts per micro-batch), then rolls up
-    per (tier, event_type). The join must precede the aggregation so the
-    state key is the enriched one; the broadcast keeps the stream side's
-    partitioning untouched at any scale."""
-    enriched = events.withWatermark("ts", watermark).join(
-        F.broadcast(dim), "user_id"
-    )
-    return enriched.groupBy("tier", "event_type").agg(
-        F.count("*").alias("n"),
-        F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
-    )
-
-
-def foreach_batch_upsert(
-    stream_df: DataFrame,
-    warehouse,
-    table: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Micro-batch MERGE sink: ``foreachBatch`` + keyed upsert gives the
-    stream exactly-once *effective* semantics (replayed batches re-MERGE to
-    the same state — the streaming form of the reference's idempotent
-    re-pull, SURVEY.md §2.7)."""
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        warehouse.upsert(table, batch_df)
-
-    return (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
 
 

@@ -1,16 +1,14 @@
-"""CLI guard rails for tools/check.py (same silent-scope failure family
-as sweep_batch's ADVICE-r12 argparse rewrite).
+"""CLI guard rails for tools/check.py.
 
-Before r13, a mistyped registry key — or a typo'd flag like
-``--vanila`` — landed in the key-subset filter, matched nothing, and the
-run printed "0/0 checked queries pass" with exit 0: a silent success on
-zero coverage. These tests pin the two guards.
+A mistyped registry key — or a typo'd flag like ``--vanila`` — must not
+land in the key-subset filter, match nothing, and print "0/0 checked
+queries pass" with exit 0: a silent success on zero coverage. These
+tests pin the two guards.
 
-r14 (VERDICT r13 item 4 + ADVICE r13): check.py parses via argparse
-like sweep_batch, and the unknown-key guard runs on the registry import
-BEFORE the Spark session and DuckDB views are built — so every case
-here exits during argument handling or registry validation, fast, with
-no JVM spin-up.
+check.py parses via argparse, and the unknown-key guard runs on the
+registry import BEFORE the Spark session and DuckDB views are built — so
+every case here exits during argument handling or registry validation,
+fast, with no JVM spin-up.
 """
 
 from __future__ import annotations

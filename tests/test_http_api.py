@@ -100,7 +100,14 @@ def test_incremental_days_validation(client):
     r = c.post("/scheduler/etl/incremental?days=-3")
     assert r.status_code == 400
     assert r.get_json()["detail"] == "days must be >= 0"
+    # a window past 0001-01-01 (date overflow, then timedelta overflow)
+    for days in (800000, 10**10):
+        r = c.post(f"/scheduler/etl/incremental?days={days}")
+        assert r.status_code == 400, days
+        assert r.get_json()["detail"] == "days reaches before year 1"
     assert pipeline.report().count() == 0
+    assert pipeline.warehouse.read("documento_venta").count() == 0
+    assert pipeline.warehouse.read("detalle_documento").count() == 0
     # fixture docs are far older than any trailing window → loads nothing,
     # still a success response with the window length echoed
     r = c.post("/scheduler/etl/incremental?days=3")

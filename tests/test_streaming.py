@@ -1,13 +1,10 @@
 """Structured Streaming tests: the file-source stream with availableNow
-must produce the same results as the identical batch plan, and the
-foreachBatch MERGE sink must be idempotent across stream restarts."""
+must produce the same results as the identical batch plan."""
 
 from __future__ import annotations
 
-from imperio_patitas_etl_spark.sources.parquet import load_table
 from imperio_patitas_etl_spark.streaming.events import (
     dedup_counts,
-    foreach_batch_upsert,
     read_events_batch,
     read_events_stream,
     run_stream_to_memory,
@@ -62,96 +59,6 @@ def test_stream_dedup_equals_batch(spark, sf_dir):
     assert got.count() > 0
 
 
-def test_foreach_batch_upsert_idempotent(spark, sf_dir, tmp_path):
-    """Replaying the stream into the same warehouse table converges to the
-    same state (checkpoint cleared to force a full replay — the worst
-    case for an at-least-once source)."""
-    from imperio_patitas_etl_spark.sinks.warehouse import (
-        MERGE_KEYS,
-        WAREHOUSE_SCHEMAS,
-        ParquetWarehouse,
-    )
-    import pyspark.sql.types as T
-
-    # events keyed by event_id, projected into a minimal table
-    WAREHOUSE_SCHEMAS["stream_events"] = T.StructType(
-        [
-            T.StructField("event_id", T.LongType(), nullable=False),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    MERGE_KEYS["stream_events"] = "event_id"
-    from imperio_patitas_etl_spark.sinks.warehouse import UPDATE_COLS
-
-    UPDATE_COLS["stream_events"] = None
-    try:
-        wh = ParquetWarehouse(spark, str(tmp_path / "wh"))
-        src = read_events_stream(spark, sf_dir).select("event_id", "event_type", "value")
-        q = foreach_batch_upsert(src, wh, "stream_events", str(tmp_path / "ck1"))
-        q.awaitTermination()
-        n1 = wh.read("stream_events").count()
-        # fresh checkpoint → full replay → same end state
-        q2 = foreach_batch_upsert(src, wh, "stream_events", str(tmp_path / "ck2"))
-        q2.awaitTermination()
-        n2 = wh.read("stream_events").count()
-        assert n1 == n2 == load_table(spark, sf_dir, "events").count()
-    finally:
-        WAREHOUSE_SCHEMAS.pop("stream_events", None)
-        MERGE_KEYS.pop("stream_events", None)
-        UPDATE_COLS.pop("stream_events", None)
-
-
-def test_foreach_batch_upsert_equals_batch_upsert(spark, sf_dir, tmp_path):
-    """End-to-end pipeline equality (VERDICT r8 item 7): streaming the
-    events through ``foreachBatch`` → MERGE must leave the warehouse in
-    EXACTLY the state a single batch upsert of the same input produces —
-    value-level row-set equality, not just matching counts. The micro-
-    batch decomposition (N merges in source order) and the one-shot
-    merge agree because the MERGE is keyed latest-wins per batch and the
-    source carries one row per key."""
-    from imperio_patitas_etl_spark.sinks.warehouse import (
-        MERGE_KEYS,
-        UPDATE_COLS,
-        WAREHOUSE_SCHEMAS,
-        ParquetWarehouse,
-    )
-    import pyspark.sql.types as T
-
-    WAREHOUSE_SCHEMAS["stream_events"] = T.StructType(
-        [
-            T.StructField("event_id", T.LongType(), nullable=False),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-        ]
-    )
-    MERGE_KEYS["stream_events"] = "event_id"
-    UPDATE_COLS["stream_events"] = None
-    cols = ["event_id", "event_type", "value"]
-    try:
-        wh_s = ParquetWarehouse(spark, str(tmp_path / "wh_stream"))
-        q = foreach_batch_upsert(
-            read_events_stream(spark, sf_dir).select(*cols),
-            wh_s,
-            "stream_events",
-            str(tmp_path / "ck"),
-        )
-        q.awaitTermination()
-
-        wh_b = ParquetWarehouse(spark, str(tmp_path / "wh_batch"))
-        wh_b.ensure_table("stream_events")
-        wh_b.upsert("stream_events", read_events_batch(spark, sf_dir).select(*cols))
-
-        got = _as_set(wh_s.read("stream_events").select(*cols))
-        want = _as_set(wh_b.read("stream_events").select(*cols))
-        assert got == want
-        assert len(got) > 0
-    finally:
-        WAREHOUSE_SCHEMAS.pop("stream_events", None)
-        MERGE_KEYS.pop("stream_events", None)
-        UPDATE_COLS.pop("stream_events", None)
-
-
 def test_stream_stream_interval_join_equals_batch(spark, sf_dir):
     """Stream-stream event-time interval self-join (errors ⋈ clicks
     within 10 minutes) under availableNow must emit exactly the batch
@@ -165,24 +72,6 @@ def test_stream_stream_interval_join_equals_batch(spark, sf_dir):
         mode="append",
     )
     want = clicks_after_errors(read_events_batch(spark, sf_dir))
-    assert _as_set(got) == _as_set(want)
-    assert got.count() > 0
-
-
-def test_stream_static_enrichment_equals_batch(spark, sf_dir):
-    """Stream-static broadcast join: the streaming events enriched with
-    a static tier dimension then aggregated must equal the same plan run
-    in batch — the enrichment pattern every near-line pipeline uses
-    before its rollups."""
-    from imperio_patitas_etl_spark.streaming.events import (
-        tier_enriched_counts,
-        user_tier_dim,
-    )
-
-    dim = user_tier_dim(spark)
-    stream = tier_enriched_counts(read_events_stream(spark, sf_dir), dim)
-    got = run_stream_to_memory(stream, "t_tier")
-    want = tier_enriched_counts(read_events_batch(spark, sf_dir), dim)
     assert _as_set(got) == _as_set(want)
     assert got.count() > 0
 
