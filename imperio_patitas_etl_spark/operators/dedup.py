@@ -40,9 +40,3 @@ def top_k_per_group(
         .filter(F.col("_rn") <= k)
         .drop("_rn")
     )
-
-
-def dedup_exact(df: DataFrame, cols: list[str]) -> DataFrame:
-    """Exact dedup on a column subset via hash aggregate — map-side partial
-    aggregation makes this the cheapest dedup at scale."""
-    return df.dropDuplicates(cols)

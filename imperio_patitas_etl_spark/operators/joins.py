@@ -81,13 +81,6 @@ def derive_cost(
     )
 
 
-def delete_keys_anti(target: DataFrame, keys: DataFrame, key: str) -> DataFrame:
-    """J7/K3 delete phase: remove target rows whose key appears in ``keys``
-    (the reference's ``DELETE WHERE key IN (...)``, etl_service.py:301-311)
-    as a left-anti join — a broadcast anti-join when keys is small."""
-    return target.join(F.broadcast(keys.select(key).distinct()), on=key, how="left_anti")
-
-
 def fk_orphan_report(child: DataFrame, parent: DataFrame, fk: str, pk: str) -> DataFrame:
     """J8: the reference skips FK validation (etl_service.py:667-670); the
     engine surfaces dangling FKs as a data-quality report via anti-join."""

@@ -7,7 +7,7 @@ pattern is:
 - content is an opaque ``BinaryType`` column — Spark never interprets it;
 - typed metadata (width/height/sample-rate/frames) travels in a struct
   column so filters/joins on it stay JVM-side and pushdown-capable;
-- per-asset compute (decode, resize, feature extraction) runs in
+- per-asset compute (resize, feature extraction) runs in
   ``mapInPandas`` — Arrow ships binary batches to Python with zero-copy,
   and ``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds batch memory
   (decoded media is far larger than its compressed bytes);
@@ -15,12 +15,11 @@ pattern is:
   decode cost evenly; at 100 TB the table would be stored bucketed by
   asset_id so the shuffle disappears.
 
-The actual codec step is STUBBED: this container has no image/audio
-libraries, so ``decode_image`` tries Pillow and otherwise falls back to a
-clearly-marked deterministic fake that parses this module's synthetic
-header format (``synth_media``). The Spark-side plumbing — schemas, UDF
-signatures, Arrow batch shapes, partitioning — is real and tested
-(tests/test_multimodal.py).
+The codec step is a deterministic fake: ``resize_media`` rewrites this
+module's synthetic header (``SYNT`` + big-endian width/height) instead of
+resampling pixels. The Spark-side plumbing — schemas, UDF signatures,
+Arrow batch shapes, partitioning — is real and tested
+(tests/test_multimodal.py, whose fixture writes that header).
 """
 
 from __future__ import annotations
@@ -30,7 +29,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -57,76 +56,6 @@ MEDIA_SCHEMA = T.StructType(
 
 #: synthetic header: magic 'SYNT' + u16 width + u16 height (big-endian)
 _MAGIC = b"SYNT"
-
-
-def synth_media(spark: SparkSession, n: int = 64, partitions: int = 4) -> DataFrame:
-    """Deterministic fake media table: payload bytes derived from asset_id,
-    header encodes dimensions so the stub decoder has something real to
-    parse. Stands in for a parquet table with a binary column."""
-    rows = []
-    for i in range(n):
-        w, h = 16 + (i % 8) * 4, 16 + (i % 5) * 4
-        kind = ("image", "audio", "video")[i % 3]
-        body = bytes((i * 31 + j * 7) % 256 for j in range(w * h % 97 + 32))
-        content = _MAGIC + _struct.pack(">HH", w, h) + body
-        meta = (w, h, 16000 if kind == "audio" else None, 30 if kind == "video" else None, "synt")
-        rows.append((i, kind, bytearray(content), meta))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA).repartition(partitions, "asset_id")
-
-
-DECODED_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("mean_byte", T.DoubleType()),
-    ]
-)
-
-
-def _decode_one(content: bytes) -> tuple[int, int]:
-    """Parse dimensions. Pillow path for real images; deterministic fake
-    for the synthetic header. Raises NotImplementedError for genuinely
-    unknown formats — the stub boundary, marked loudly on purpose."""
-    try:  # real decoder, absent in this container
-        from PIL import Image  # type: ignore
-        import io
-
-        with Image.open(io.BytesIO(content)) as im:
-            return im.width, im.height
-    except ImportError:
-        pass
-    if content[:4] == _MAGIC:
-        w, h = _struct.unpack(">HH", content[4:8])
-        return int(w), int(h)
-    raise NotImplementedError(
-        "media decode is stubbed: no codec library in this environment and "
-        "content is not in the synthetic SYNT format"
-    )
-
-
-def decode_media(df: DataFrame) -> DataFrame:
-    """Decode step as ``mapInPandas``: binary in, per-asset dims + byte
-    stats out. One Arrow batch in, one DataFrame out per iteration — the
-    generator shape keeps peak memory at one batch."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            dims = [_decode_one(bytes(c)) for c in pdf["content"]]
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "width": [d[0] for d in dims],
-                    "height": [d[1] for d in dims],
-                    "n_bytes": [len(bytes(c)) for c in pdf["content"]],
-                    "mean_byte": [
-                        float(sum(bytes(c)) / len(bytes(c))) for c in pdf["content"]
-                    ],
-                }
-            )
-
-    return df.mapInPandas(_decode, DECODED_SCHEMA)
 
 
 def resize_media(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
@@ -202,7 +131,7 @@ FRAME_SCHEMA = T.StructType(
 def sample_frames(df: DataFrame, every_n: int = 10) -> DataFrame:
     """Video frame sampling — pure JVM plumbing, no UDF: explode the frame
     index space from metadata and keep every n-th. The decode of sampled
-    frames would chain a ``mapInPandas`` like :func:`decode_media`."""
+    frames would chain a ``mapInPandas`` like :func:`resize_media`."""
     frames = df.filter(F.col("kind") == "video").select(
         "asset_id",
         F.explode(F.sequence(F.lit(0), F.col("meta.n_frames") - 1)).alias("frame_idx"),

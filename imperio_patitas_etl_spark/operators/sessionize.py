@@ -1,10 +1,11 @@
-"""Sessionization operators: plain and skew-sharded.
+"""Sessionization operators: plain and skew-sharded, on one gap rule.
 
-``sessionize`` is the gaps-and-islands idiom the registry query
-(`queries/streaming_ops.py:q_sessionize_events`) runs: lag detects gap
-starts (gap ≥ threshold ⇒ new session, the ``session_window``
-convention), a running sum numbers each user's sessions, and a
-re-aggregation emits one row per session.
+``session_no`` is the one gaps-and-islands ordinal every session build
+uses: lag detects gap starts (gap ≥ threshold ⇒ new session, the
+``session_window`` convention) and a running sum numbers each partition's
+sessions 1..k in window order. ``sessionize`` (the ``sessionize_events``
+key) applies it per user and re-aggregates one row per session;
+``q_session_path_trigrams`` applies it inside its own look-ahead window.
 
 ``sessionize_sharded`` is the scale fix documented in SCALE.md for the
 pathological key: a single user with an event stream too large to sort in
@@ -26,33 +27,42 @@ immunity.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from pyspark.sql.window import Window, WindowSpec
 
 from imperio_patitas_etl_spark.functions.cleaning import epoch_us
 
-DEFAULT_GAP_US = 30 * 60 * 1_000_000
+#: session gap in exact integer microseconds; the oracles interpolate it
+SESSION_GAP_US = 30 * 60 * 1_000_000
 
 
-def _merge_spans(spans: DataFrame, gap_us: int) -> DataFrame:
-    """Gaps-and-islands over (user_id, start_us, end_us, n_events,
+def session_no(
+    w: WindowSpec, start_us: Column, end_us: Column, gap_us: int = SESSION_GAP_US
+) -> Column:
+    """Session ordinal of each row over ``w``: a row opens a session when
+    it is its partition's first or starts ≥ ``gap_us`` after the previous
+    row's end; the running sum of those openings numbers the sessions."""
+    prev_end = F.lag(end_us).over(w)
+    new_sess = F.when(
+        prev_end.isNull() | (start_us - prev_end >= gap_us), 1
+    ).otherwise(0)
+    return F.sum(new_sess).over(w.rowsBetween(Window.unboundedPreceding, 0))
+
+
+def _merge_spans(
+    spans: DataFrame, gap_us: int, keys: tuple[str, ...] = ("user_id",)
+) -> DataFrame:
+    """Gaps-and-islands over (``keys``, start_us, end_us, n_events,
     first_ts, last_ts, tie) span rows: merge consecutive spans whose gap
-    is under the threshold; number the merged spans per user in time
+    is under the threshold; number the merged spans per ``keys`` in time
     order."""
-    w = Window.partitionBy("user_id").orderBy("start_us", "tie")
-    prev_end = F.lag("end_us").over(w)
-    new_sess = (
-        F.when(prev_end.isNull() | (F.col("start_us") - prev_end >= gap_us), 1)
-        .otherwise(0)
-    )
+    w = Window.partitionBy(*keys).orderBy("start_us", "tie")
     numbered = spans.select(
         "*",
-        F.sum(new_sess)
-        .over(w.rowsBetween(Window.unboundedPreceding, 0))
-        .alias("session_no"),
+        session_no(w, F.col("start_us"), F.col("end_us"), gap_us).alias("session_no"),
     )
-    return numbered.groupBy("user_id", "session_no").agg(
+    return numbered.groupBy(*keys, "session_no").agg(
         F.sum("n_events").alias("n_events"),
         F.min("first_ts").alias("first_ts"),
         F.max("last_ts").alias("last_ts"),
@@ -74,7 +84,7 @@ def _event_spans(events: DataFrame) -> DataFrame:
     )
 
 
-def sessionize(events: DataFrame, gap_us: int = DEFAULT_GAP_US) -> DataFrame:
+def sessionize(events: DataFrame, gap_us: int = SESSION_GAP_US) -> DataFrame:
     """One-shuffle sessionization; output one row per (user_id,
     session_no) with n_events / first_ts / last_ts."""
     return _merge_spans(_event_spans(events), gap_us).select(
@@ -84,7 +94,7 @@ def sessionize(events: DataFrame, gap_us: int = DEFAULT_GAP_US) -> DataFrame:
 
 def sessionize_sharded(
     events: DataFrame,
-    gap_us: int = DEFAULT_GAP_US,
+    gap_us: int = SESSION_GAP_US,
     shard_us: int = 24 * 3600 * 1_000_000,
 ) -> DataFrame:
     """Skew-immune sessionization: per-(user, shard) local sessions, then
@@ -97,28 +107,14 @@ def sessionize_sharded(
     )
     # level 1: event-level islands within each (user, shard) — the hot
     # user's events split across shards, so no single task sorts them all
-    w = Window.partitionBy("user_id", "shard").orderBy("start_us", "tie")
-    prev_end = F.lag("end_us").over(w)
-    new_sess = (
-        F.when(prev_end.isNull() | (F.col("start_us") - prev_end >= gap_us), 1)
-        .otherwise(0)
-    )
-    local = (
-        spans.select(
-            "*",
-            F.sum(new_sess)
-            .over(w.rowsBetween(Window.unboundedPreceding, 0))
-            .alias("local_no"),
-        )
-        .groupBy("user_id", "shard", "local_no")
-        .agg(
-            F.sum("n_events").alias("n_events"),
-            F.min("first_ts").alias("first_ts"),
-            F.max("last_ts").alias("last_ts"),
-            F.min("start_us").alias("start_us"),
-            F.max("end_us").alias("end_us"),
-        )
-        .withColumn("tie", F.col("shard"))
+    local = _merge_spans(spans, gap_us, ("user_id", "shard")).select(
+        "user_id",
+        "n_events",
+        "first_ts",
+        "last_ts",
+        "start_us",
+        "end_us",
+        F.col("shard").alias("tie"),
     )
     # level 2: the same islands merge over per-shard session summaries
     return _merge_spans(local, gap_us).select(

@@ -63,7 +63,7 @@ def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     open interval, insert the new one) — the upsert machinery in
     operators/upsert.py composes with this directly. The window build
     lives in ``operators/scd2.py:scd2_from_orders`` (shared with the
-    incremental and streaming paths)."""
+    incremental path)."""
     from imperio_patitas_etl_spark.operators.scd2 import scd2_from_orders
 
     h = scd2_from_orders(load_table(spark, sf_dir, "orders"))

@@ -26,7 +26,6 @@ from imperio_patitas_etl_spark.functions.cleaning import (
 from imperio_patitas_etl_spark.operators.dedup import dedup_first_wins, top_k_per_group
 from imperio_patitas_etl_spark.operators.joins import (
     broadcast_lookup,
-    delete_keys_anti,
     explode_nested,
     fk_orphan_report,
 )
@@ -904,9 +903,8 @@ def q_date_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming §2.7: tumbling 1-hour event-time window aggregation — the
-    batch-equivalent plan of the Structured Streaming ingest path
-    (streaming/stream.py); F.window is identical in both modes."""
+    """Streaming §2.7: tumbling 1-hour event-time window aggregation;
+    F.window assigns the same windows in batch and streaming mode."""
     e = load_table(spark, sf_dir, "events")
     return (
         e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")

@@ -31,7 +31,7 @@ _OUT = T.StructType(
 
 def q_multimodal_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column decode plumbing over a real table: text → binary →
-    mapInPandas byte stats (the same batch shape decode_media uses)."""
+    mapInPandas byte stats (the same batch shape resize_media uses)."""
     # coalesce: the documents table is small relative to the executor
     # count — 4 Arrow batches beat 32 near-empty Python workers. At real
     # scale the equivalent sizing lever is arrow.maxRecordsPerBatch.

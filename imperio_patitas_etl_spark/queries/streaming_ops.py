@@ -1,18 +1,22 @@
-"""Oracle-checked batch twins of the streaming operators.
+"""Event-time window operators over the ``events`` table, each an
+oracle-checked batch plan.
 
-``F.window`` / ``F.session_window`` produce identical results in batch and
-streaming mode (watermarks are a no-op on batch inputs), so each streaming
-operator in ``streaming/events.py`` is exercised here on the ``events``
-table as a batch plan with an exact DuckDB oracle:
+The reference runs no streams: its "incremental sync" is a cron that
+re-pulls a trailing window and re-upserts (scheduler_endpoints.py:71-125).
+The operators here are the event-time families a stream would run —
+sliding and session windows, watermark-style dedup, the trailing-window
+distinct count, the event-time interval join — written as batch plans:
 
 - sliding window → per-offset integer floor arithmetic in SQL;
 - session window → gaps-and-islands (lag + cumulative session starts);
 - props JSON access → ``get_json_object`` ↔ ``json_extract_string``.
 
-The true ``readStream`` paths (file source, availableNow) are covered
-by tests/test_streaming.py, which asserts stream ≡ batch
-on the same input — the correctness argument is transitivity: stream ≡
-batch (test) and batch ≡ oracle (driver t2 gate).
+``F.window`` and ``F.session_window`` assign the same windows in batch
+and streaming mode, and a watermark only bounds a stream's state (Spark's
+analyzer drops it from a batch plan), so a streaming deployment would add
+``readStream`` and ``withWatermark`` around these same functions. The
+window arithmetic each key shares with that form is what the exact DuckDB
+oracle certifies.
 """
 
 from __future__ import annotations
@@ -22,20 +26,30 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from imperio_patitas_etl_spark.functions.cleaning import epoch_us
-from imperio_patitas_etl_spark.sources.parquet import load_table
-from imperio_patitas_etl_spark.streaming.events import (
-    dedup_counts,
-    session_counts,
-    sliding_value_sum,
+from imperio_patitas_etl_spark.operators.sessionize import (
+    SESSION_GAP_US,
+    session_no,
+    sessionize,
+    sessionize_sharded,
 )
+from imperio_patitas_etl_spark.sources.parquet import load_table
 
 WINDOW_S = 3600
 SLIDE_S = 1800
 
 
+def sliding_value_sum(events: DataFrame) -> DataFrame:
+    """Sliding 1h/30min window value sums — each event lands in two
+    windows."""
+    return (
+        events.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
+        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
+        .select(F.col("w.start").alias("win_start"), "n", "total_value")
+    )
+
+
 def q_stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding 1h/30min window over events — same plan the streaming path
-    runs (streaming/events.py:sliding_value_sum)."""
+    """Sliding 1h/30min window over events (``sliding_value_sum``)."""
     return sliding_value_sum(load_table(spark, sf_dir, "events"))
 
 
@@ -54,9 +68,22 @@ ORACLE_SLIDING = f"""
 """
 
 
+def session_counts(events: DataFrame) -> DataFrame:
+    """Gap-based session windows per user (built-in ``session_window`` —
+    merges adjacent events closer than 30 minutes)."""
+    return (
+        events.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
+        .agg(
+            F.count("*").alias("n_events"),
+            F.min("ts").alias("first_ts"),
+            F.max("ts").alias("last_ts"),
+        )
+        .select("user_id", "n_events", "first_ts", "last_ts")
+    )
+
+
 def q_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based (30 min) session windows per user — the custom-stateful
-    streaming operator surface, batch twin (streaming/events.py:session_counts)."""
+    """Gap-based (30 min) session windows per user (``session_counts``)."""
     return session_counts(load_table(spark, sf_dir, "events"))
 
 
@@ -80,11 +107,24 @@ ORACLE_SESSION = """
 """
 
 
+def dedup_counts(events: DataFrame) -> DataFrame:
+    """Replay dedup: at-least-once sources replay rows, so near-line
+    pipelines dedup on a business key before aggregating. Key =
+    (user_id, event_type, minute bucket); output = distinct-key counts per
+    event_type, which makes the result independent of WHICH duplicate
+    survives — so a stream's first-arrival-wins
+    ``dropDuplicatesWithinWatermark`` would count the same as this
+    arbitrary-survivor ``dropDuplicates``."""
+    keyed = events.select(
+        "user_id", "event_type", F.date_trunc("minute", F.col("ts")).alias("minute")
+    )
+    deduped = keyed.dropDuplicates(["user_id", "event_type", "minute"])
+    return deduped.groupBy("event_type").agg(F.count("*").alias("n_unique"))
+
+
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermarked stream dedup, batch twin: distinct (user, type, minute)
-    keys counted per event type (streaming/events.py:dedup_counts; the
-    streaming path uses dropDuplicatesWithinWatermark and is asserted
-    stream ≡ batch in tests/test_streaming.py)."""
+    """Distinct (user, type, minute) keys counted per event type
+    (``dedup_counts``)."""
     return dedup_counts(load_table(spark, sf_dir, "events"))
 
 
@@ -216,16 +256,14 @@ ORACLE_RANGE_JOIN = """
 """
 
 
-SESSION_GAP_US = 30 * 60 * 1_000_000
-
-
 def q_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch sessionization with explicit session ORDINALS — the
     gaps-and-islands idiom ``session_window`` doesn't give you: lag
     detects gap starts, a running sum numbers each user's sessions
     1..k in time order, and a re-aggregation emits one row per numbered
-    session. Downstream training pipelines key on (user, session_no), so
-    the ordinal matters, not just the window bounds.
+    session (``operators/sessionize.py:sessionize``). Downstream training
+    pipelines key on (user, session_no), so the ordinal matters, not just
+    the window bounds.
 
     Scale shape: both window functions and the final groupBy partition by
     user_id — ONE shuffle total, then all three steps run within the same
@@ -233,30 +271,8 @@ def q_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     without re-exchanging). Gap comparison is exact integer microseconds
     (unix_micros ↔ epoch_us), immune to double-seconds precision drift.
     The ≥-gap convention matches ``session_counts``/``session_window``."""
-    e = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev_us = F.lag(epoch_us("ts")).over(w)
-    new_sess = (
-        F.when(
-            prev_us.isNull()
-            | (epoch_us("ts") - prev_us >= SESSION_GAP_US),
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-    )
-    numbered = e.select(
-        "user_id",
-        "ts",
-        F.sum(new_sess).over(w.rowsBetween(Window.unboundedPreceding, 0)).alias(
-            "session_no"
-        ),
-    )
-    return numbered.groupBy("user_id", "session_no").agg(
-        F.count("*").alias("n_events"),
-        F.min("ts").alias("first_ts"),
-        F.max("ts").alias("last_ts"),
+    return sessionize(
+        load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
     )
 
 
@@ -291,26 +307,44 @@ def q_sessionize_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     Results are provably identical to ``sessionize_events`` (property-
     tested in tests/test_sessionize_sharded.py), so this key shares its
     oracle; a green row certifies the skew path end-to-end."""
-    from imperio_patitas_etl_spark.operators.sessionize import sessionize_sharded
-
     e = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
     return sessionize_sharded(e)
 
 
+def clicks_after_errors(events: DataFrame) -> DataFrame:
+    """Event-time INTERVAL self-join: every click landing inside the
+    10 minutes after an error event of the same user — the join family
+    behind alert correlation and attribution.
+
+    Equi on user + event-time range residual: Spark keys the join on the
+    equality and evaluates the range as a residual filter — no nested
+    loop. The range bound is also what would let a stream-stream form
+    expire state: an error row can only match clicks within
+    [err_ts, err_ts + 10 minutes)."""
+    e = events.filter(F.col("event_type") == "error").select(
+        F.col("event_id").alias("err_id"),
+        F.col("user_id").alias("err_user"),
+        F.col("ts").alias("err_ts"),
+    )
+    c = events.filter(F.col("event_type") == "click").select(
+        F.col("user_id").alias("click_user"),
+        F.col("ts").alias("click_ts"),
+        F.col("value").alias("click_value"),
+    )
+    return e.join(
+        c,
+        F.expr(
+            "err_user = click_user AND click_ts >= err_ts "
+            "AND click_ts < err_ts + INTERVAL 10 minutes"
+        ),
+    ).select("err_id", "click_ts", "click_value")
+
+
 def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream interval join, batch twin: every click within 10
-    minutes after an error of the same user, as raw (err, click) pairs —
-    the event-time join family (streaming/events.py:clicks_after_errors).
-
-    This runs the EXACT join expression the streaming path runs (equi on
-    user + event-time range residual; Spark keys the join on the equality
-    and evaluates the range as a residual filter — no nested loop), so
-    the green row certifies the join semantics; stream ≡ batch is
-    asserted in tests/test_streaming.py. The scale path for backfills is
-    the binned equi-join plan under the ``range_join`` key — same
-    semantics, pre-grouped."""
-    from imperio_patitas_etl_spark.streaming.events import clicks_after_errors
-
+    """Interval join: every click within 10 minutes after an error of the
+    same user, as raw (err, click) pairs (``clicks_after_errors``). The
+    scale path for backfills is the binned equi-join plan under the
+    ``range_join`` key — same semantics, pre-grouped."""
     return clicks_after_errors(load_table(spark, sf_dir, "events"))
 
 
@@ -324,25 +358,32 @@ ORACLE_STREAM_INTERVAL_JOIN = """
 
 
 # --------------------------------------------------------------------------
-# stream_rolling_distinct — sliding-window distinct users, streaming twin
+# stream_rolling_distinct — sliding-window distinct users
 # --------------------------------------------------------------------------
 
 
-def q_stream_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the streaming trailing-7-day distinct-users plan
-    (streaming/events.py:rolling_distinct_daily): F.window explode →
-    dedup on (user, window) → count per window — the two-level rewrite
-    that makes COUNT(DISTINCT) over a sliding window a bounded-state
-    streaming pipeline. The stream runs the SAME function with
-    ``dropDuplicatesWithinWatermark`` (equality pinned in
-    tests/test_streaming.py); the green oracle row here certifies the
-    shared window arithmetic. Complements ``rolling_distinct_users``,
-    which labels windows by inclusive last active day instead of
-    F.window's exclusive end."""
-    from imperio_patitas_etl_spark.streaming.events import (
-        rolling_distinct_daily,
+def rolling_distinct_daily(events: DataFrame) -> DataFrame:
+    """Exact trailing-window distinct active users (the WAU curve):
+    COUNT(DISTINCT) per sliding window rewritten as dedup on
+    (user, window) then a plain count per window — the two-level form a
+    bounded-state stream can also run. Each event lands in seven 7-day
+    windows (1-day slide); the dedup collapses to ACTIVE (user, window)
+    pairs, the same collapse ``rolling_distinct_users`` relies on. Output
+    labels the window by its exclusive-end day cast to DATE."""
+    keyed = events.select("user_id", F.window("ts", "7 days", "1 day").alias("w"))
+    return (
+        keyed.dropDuplicates(["user_id", "w"])
+        .groupBy("w")
+        .agg(F.count("*").alias("n_users_7d"))
+        .select(F.col("w.end").cast("date").alias("window_end"), "n_users_7d")
     )
 
+
+def q_stream_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Trailing-7-day distinct users per window (``rolling_distinct_daily``):
+    F.window explode → dedup on (user, window) → count per window.
+    Complements ``rolling_distinct_users``, which labels windows by
+    inclusive last active day instead of F.window's exclusive end."""
     return rolling_distinct_daily(load_table(spark, sf_dir, "events"))
 
 
@@ -371,10 +412,10 @@ PATH_TOPK = 20
 
 
 def q_session_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top {PATH_TOPK} three-step event paths users take WITHIN a
+    """Top ``PATH_TOPK`` three-step event paths users take WITHIN a
     session (the "view → click → purchase vs view → view → view" path
     analysis behind funnel design), sessions defined by the same
-    ≥{SESSION_GAP_US}-µs gap rule as ``sessionize_events``.
+    ``session_no`` gap rule as ``sessionize_events``.
 
     Scale: everything happens inside ONE user_id window pass — session
     ordinals (lag + running sum) and the two look-aheads share the same
@@ -388,22 +429,9 @@ def q_session_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "ts", "event_id", "event_type"
     )
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev_us = F.lag(epoch_us("ts")).over(w)
-    new_sess = (
-        F.when(
-            prev_us.isNull() | (epoch_us("ts") - prev_us >= SESSION_GAP_US),
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-    )
+    us = epoch_us("ts")
     numbered = e.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "event_type",
-        F.sum(new_sess)
-        .over(w.rowsBetween(Window.unboundedPreceding, 0))
-        .alias("s1"),
+        "user_id", "ts", "event_id", "event_type", session_no(w, us, us).alias("s1")
     )
     tri = numbered.select(
         F.col("event_type").alias("e1"),

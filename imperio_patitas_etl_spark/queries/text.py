@@ -1152,7 +1152,13 @@ def _rep_stats_expr(g: int) -> str:
     once over it counting runs of equal neighbors (run length = that
     gram's multiplicity). The fold is a codegen'd higher-order
     ``aggregate`` with a 4-field struct accumulator — O(positions · g)
-    per row after an O(p log p) sort, zero exchanges."""
+    per row after an O(p log p) sort, zero exchanges.
+
+    No key runs this expression: ``quality_gopher`` uses the vectorized
+    ``_gopher_rep_stats`` kernel. It is kept as the independent
+    reference that kernel's test compares against row for row
+    (tests/test_quality_clusters.py), so it stays next to the kernel it
+    specifies."""
     grams = _ngrams_expr(g)
     return (
         "aggregate("

@@ -1,10 +1,11 @@
 """SparkSession factory with scale-appropriate defaults.
 
 The engine targets large multi-executor clusters; locally we run
-``local[N]``. All settings below are cluster-safe: AQE re-plans at runtime
-(skew joins, partition coalescing), timezone is pinned to UTC so results
-are reproducible against external oracles (SURVEY.md §7 hard-part 5), and
-Arrow is enabled for any Pandas-UDF path.
+``local[N]``. All settings below are cluster-safe: timezone is pinned to
+UTC so results are reproducible against external oracles (SURVEY.md §7
+hard-part 5), and Arrow is enabled for any Pandas-UDF path. Spark 4's
+defaults already give AQE (skew joins, partition coalescing), parquet
+filter pushdown and 128 MB file splits, so they are not restated.
 """
 
 from __future__ import annotations
@@ -12,8 +13,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def _default_driver_mem() -> str:
@@ -37,29 +36,21 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
 
-    AQE is on: at 100 TB the static shuffle-partition count is always wrong
-    somewhere, so we give a generous initial number and let AQE coalesce and
-    split skewed partitions at runtime.
+    AQE is on (Spark's default): at 100 TB the static shuffle-partition
+    count is always wrong somewhere, so we give a generous initial number
+    and let AQE coalesce and split skewed partitions at runtime.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
         .config("spark.sql.session.timeZone", "UTC")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
         # testdata events.parquet stores TIMESTAMP(NANOS) which Spark cannot
         # read natively; read as long and convert in sources/parquet.py.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.files.maxPartitionBytes", "128MB")
         # local[N] drives N concurrent tasks through one JVM; an 8g heap
         # left GC dominating run-to-run variance on the 32-core bench box
         # (measured ±40% on the bench total; 24g restored ±4%). The

@@ -19,25 +19,8 @@ def ensure_nanos_conf(spark: SparkSession) -> None:
 
     ``get_spark`` already sets it at build time; this runtime set exists
     ONLY for externally-built sessions (the driver harness) that scan the
-    TIMESTAMP(NANOS) events table — without it the scan fails outright.
-    Centralized here so the batch and streaming readers share one
-    documented mutation point instead of each reader touching session
-    state."""
+    TIMESTAMP(NANOS) events table — without it the scan fails outright."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
-
-#: Footer-peeked events schemas by path — the streaming reader needs a
-#: declared schema, and re-peeking per call is hidden I/O.
-_EVENTS_SCHEMA_CACHE: dict = {}
-
-
-def events_schema(spark: SparkSession, sf_dir: str):
-    """Schema of the events parquet (footer metadata read, cached)."""
-    path = os.path.join(sf_dir, "events.parquet")
-    if path not in _EVENTS_SCHEMA_CACHE:
-        ensure_nanos_conf(spark)
-        _EVENTS_SCHEMA_CACHE[path] = spark.read.parquet(path).schema
-    return _EVENTS_SCHEMA_CACHE[path]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from imperio_patitas_etl_spark.operators.dedup import dedup_first_wins, top_k_per_group
 from imperio_patitas_etl_spark.operators.joins import (
     broadcast_lookup,
-    delete_keys_anti,
     derive_cost,
     explode_nested,
     fk_orphan_report,
@@ -60,12 +59,6 @@ def test_derive_cost_branches(spark):
     )
     out = {r["id"]: r["costo_neto"] for r in derive_cost(df).collect()}
     assert out == {1: 7.0, 2: 65.0, 3: None, 4: None}
-
-
-def test_delete_keys_anti(spark):
-    target = spark.createDataFrame([(1,), (2,), (3,)], "k int")
-    keys = spark.createDataFrame([(2,), (9,)], "k int")
-    assert sorted(r["k"] for r in delete_keys_anti(target, keys, "k").collect()) == [1, 3]
 
 
 def test_fk_orphan_report(spark):

@@ -135,9 +135,9 @@ def _orders_df(spark, data):
 def test_scd2_fold_equals_rebuild(spark, data, cuts):
     """Applying the change feed as ANY sequence of date-contiguous
     batches reproduces the batch rebuild exactly — the invariant behind
-    both scd2_incremental and the streaming foreachBatch sink, checked
-    here over random feeds and random split points (splits fall between
-    distinct days, the precondition scd2_apply documents)."""
+    scd2_incremental, checked here over random feeds and random split
+    points (splits fall between distinct days, the precondition
+    scd2_apply documents)."""
     from imperio_patitas_etl_spark.operators.scd2 import (
         SCD2_COLS,
         scd2_apply,

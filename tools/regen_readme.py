@@ -22,7 +22,7 @@ HEADINGS = {
     "entity": "Reference-fidelity entity pipeline (scalar layer + "
     "filter/project)",
     "tpch": "TPC-H plan shapes (all 22; Q2/Q11 over a derived partsupp)",
-    "streaming_ops": "Streaming twins, event-time joins, sessionization",
+    "streaming_ops": "Event-time windows, joins, sessionization",
     "text": "Text analysis + deduplication + corpus filtering + "
     "collocations",
     "corpus": "Corpus assembly (chunk/pack/span-dedup/PII/mixture/BPE/"
