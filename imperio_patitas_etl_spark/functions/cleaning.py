@@ -129,6 +129,18 @@ def sql_round2_exact(expr: str, true_decimals: int = 4) -> str:
     )
 
 
+def md5int(x: str) -> str:
+    """Spark SQL for a cross-engine deterministic 60-bit hash of string
+    expression ``x``: the first 15 hex chars of its md5 as a BIGINT
+    (fits signed 64). Identical in both engines to :func:`sql_md5int`."""
+    return f"CAST(conv(substring(md5({x}), 1, 15), 16, 10) AS BIGINT)"
+
+
+def sql_md5int(x: str) -> str:
+    """DuckDB-side twin of :func:`md5int`."""
+    return f"(('0x' || substr(md5({x}), 1, 15))::BIGINT)"
+
+
 def avg2_exact(sum_col: Column, count_col: Column) -> Column:
     """Exact 2-decimal average of 2-decimal values: integer-cents division
     with half-up rounding — immune to double division ties.
@@ -175,7 +187,7 @@ def sql_avg2_exact(sum_expr: str, count_expr: str) -> str:
     )
 
 
-def consistency_flag(observed: Column, expected: Column, tol: float = 0.01) -> Column:
-    """F5: data-quality flag — |observed − expected| > tol flags but never
-    drops (etl_service.py:138-141,182-188)."""
-    return F.abs(observed - expected) > F.lit(tol)
+def consistency_flag(observed: Column, expected: Column) -> Column:
+    """F5: data-quality flag — |observed − expected| > 0.01 flags but
+    never drops (etl_service.py:138-141,182-188)."""
+    return F.abs(observed - expected) > F.lit(0.01)

@@ -1,31 +1,89 @@
-"""Distributed graph connectivity operators.
+"""Graph operators: connected components and fixed-iteration PageRank.
+
+``connected_components`` is the one CC operator. Its edge sets are the
+near-duplicate pair lists of the cluster keys, bounded by the near-dup
+output rather than the corpus: tens of rep pairs at sf0.1. It reads at
+most ``CC_DRIVER_MAX_EDGES + 1`` edges in one job; when that is all of
+them it finishes with union-find on the driver, otherwise it runs the
+distributed star contraction.
 
 ``connected_components_star`` is the alternating large-star / small-star
 algorithm (Kiveris et al., "Connected Components in MapReduce and
 Beyond", SoCC 2014): each round rewires edges toward component minima, and
 the edge set converges to a star forest — every node points at its
 component's minimum id — in O(log n) rounds REGARDLESS of graph diameter.
-
-This is the scale path promised in SCALE.md for duplicate clustering:
-the min-label propagation in ``queries/text.py:connected_components``
-(the registry query) converges in O(diameter) rounds, which is ideal for
-near-dup clumps (diameter 2-5) but unbounded on path-shaped graphs; the
-star algorithm trades a couple of extra shuffles per round for the
-logarithmic guarantee. Both are pure DataFrame plans — per round: a
-groupBy-min and an equi-join over skinny (node, node) edges — with
-``localCheckpoint`` per round to keep the logical plan O(1) (the lesson
-pinned in tests/test_quality_clusters.py: persistence alone lets the
-plan grow per iteration until the driver chokes on bookkeeping).
+Per round it is a groupBy-min and an equi-join over skinny (node, node)
+edges, ``localCheckpoint``-ed so the logical plan stays O(1) (persistence
+alone lets the plan grow per iteration until the driver chokes on
+bookkeeping).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from imperio_patitas_etl_spark.operators.checkpoint import release
 
 STAR_MAX_ROUNDS = 40
+
+#: Largest edge set ``connected_components`` collects and solves on the
+#: driver. Measured on 4 vCPUs (local[4]) over sparse ``spark.range``
+#: graphs: the Arrow collect plus union-find plus ``createDataFrame``
+#: takes 0.11 s at 10⁴ edges, 0.34 s at 10⁵ and 3.3–3.7 s at 10⁶, where
+#: ONE star round takes 1.6 s, 1.8 s and 7–9 s, and the star path needs
+#: a seed job and several rounds. The driver path wins at every size, so
+#: the bound is driver memory: 10⁶ edges are 16 MB of Arrow longs and a
+#: 196 MiB peak Python heap for the union-find.
+CC_DRIVER_MAX_EDGES = 1_000_000
+
+
+def connected_components(edges: DataFrame) -> DataFrame:
+    """Connected components of undirected ``edges(doc_a, doc_b)``:
+    (doc_id, cluster_id) for every edge endpoint that is not its
+    component's minimum, with cluster_id = that minimum. A node missing
+    from the result labels itself, so callers apply
+    ``coalesce(cluster_id, own id)``. Edges with a NULL endpoint and
+    self-loops carry no connectivity and are skipped on both paths.
+
+    One job collects at most ``CC_DRIVER_MAX_EDGES + 1`` edges as Arrow.
+    If that is the whole edge set, union-find runs on the driver and the
+    labels come back as a local frame, not a checkpoint, so the result
+    pins no executor blocks. A larger set goes to
+    ``connected_components_star``. Either way the result no longer reads
+    ``edges``: a caller frees an edge checkpoint as soon as this
+    returns."""
+    head = edges.select("doc_a", "doc_b").limit(CC_DRIVER_MAX_EDGES + 1).toArrow()
+    if head.num_rows > CC_DRIVER_MAX_EDGES:
+        return connected_components_star(edges)
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        while (p := parent.setdefault(x, x)) != x:
+            parent[x] = parent[p]  # path halving
+            x = parent[p]
+        return x
+
+    for a, b in zip(head["doc_a"].to_pylist(), head["doc_b"].to_pylist()):
+        if a is None or b is None or a == b:
+            continue
+        ra, rb = find(a), find(b)
+        # the smaller root wins, so every root is its component's minimum
+        if ra < rb:
+            parent[rb] = ra
+        elif rb < ra:
+            parent[ra] = rb
+    ids, roots = [], []
+    for x in parent:
+        r = find(x)
+        if r != x:
+            ids.append(x)
+            roots.append(r)
+    labels = pa.table(
+        {"doc_id": pa.array(ids, pa.int64()), "cluster_id": pa.array(roots, pa.int64())}
+    )
+    return edges.sparkSession.createDataFrame(labels, "doc_id long, cluster_id long")
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -69,26 +127,29 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components_star(docs: DataFrame, edges: DataFrame) -> DataFrame:
-    """Star-contraction connected components over ``docs(doc_id)`` and
-    undirected ``edges(doc_a, doc_b)``; returns (doc_id, cluster_id) with
-    cluster_id = min doc_id of the component — same contract and same
-    unique fixpoint as ``connected_components``, O(log n) rounds instead
-    of O(diameter).
+def connected_components_star(edges: DataFrame) -> DataFrame:
+    """Star-contraction connected components of undirected ``edges(doc_a,
+    doc_b)``, in O(log n) rounds whatever the diameter; same contract and
+    same unique fixpoint as ``connected_components``. The fixpoint edges
+    form a star forest, every non-root pointing at its root, so they are
+    the labels as they stand.
 
-    Convergence: both edge sets are DISTINCT, so set equality is
-    |cur| = |nxt| AND nxt\\cur = ∅ — ONE aggregate per round over a left
-    join of the new checkpoint against the old yields both the
-    cardinality and the novel-edge count (a count + ``exceptAll`` probe
-    would be two jobs on converged rounds; on the tiny rep graphs the
-    cluster keys feed this loop, per-job overhead IS the round cost)."""
+    The seed's distinct-edge count is an ``Observation`` on its own
+    checkpoint job. Convergence: both edge sets are DISTINCT, so set
+    equality is |cur| = |nxt| AND nxt\\cur = ∅ — ONE aggregate per round
+    over a left join of the new checkpoint against the old yields both
+    the cardinality and the novel-edge count (a count + ``exceptAll``
+    probe would be two jobs on converged rounds; on small edge sets
+    per-job overhead IS the round cost)."""
+    seen = Observation()
     cur = (
         edges.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
+        .observe(seen, F.count(F.lit(1)).alias("n"))
         .localCheckpoint()
     )
-    n_cur = cur.count()
+    n_cur = seen.get["n"]
     for _ in range(STAR_MAX_ROUNDS):
         nxt = _small_star(_large_star(cur)).localCheckpoint()
         # both sides distinct ⇒ the left join is row-preserving on nxt:
@@ -118,16 +179,7 @@ def connected_components_star(docs: DataFrame, edges: DataFrame) -> DataFrame:
         raise RuntimeError(
             f"connected_components_star did not converge in {STAR_MAX_ROUNDS} rounds"
         )
-    # fixpoint edges form a star forest: every non-root points at its root
-    labels = cur.select(F.col("a").alias("doc_id"), F.col("b").alias("cluster_id"))
-    return (
-        docs.select("doc_id")
-        .join(labels, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id"),
-        )
-    )
+    return cur.select(F.col("a").alias("doc_id"), F.col("b").alias("cluster_id"))
 
 
 def pagerank_fixed(

@@ -21,21 +21,17 @@ def explode_nested(
     array_col: str,
     alias: str,
     keep_empty: bool = False,
-    with_pos: bool = True,
 ) -> DataFrame:
-    """J1/J5: lateral unnest of an array<struct> column.
+    """J1/J5: lateral unnest of an array<struct> column, with the array
+    ordinal as ``{alias}_pos`` so "first element wins" logic (A6) is
+    deterministic.
 
     - inner explode (default): rows with empty/NULL arrays are dropped —
       products with zero variants vanish (etl_service.py:571-575).
     - ``keep_empty=True``: outer explode — document headers survive with
       zero detail lines (etl_service.py:687-694).
-    - ``with_pos``: emits the array ordinal so "first element wins" logic
-      (A6) is deterministic.
     """
     fn = F.posexplode_outer if keep_empty else F.posexplode
-    if not with_pos:
-        fn = F.explode_outer if keep_empty else F.explode
-        return df.select("*", fn(array_col).alias(alias)).drop(array_col)
     return df.select("*", fn(array_col).alias(f"{alias}_pos", alias)).drop(array_col)
 
 
@@ -56,27 +52,24 @@ def broadcast_lookup(
     return facts.join(F.broadcast(dim), on=on, how=how)
 
 
-def derive_cost(
-    df: DataFrame,
-    history_col: str = "history",
-    avg_cost_col: str = "averageCost",
-    price_col: str = "precio_neto",
-    out_col: str = "costo_neto",
-) -> DataFrame:
-    """J4 + A1: conditional cost derivation (etl_service.py:604-616).
+def derive_cost(df: DataFrame) -> DataFrame:
+    """J4 + A1: conditional cost derivation (etl_service.py:604-616) into
+    ``costo_neto``.
 
-    If any history entry has cost > 0 → use averageCost; else if price is
-    valid → price × 0.65; else NULL (row then fails validation F2).
-    ``F.exists`` is a higher-order array function — no explode, no shuffle.
+    If any ``history`` entry has cost > 0 → use ``averageCost``; else if
+    ``precio_neto`` is valid → price × 0.65; else NULL (row then fails
+    validation F2). ``F.exists`` is a higher-order array function — no
+    explode, no shuffle.
     """
     has_real_cost = F.coalesce(
-        F.exists(F.col(history_col), lambda h: h["cost"] > 0), F.lit(False)
+        F.exists(F.col("history"), lambda h: h["cost"] > 0), F.lit(False)
     )
-    price_ok = F.col(price_col).isNotNull() & (F.col(price_col) > 0)
+    price = F.col("precio_neto")
+    price_ok = price.isNotNull() & (price > 0)
     return df.withColumn(
-        out_col,
-        F.when(has_real_cost, F.col(avg_cost_col).cast("double"))
-        .when(price_ok, F.round(F.col(price_col) * 0.65, 6))
+        "costo_neto",
+        F.when(has_real_cost, F.col("averageCost").cast("double"))
+        .when(price_ok, F.round(price * 0.65, 6))
         .otherwise(F.lit(None).cast("double")),
     )
 

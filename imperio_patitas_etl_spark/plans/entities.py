@@ -110,11 +110,10 @@ def transform_products(
     raw_products: DataFrame,
     price_list: DataFrame,
     costs: DataFrame,
-    order_col: str = "product_order",
 ) -> ValidationResult:
     """sync_products (etl_service.py:550-649) as one declarative plan.
 
-    ``raw_products`` must carry an explicit ordering column ``order_col``
+    ``raw_products`` must carry an explicit ordering column ``product_order``
     (API page order in the reference); variant order inside a product comes
     from the array position.
 
@@ -140,7 +139,7 @@ def transform_products(
     """
     v = explode_nested(raw_products, "variants.items", "v")
     flat = v.select(
-        F.col(order_col),
+        "product_order",
         F.col("id").alias("product_id"),
         "name",
         "description",
@@ -155,7 +154,7 @@ def transform_products(
     active = flat.filter(F.col("state") == 0)
 
     deduped = dedup_first_wins(
-        active, "variant_id", [F.col(order_col), F.col("v_pos")]
+        active, "variant_id", [F.col("product_order"), F.col("v_pos")]
     )
     candidate = dedup_first_wins(deduped, "product_id", [F.col("v_pos")])
 
@@ -178,7 +177,7 @@ def transform_products(
         on="variant_id",
         how="left",
     )
-    derived = derive_cost(costed, out_col="costo_neto").drop("averageCost", "history")
+    derived = derive_cost(costed).drop("averageCost", "history")
 
     return product_spec().apply(derived)
 

@@ -832,7 +832,7 @@ def _khop_from_pairs(copurchase: DataFrame) -> DataFrame:
     # pipeline runs per call at KHOP_MAX=3, measured 4.6 s → 2.x s warm at
     # sf0.1 (guide §2.4/§5 — reuse demands materialization; Catalyst does
     # not CSE across DataFrame references, and only the loop's OWN rounds
-    # were checkpointed, same lesson as connected_components' edge set).
+    # were checkpointed, same lesson as the CC keys' edge checkpoint).
     # Released once the loop's final visited checkpoint no longer reads it.
     sym = edges.select(
         F.col("part_a").alias("src"), F.col("part_b").alias("dst")

@@ -28,19 +28,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from imperio_patitas_etl_spark.functions.cleaning import epoch_us
+from imperio_patitas_etl_spark.functions.cleaning import epoch_us, md5int, sql_md5int
 from imperio_patitas_etl_spark.operators.checkpoint import release_plan
 from imperio_patitas_etl_spark.operators.prefix_sum import (
     partitioned_prefix_sum,
 )
 from imperio_patitas_etl_spark.sources.parquet import load_table
-
-_MD5INT = "CAST(conv(substring(md5({x}), 1, 15), 16, 10) AS BIGINT)"
-
-
-def _sql_md5int(x: str) -> str:
-    return f"(('0x' || substr(md5({x}), 1, 15))::BIGINT)"
-
 
 # --------------------------------------------------------------------------
 # scd2_history — Type-2 slowly-changing-dimension build
@@ -303,7 +296,7 @@ BLOOM_PART_SIZE = 15
 
 def _bloom_pos(expr: str, salt: str) -> str:
     inner = f"concat('{salt}', CAST({expr} AS STRING))"
-    return f"({_MD5INT.format(x=inner)} % {BLOOM_BITS})"
+    return f"({md5int(inner)} % {BLOOM_BITS})"
 
 
 def q_bloom_prefilter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -408,7 +401,7 @@ def q_bloom_prefilter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_bloom_pos(expr: str, salt: str) -> str:
     inner = f"'{salt}' || CAST({expr} AS VARCHAR)"
-    return f"({_sql_md5int(inner)} % {BLOOM_BITS})"
+    return f"({sql_md5int(inner)} % {BLOOM_BITS})"
 
 
 ORACLE_BLOOM_PREFILTER = f"""
@@ -617,7 +610,7 @@ def q_cm_sketch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.struct(
                             F.lit(i).alias("r"),
                             F.expr(
-                                f"{_MD5INT.format(x=f'''concat('{s}', tok)''')}"
+                                f"{md5int(f'''concat('{s}', tok)''')}"
                                 f" % {CM_WIDTH}"
                             ).alias("col"),
                         )
@@ -640,7 +633,7 @@ def q_cm_sketch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "true_n",
         *[
             F.expr(
-                f"{_MD5INT.format(x=f'''concat('{s}', tok)''')} % {CM_WIDTH}"
+                f"{md5int(f'''concat('{s}', tok)''')} % {CM_WIDTH}"
             ).alias(f"c{i}")
             for i, s in enumerate(CM_SALTS)
         ],
@@ -665,7 +658,7 @@ def q_cm_sketch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_cm_col(salt: str, expr: str = "tok") -> str:
     inner = f"'{salt}' || {expr}"
-    return f"({_sql_md5int(inner)} % {CM_WIDTH})"
+    return f"({sql_md5int(inner)} % {CM_WIDTH})"
 
 
 ORACLE_CM_SKETCH = f"""
@@ -1748,7 +1741,7 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderdate",
         "o_orderkey",
         F.expr(
-            f"CASE WHEN {_MD5INT.format(x='CAST(o_orderkey AS STRING)')} % 10 = 0 "
+            f"CASE WHEN {md5int('CAST(o_orderkey AS STRING)')} % 10 = 0 "
             "THEN 'D' ELSE 'U' END"
         ).alias("op"),
         F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)").alias("price_cents"),
@@ -1776,7 +1769,7 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_CDC_APPLY = f"""
     WITH log AS (
         SELECT o_custkey AS key, o_orderdate, o_orderkey,
-               CASE WHEN {_sql_md5int('CAST(o_orderkey AS VARCHAR)')} % 10 = 0
+               CASE WHEN {sql_md5int('CAST(o_orderkey AS VARCHAR)')} % 10 = 0
                     THEN 'D' ELSE 'U' END AS op,
                CAST(ROUND(o_totalprice * 100) AS BIGINT) AS price_cents
         FROM orders
@@ -1841,7 +1834,7 @@ def q_table_checksum_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderstatus",
         "o_orderdate",
         F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)").alias("price_cents"),
-        F.expr(_MD5INT.format(x="CAST(o_orderkey AS STRING)")).alias("h_key"),
+        F.expr(md5int("CAST(o_orderkey AS STRING)")).alias("h_key"),
     )
     replica = base.filter(F.col("h_key") % _CK_DROP_MOD != 0).withColumn(
         "price_cents",
@@ -1852,7 +1845,7 @@ def q_table_checksum_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def digest(df: DataFrame) -> DataFrame:
         rowh = df.select(
-            "h_key", F.expr(_MD5INT.format(x=canon)).alias("row_h")
+            "h_key", F.expr(md5int(canon)).alias("row_h")
         )
         return rowh.groupBy(
             (F.col("h_key") % CHECKSUM_BUCKETS).alias("bucket")
@@ -1888,7 +1881,7 @@ ORACLE_TABLE_CHECKSUM = f"""
     WITH base AS (
         SELECT o_orderkey, o_custkey, o_orderstatus, o_orderdate,
                CAST(ROUND(o_totalprice * 100) AS BIGINT) AS price_cents,
-               {_sql_md5int('CAST(o_orderkey AS VARCHAR)')} AS h_key
+               {sql_md5int('CAST(o_orderkey AS VARCHAR)')} AS h_key
         FROM orders
     ), replica AS (
         SELECT o_orderkey, o_custkey, o_orderstatus, o_orderdate,
@@ -1899,12 +1892,12 @@ ORACLE_TABLE_CHECKSUM = f"""
     ), da AS (
         SELECT h_key % {CHECKSUM_BUCKETS} AS bucket, COUNT(*) AS n_rows,
                bit_xor(row_h) AS xor_h
-        FROM (SELECT h_key, {_sql_md5int(_CK_CANON_SQL)} AS row_h FROM base)
+        FROM (SELECT h_key, {sql_md5int(_CK_CANON_SQL)} AS row_h FROM base)
         GROUP BY 1
     ), db AS (
         SELECT h_key % {CHECKSUM_BUCKETS} AS bucket, COUNT(*) AS n_rows,
                bit_xor(row_h) AS xor_h
-        FROM (SELECT h_key, {_sql_md5int(_CK_CANON_SQL)} AS row_h FROM replica)
+        FROM (SELECT h_key, {sql_md5int(_CK_CANON_SQL)} AS row_h FROM replica)
         GROUP BY 1
     )
     SELECT COALESCE(da.bucket, db.bucket) AS bucket,
@@ -2445,7 +2438,7 @@ def q_ab_test_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             F.expr(
-                f"{_MD5INT.format(x=repr(AB_SALT) + ' || CAST(user_id AS STRING)')} % 2"
+                f"{md5int(repr(AB_SALT) + ' || CAST(user_id AS STRING)')} % 2"
             ).alias("variant"),
             "metric_units",
         )
@@ -2494,7 +2487,7 @@ def q_ab_test_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_AB_TEST = f"""
     WITH per_user AS (
-        SELECT {_sql_md5int(repr(AB_SALT) + " || CAST(user_id AS VARCHAR)")} % 2
+        SELECT {sql_md5int(repr(AB_SALT) + " || CAST(user_id AS VARCHAR)")} % 2
                    AS variant,
                CAST(SUM(CAST(ROUND(value * 1000000) AS BIGINT)) AS BIGINT)
                    AS metric_units
@@ -2625,7 +2618,7 @@ def q_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     pu = e.select(
         F.expr(
-            f"{_MD5INT.format(x=repr(AB_SALT) + ' || CAST(user_id AS STRING)')} % 2"
+            f"{md5int(repr(AB_SALT) + ' || CAST(user_id AS STRING)')} % 2"
         ).alias("variant"),
         "user_id",
     ).distinct()
@@ -2645,7 +2638,7 @@ def q_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_SRM_CHECK = f"""
     WITH pu AS (
         SELECT DISTINCT
-               {_sql_md5int(repr(AB_SALT) + " || CAST(user_id AS VARCHAR)")} % 2
+               {sql_md5int(repr(AB_SALT) + " || CAST(user_id AS VARCHAR)")} % 2
                    AS variant,
                user_id
         FROM events

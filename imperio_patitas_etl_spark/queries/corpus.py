@@ -27,19 +27,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from imperio_patitas_etl_spark.functions.cleaning import md5int, sql_md5int
 from imperio_patitas_etl_spark.operators.prefix_sum import (
     partitioned_prefix_sum,
 )
 from imperio_patitas_etl_spark.sources.parquet import load_table
-
-# Cross-engine deterministic 60-bit hash (same construction as
-# queries/text.py:_MD5INT — first 15 hex chars of md5 as a BIGINT).
-_MD5INT = "CAST(conv(substring(md5({x}), 1, 15), 16, 10) AS BIGINT)"
-
-
-def _sql_md5int(x: str) -> str:
-    return f"(('0x' || substr(md5({x}), 1, 15))::BIGINT)"
-
 
 # --------------------------------------------------------------------------
 # chunk_sequences — fixed-window document chunking
@@ -218,7 +210,7 @@ def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             F.col("span_idx").cast("long").alias("span_idx"),
             "span",
-            F.expr(_MD5INT.format(x="span")).alias("span_h"),
+            F.expr(md5int("span")).alias("span_h"),
         )
     )
     first = Window.partitionBy("span_h").orderBy("doc_id", "span_idx")
@@ -267,7 +259,7 @@ ORACLE_SPAN_DEDUP = f"""
     ),
     ranked AS (
         SELECT doc_id, span_idx, span,
-               ROW_NUMBER() OVER (PARTITION BY {_sql_md5int('span')}
+               ROW_NUMBER() OVER (PARTITION BY {sql_md5int('span')}
                                   ORDER BY doc_id, span_idx) AS rn
         FROM exploded
     )
@@ -443,7 +435,7 @@ def q_domain_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     than a shard."""
     quotas = q_domain_mixture(spark, sf_dir).select("source", "kept")
     d = load_table(spark, sf_dir, "documents")
-    h = F.expr(_MD5INT.format(x="concat('mix_', CAST(doc_id AS STRING))"))
+    h = F.expr(md5int("concat('mix_', CAST(doc_id AS STRING))"))
     ranked = d.select(
         "doc_id", "source", F.row_number()
         .over(Window.partitionBy("source").orderBy(h, "doc_id"))
@@ -467,7 +459,7 @@ ORACLE_DOMAIN_MIXTURE_SAMPLE = f"""
         SELECT doc_id, source,
                ROW_NUMBER() OVER (
                    PARTITION BY source
-                   ORDER BY {_sql_md5int("'mix_' || CAST(doc_id AS VARCHAR)")},
+                   ORDER BY {sql_md5int("'mix_' || CAST(doc_id AS VARCHAR)")},
                             doc_id
                ) AS rk
         FROM documents
@@ -718,7 +710,7 @@ def q_weighted_sample_aes(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant. At 100 TB the only cross-node traffic is k rows per
     partition."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
-    h = _MD5INT.format(x="concat('aes_', CAST(doc_id AS STRING))")
+    h = md5int("concat('aes_', CAST(doc_id AS STRING))")
     pr = d.select(
         "doc_id",
         F.col("n_chars").alias("w"),
@@ -732,7 +724,7 @@ def q_weighted_sample_aes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_WEIGHTED_SAMPLE_AES = f"""
     SELECT doc_id, n_chars AS w,
-           CAST(ROUND(ln((CAST({_sql_md5int("'aes_' || CAST(doc_id AS VARCHAR)")} AS DOUBLE) + 1.0)
+           CAST(ROUND(ln((CAST({sql_md5int("'aes_' || CAST(doc_id AS VARCHAR)")} AS DOUBLE) + 1.0)
                          / {_AES_SCALE!r})
                       / CAST(n_chars AS DOUBLE) * 1000000000000) AS BIGINT)
                AS priority_punits

@@ -27,7 +27,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from imperio_patitas_etl_spark.functions.cleaning import md5int, sql_md5int
 from imperio_patitas_etl_spark.operators.checkpoint import release
+from imperio_patitas_etl_spark.operators.graph import (
+    connected_components,
+    connected_components_star,
+)
 from imperio_patitas_etl_spark.sources.parquet import load_table
 
 # MinHash constants — fixed, mirrored literally into the oracle SQL.
@@ -48,14 +53,6 @@ N_BANDS = 4  # bands of 2 signatures each
 # oracle admits them (3·0 ≥ 0) and divides by a zero union — DuckDB errors
 # where Spark's candidate generation simply never pairs shingle-less docs.
 JACCARD_T3 = "3 * n_inter >= n_a + n_b AND n_a + n_b > 0"
-
-#: Spark-side md5-prefix→int (60-bit, fits signed 64); DuckDB twin below.
-_MD5INT = "CAST(conv(substring(md5({x}), 1, 15), 16, 10) AS BIGINT)"
-
-
-def _sql_md5int(x: str) -> str:
-    return f"(('0x' || substr(md5({x}), 1, 15))::BIGINT)"
-
 
 # --------------------------------------------------------------------------
 # tokenization / quality / language-ID / fingerprint
@@ -190,14 +187,14 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     lowercase text (rolling-hash analog, md5-based for oracle parity)."""
     d = load_table(spark, sf_dir, "documents")
     norm = F.lower(F.regexp_replace(F.trim(F.col("text")), "\\s+", " "))
-    fp = F.expr(_MD5INT.format(x="lower(regexp_replace(trim(text), '\\\\s+', ' '))"))
+    fp = F.expr(md5int("lower(regexp_replace(trim(text), '\\\\s+', ' '))"))
     return d.select(
         "doc_id", fp.alias("fingerprint"), F.length(norm).cast("long").alias("norm_len")
     )
 
 
 _SQL_NORM_TEXT = "lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))"
-_SQL_FP = _sql_md5int(_SQL_NORM_TEXT)
+_SQL_FP = sql_md5int(_SQL_NORM_TEXT)
 
 ORACLE_DOC_FINGERPRINT = f"""
     SELECT doc_id,
@@ -342,14 +339,14 @@ def _clusters_via_rep_cc(
     """Duplicate clustering for the cluster consumers (``dup_clusters``
     / ``dup_clusters_star`` / ``corpus_keep_list``): connected
     components over the REPRESENTATIVE graph only, members labeled
-    through their group id afterwards. Feeding (gid, member) star
-    edges into the CC loop instead would carry one row PER QUALIFYING
-    DOCUMENT through every round — O(rounds · n) shuffled rows at 100 TB
-    just to tell each member what its gid already says. Here the
-    iterative loop sees only the near-dup REP pairs (the output-bounded
-    AllPairs result), and membership is applied once, outside the loop,
-    as a single equi-join on gid (guide §2.3 — shuffle keys and
-    metadata, move the bulk exactly once).
+    through their group id afterwards. ``cc_fn`` is a CC operator from
+    ``operators/graph.py``. Feeding it (gid, member) star edges instead
+    would carry one row PER QUALIFYING DOCUMENT into CC (through every
+    round of the star path) just to tell each member what its gid
+    already says. Here CC sees only the near-dup REP pairs (the
+    output-bounded AllPairs result), and membership is applied once,
+    afterwards, as a single equi-join on gid (guide §2.3 — shuffle keys
+    and metadata, move the bulk exactly once).
 
     PROOF the output equals CC over the full pair list (the oracle's
     transitive closure): qualification (non-empty shingles, non-NULL
@@ -358,58 +355,43 @@ def _clusters_via_rep_cc(
     connected through rep pairs (a cross pair (m_a, m_b) exists iff the
     rep pair (gid_A, gid_B) does; intra pairs stay inside one group).
     A component's label is its minimum doc_id = the minimum gid of its
-    groups (gid is each group's min member) = the min-label CC result
-    over the rep graph. Therefore: qualifying member → rep-CC label of
-    its gid (own gid when the rep is pairless and absent from the rep
-    graph); non-qualifying doc → no edges anywhere → itself. Pinned
+    groups (gid is each group's min member) = the CC label over the rep
+    graph. Therefore: qualifying member → rep-CC label of its gid (own
+    gid when the rep is its component's minimum or pairless);
+    non-qualifying doc → no edges anywhere → itself. Pinned
     clique-vs-rep-CC on a ≥1,000-copy duplicate class in
     tests/test_cc_star_edges.py and end-to-end on real data.
 
     Lifetime: the returned plan reads the skinny (doc_id, gid, qual)
-    member checkpoint and the CC label checkpoint; the star
-    contraction's also reads the rep pairs, through its endpoint seed.
-    Plain CC's labels do not, so its rep-pair checkpoint is released
-    here once the labels exist. The wide rep arrays (``groups``) are
-    released the moment the rep pairs are materialized — no wide
-    relation outlives the build."""
+    member checkpoint and whatever ``cc_fn``'s labels read (nothing for
+    the driver path, the star fixpoint for the star path). The rep pairs
+    are checkpointed because the CC operator may read them twice (its
+    size probe, then the star seed); they are released as soon as CC
+    returns, and the wide rep arrays (``groups``) the moment the rep
+    pairs are materialized — no wide relation outlives the build."""
     groups, member_map = _grouped_build(_shingled(spark, sf_dir))
     members = member_map.filter("qual").select("doc_id", "gid")
-    # rep-pair checkpoint: the AllPairs index+verify pass runs exactly
-    # once — both the CC edge input and the endpoint seed read it (an
-    # un-checkpointed plan would re-run the index for the seed relation)
     rep_pairs = (
         _pairs_from_shingled(groups)
         .select("doc_a", "doc_b")
         .localCheckpoint()
     )
     release(groups)
+    rep_cc = cc_fn(rep_pairs)
+    release(rep_pairs)
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    labels = _labels_from_rep_cc(docs, members, rep_pairs, cc_fn)
-    if cc_fn is connected_components:
-        release(rep_pairs)
-    return labels
+    return _labels_from_rep_cc(docs, members, rep_cc)
 
 
 def _labels_from_rep_cc(
-    docs: DataFrame, members: DataFrame, rep_pairs: DataFrame, cc_fn
+    docs: DataFrame, members: DataFrame, rep_cc: DataFrame
 ) -> DataFrame:
-    """(doc_id, cluster_id) from rep-level connected components: run
-    ``cc_fn`` over the rep-pair endpoints only, then label every
-    qualifying member through its gid, everything else with itself
-    (equivalence proof at ``_clusters_via_rep_cc``). ``members`` and
-    ``rep_pairs`` must be cheap to evaluate repeatedly (checkpointed or
-    parquet-backed): ``cc_fn`` reads the edges and the endpoint seed,
-    and the returned plan reads ``members`` (plus, for the star
-    contraction, the endpoint seed again). A checkpointed ``rep_pairs``
-    is the caller's to free once the result no longer reads it."""
-    endpoints = (
-        rep_pairs.select(F.col("doc_a").alias("doc_id"))
-        .union(rep_pairs.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    rep_cc = cc_fn(
-        endpoints, rep_pairs.select("doc_a", "doc_b")
-    ).select(
+    """(doc_id, cluster_id) from the rep-level components ``rep_cc`` (a
+    CC operator's (doc_id, cluster_id) over the rep pairs): every
+    qualifying member takes its gid's component label, or its gid when
+    the rep is a component minimum or pairless, and everything else
+    labels itself (equivalence proof at ``_clusters_via_rep_cc``)."""
+    rep_cc = rep_cc.select(
         F.col("doc_id").alias("gid"), F.col("cluster_id").alias("rep_label")
     )
     return (
@@ -712,7 +694,7 @@ def _minhash_sigs(docs: DataFrame) -> DataFrame:
     )
     hashed = s.select(
         "doc_id",
-        F.expr(f"transform(shingles, s -> {_MD5INT.format(x='s')} % {P})").alias("hx"),
+        F.expr(f"transform(shingles, s -> {md5int('s')} % {P})").alias("hx"),
     )
     sig_cols = [
         F.expr(f"array_min(transform(hx, x -> ({a}L * x + {b}L) % {P}))").alias(f"sig{i}")
@@ -937,7 +919,7 @@ def minhash_lsh_pairs_incremental(
 
 
 def _sql_minhash_bands() -> str:
-    xs = f"list_transform(shingles, s -> {_sql_md5int('s')} % {P})"
+    xs = f"list_transform(shingles, s -> {sql_md5int('s')} % {P})"
     sig_exprs = ",\n               ".join(
         f"list_min(list_transform({xs}, x -> ({a} * x + {b}) % {P})) AS sig{i}"
         for i, (a, b) in enumerate(PERMS)
@@ -1019,7 +1001,7 @@ def _simhash_sigs(spark: SparkSession, sf_dir: str, nbits: int = 16) -> DataFram
     words = d.select(
         "doc_id",
         F.explode(
-            F.expr(f"transform(split(text, ' '), w -> {_MD5INT.format(x='w')})")
+            F.expr(f"transform(split(text, ' '), w -> {md5int('w')})")
         ).alias("h"),
     )
     aggs = [
@@ -1048,7 +1030,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_simhash(nbits: int) -> str:
     return f"""list_sum(list_transform(range(0, {nbits}), b ->
                  CASE WHEN list_sum(list_transform(regexp_split_to_array(text, ' '),
-                        w -> CASE WHEN ({_sql_md5int('w')} >> b) & 1 = 1 THEN 1 ELSE -1 END)) > 0
+                        w -> CASE WHEN ({sql_md5int('w')} >> b) & 1 = 1 THEN 1 ELSE -1 END)) > 0
                       THEN (1::BIGINT << b) ELSE 0 END))::BIGINT"""
 
 
@@ -1410,7 +1392,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     after the scan; no shuffle at all)."""
     d = load_table(spark, sf_dir, "documents")
     bucket = (
-        F.expr(_MD5INT.format(x="concat('strat_', CAST(doc_id AS STRING))")) % 10000
+        F.expr(md5int("concat('strat_', CAST(doc_id AS STRING))")) % 10000
     )
     rate = (
         F.when(F.col("lang") == "en", F.lit(SAMPLE_RATE_EN_BP))
@@ -1428,7 +1410,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_STRAT_BUCKET = _sql_md5int("'strat_' || CAST(doc_id AS VARCHAR)") + " % 10000"
+_SQL_STRAT_BUCKET = sql_md5int("'strat_' || CAST(doc_id AS VARCHAR)") + " % 10000"
 
 ORACLE_STRATIFIED_SAMPLE = f"""
     SELECT doc_id, lang, bucket, rate_bp FROM (
@@ -1498,75 +1480,6 @@ ORACLE_TF_VECTORIZE = f"""
 """
 
 
-CC_MAX_ITERS = 30
-
-
-def connected_components(docs: DataFrame, edges: DataFrame) -> DataFrame:
-    """Min-label-propagation connected components over ``docs(doc_id)`` and
-    undirected ``edges(doc_a, doc_b)``; returns (doc_id, cluster_id) where
-    cluster_id is the minimum doc_id reachable (singletons label
-    themselves). The fixpoint is unique, so the result is deterministic
-    regardless of execution order.
-
-    This is the GraphX/Pregel CC shape expressed in DataFrames: each
-    iteration is edges⋈labels → min-per-dst → least(old, new), i.e. two
-    shuffles over skinny (id, label) rows, and converges in
-    O(graph diameter) rounds — near-dup graphs are dense clumps with tiny
-    diameters, so 3-5 rounds in practice. Convergence is detected by the
-    strictly-decreasing Σlabel (one scalar action per round, no extra
-    join), summed as decimal(38,0): a BIGINT sum silently wraps once
-    n·max_id passes 2⁶³ (any trillion-doc corpus), and a wrapped equality
-    could declare convergence early.
-
-    Each round's labels are localCheckpoint'ed, not merely persisted:
-    persistence truncates EXECUTION but not the logical plan, so the
-    accumulated join tree grows by two joins per round and Catalyst
-    re-optimizes the whole history every iteration — a 12-round chain
-    OOMs the driver on plan bookkeeping alone. Checkpointing resets the
-    plan to a leaf each round (the standard discipline for iterative
-    DataFrame algorithms; on a real cluster use reliable
-    ``checkpoint()`` so executor loss can't lose label state, and switch
-    to ``operators/graph.py:connected_components_star`` — the alternating
-    large-star/small-star contraction, O(log n) rounds — if diameters
-    were unbounded)."""
-    # the edge relation is read EVERY round: materialize it once
-    sym = (
-        edges.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(edges.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .localCheckpoint()
-    )
-    labels = docs.select("doc_id", F.col("doc_id").alias("label")).localCheckpoint()
-    prev_sum = labels.agg(F.sum(F.col("label").cast("decimal(38,0)"))).first()[0]
-    for _ in range(CC_MAX_ITERS):
-        nbr = (
-            sym.join(labels, sym.src == labels.doc_id)
-            .select(F.col("dst").alias("doc_id"), F.col("label").alias("nbr_label"))
-            .groupBy("doc_id")
-            .agg(F.min("nbr_label").alias("nbr_min"))
-        )
-        nxt = (
-            labels.join(nbr, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least("label", F.coalesce("nbr_min", F.col("label"))).alias("label"),
-            )
-            .localCheckpoint()
-        )
-        # the superseded round's blocks die once the new one is
-        # materialized (localCheckpoint is eager)
-        release(labels)
-        labels = nxt
-        cur_sum = labels.agg(F.sum(F.col("label").cast("decimal(38,0)"))).first()[0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    else:
-        raise RuntimeError(f"connected_components did not converge in {CC_MAX_ITERS} rounds")
-    # the returned plan reads only the final labels checkpoint
-    release(sym)
-    return labels.select("doc_id", F.col("label").alias("cluster_id"))
-
-
 def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The pairs→clusters→canonical step that completes a real dedup
     pipeline: near-dup PAIRS (word-3-gram Jaccard ≥ 0.5, prefix-filtered —
@@ -1574,10 +1487,11 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     clustered by connected components, labeling every document with the
     minimum doc_id of its duplicate cluster. Keeping rows where doc_id =
     cluster_id IS the deduplicated corpus; everything else maps to its
-    canonical survivor. The CC loop runs on the REPRESENTATIVE graph
-    only — members are labeled through their gid by one join outside
-    the loop (``_clusters_via_rep_cc``; proof there), so the oracle is unchanged while per-round
-    shuffle volume scales with near-dup rep pairs, not corpus size."""
+    canonical survivor. CC runs on the REPRESENTATIVE graph only —
+    members are labeled through their gid by one join afterwards
+    (``_clusters_via_rep_cc``; proof there) — and ``connected_components``
+    picks its path from the rep-pair count: union-find on the driver for
+    a small edge set, the star contraction beyond it."""
     return _clusters_via_rep_cc(spark, sf_dir, connected_components)
 
 
@@ -1605,16 +1519,14 @@ ORACLE_DUP_CLUSTERS = f"""
 def q_dup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same contract as ``dup_clusters`` — (doc_id, cluster_id = min doc_id
     of the duplicate component) over the SAME representative graph
-    (``_clusters_via_rep_cc``) — but the rep-level components come
-    from the alternating large-star/small-star contraction
+    (``_clusters_via_rep_cc``) — but the rep-level components always
+    come from the alternating large-star/small-star contraction
     (``operators/graph.py:connected_components_star``), the O(log n)-round
-    path for graphs whose diameter is unbounded. Both algorithms reach the
-    same unique fixpoint (property-tested against a union-find oracle in
-    tests/test_graph_star.py), so this key shares ``dup_clusters``'s
-    oracle; a green row here certifies the SCALE path, not just the
-    diameter-bounded one."""
-    from imperio_patitas_etl_spark.operators.graph import connected_components_star
-
+    path ``connected_components`` takes past its driver cut-over. Both
+    paths reach the same unique fixpoint (property-tested against a
+    union-find oracle in tests/test_graph_star.py), so this key shares
+    ``dup_clusters``'s oracle; a green row here certifies the SCALE path
+    at every scale factor, not just the driver one."""
     return _clusters_via_rep_cc(spark, sf_dir, connected_components_star)
 
 
@@ -1639,7 +1551,7 @@ def _sql_minhash_incremental() -> str:
     """DuckDB twin of ``q_minhash_incremental`` — mirrors the incremental
     path literally: NO exact-dup pre-collapse (the batch probes the corpus
     as-is), band match between the two sides, exact-Jaccard verify."""
-    xs = f"list_transform(shingles, s -> {_sql_md5int('s')} % {P})"
+    xs = f"list_transform(shingles, s -> {sql_md5int('s')} % {P})"
     sig_exprs = ",\n               ".join(
         f"list_min(list_transform({xs}, x -> ({a} * x + {b}) % {P})) AS sig{i}"
         for i, (a, b) in enumerate(PERMS)

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from imperio_patitas_etl_spark.operators.checkpoint import release
+from imperio_patitas_etl_spark.operators.graph import connected_components
 from imperio_patitas_etl_spark.sources.parquet import load_table
 
 #: integer scaling: float32 → exact integer units (×1e7 < 2^31 for |x|<200)
@@ -618,34 +619,19 @@ def q_embedding_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH-prefiltered cosine edge set — every vector labeled with the
     minimum vec_id of its near-duplicate component, so keeping rows
     where vec_id = cluster_id is the deduplicated embedding corpus.
-    Reuses ``connected_components`` (min-label propagation,
-    localCheckpoint per round); near-dup clumps have tiny diameters, the
-    star-contraction twin exists for anything else.
 
-    The loop runs over the pair ENDPOINTS only (r19 — the embedding twin
-    of the text side's r18 rep-graph CC): a vector with no near-dup edge
-    can never change its label, so seeding the loop with the whole
-    corpus shuffled one (id, label) row per VECTOR per round just to
-    return it unchanged. Endpoints-only, the per-round volume scales
-    with the near-dup set; everyone else labels itself through one left
-    join outside the loop. The edge list is checkpointed
-    (output-bounded — that is the LSH prefilter's point) because both
-    the endpoint seed and the loop read it; the CC result reads only its
-    final label checkpoint, so the edge list is released once it
-    returns."""
-    from imperio_patitas_etl_spark.queries.text import connected_components
-
+    ``connected_components`` labels the pair endpoints that are not
+    their component's minimum; every other vector labels itself through
+    one left join. The edge list is checkpointed (output-bounded — that
+    is the LSH prefilter's point) because CC may read it twice (its size
+    probe, then the star seed on a large edge set), and released as soon
+    as CC returns: the labels no longer read it."""
     pairs = (
         q_embedding_cosine_dedup(spark, sf_dir)
         .select(F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b"))
         .localCheckpoint()
     )
-    endpoints = (
-        pairs.select(F.col("doc_a").alias("doc_id"))
-        .union(pairs.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    cc = connected_components(endpoints, pairs)
+    cc = connected_components(pairs)
     release(pairs)
     vecs = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("doc_id")

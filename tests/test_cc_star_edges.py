@@ -1,9 +1,9 @@
 """Rep-graph connected components vs the full pair-list cliques
 (VERDICT r17 item 1, extended in r18): the cluster consumers
 (``dup_clusters`` / ``dup_clusters_star`` / ``corpus_keep_list``) run CC
-over the REPRESENTATIVE graph only (``_labels_from_rep_cc`` — near-dup
-rep pairs as the loop's edge set, members labeled through their gid by
-one join outside the loop), instead of feeding the loop
+over the REPRESENTATIVE graph only (near-dup rep pairs as CC's edge set,
+members labeled through their gid by one join afterwards in
+``_labels_from_rep_cc``), instead of feeding CC
 ``_pairs_from_grouped``'s C(b,2) cliques (r16) or per-member star edges
 (r17), which only the pair-LIST key (``ngram_jaccard_dedup``)
 contractually needs. These tests pin the equivalence proof on the regime
@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from imperio_patitas_etl_spark.operators.checkpoint import release
+from imperio_patitas_etl_spark.operators.graph import connected_components
 from imperio_patitas_etl_spark.queries import text
 from imperio_patitas_etl_spark.queries.text import (
     _labels_from_rep_cc,
@@ -30,7 +32,6 @@ from imperio_patitas_etl_spark.queries.text import (
     _pairs_from_shingled,
     _shingle_set_fp,
     _shingled,
-    connected_components,
 )
 
 # mass-duplication corpus: one 1,200-copy boilerplate class, a 3-copy
@@ -51,6 +52,14 @@ def _fixture(spark):
     return spark.createDataFrame(rows, "doc_id long, lang string, text string")
 
 
+def _label_all(ids, edges):
+    """(doc_id, cluster_id) for every id in ``ids``: CC over ``edges``,
+    and each id CC leaves out labels itself."""
+    return ids.join(connected_components(edges), "doc_id", "left").select(
+        "doc_id", F.coalesce("cluster_id", "doc_id").alias("cluster_id")
+    )
+
+
 def _grouped(spark, docs):
     """(groups, member_map) via ``_grouped_build`` over a synthetic
     corpus."""
@@ -68,17 +77,18 @@ def test_rep_cc_gives_identical_components_on_mass_duplication(spark):
     groups, member_map = _grouped(spark, docs)
     ids = docs.select("doc_id")
 
-    clique = connected_components(
+    clique = _label_all(
         ids, _pairs_from_grouped(groups, member_map).select("doc_a", "doc_b")
+    )
+    rep_pairs = (
+        _pairs_from_shingled(groups).select("doc_a", "doc_b").localCheckpoint()
     )
     rep = _labels_from_rep_cc(
         ids,
         member_map.filter("qual").select("doc_id", "gid"),
-        _pairs_from_shingled(groups)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(),
-        connected_components,
+        connected_components(rep_pairs),
     )
+    release(rep_pairs)
 
     got = sorted(tuple(r) for r in rep.collect())
     want = sorted(tuple(r) for r in clique.collect())
@@ -93,12 +103,11 @@ def test_rep_cc_gives_identical_components_on_mass_duplication(spark):
 
 
 def test_rep_graph_loop_input_is_constant_in_class_size(spark):
-    """The CC loop's edge input is ONE rep pair (boilerplate rep 0 —
+    """CC's edge input is ONE rep pair (boilerplate rep 0 —
     near-dup rep 2000) regardless of the b=1,200 class size, where the
     pair list carries its C(1200,2)=719,400 clique and the r17 star
-    build carried b−1 member edges per class through every round. The
-    member map is one skinny row per qualifying doc, touched once
-    outside the loop. Exact counts pinned so a regression that
+    build carried b−1 member edges per class into CC. The member map is
+    one skinny row per qualifying doc, touched once after CC. Exact counts pinned so a regression that
     reintroduces per-member rows into the CC path cannot pass
     silently."""
     docs = _fixture(spark)
@@ -189,7 +198,7 @@ def test_registry_cluster_keys_share_components_with_pair_list(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
     want = sorted(
         tuple(r)
-        for r in connected_components(
+        for r in _label_all(
             docs,
             _pairs_from_grouped(groups, member_map).select("doc_a", "doc_b"),
         ).collect()

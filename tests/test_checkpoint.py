@@ -98,18 +98,18 @@ def test_release_plan_leaves_an_unrelated_checkpoint_readable(spark):
 
 #: key → checkpoints left after the call, all of them read by its
 #: returned plan. ngram: member map + rep groups; dup_clusters and
-#: corpus_keep_list: member map + final labels (the rep-pair edge
-#: checkpoint is freed in the query); the star key's plan also reads its
-#: rep pairs through the endpoint seed; embedding clusters: final labels
-#: (the pair list is freed in the query); khop: final visited set. A
+#: corpus_keep_list: member map (CC's driver labels are a local frame,
+#: and the rep-pair edge checkpoint is freed in the query); the star key
+#: also keeps its fixpoint edges; embedding clusters: nothing (driver
+#: labels, the pair list freed in the query); khop: final visited set. A
 #: superseded loop round, a transient build checkpoint or an edge
 #: checkpoint that leaked would be left without being read.
 LEFT_BEHIND = {
     "ngram_jaccard_dedup": 2,
-    "dup_clusters": 2,
-    "dup_clusters_star": 3,
-    "corpus_keep_list": 2,
-    "embedding_dup_clusters": 1,
+    "dup_clusters": 1,
+    "dup_clusters_star": 2,
+    "corpus_keep_list": 1,
+    "embedding_dup_clusters": 0,
     "khop_reach": 1,
 }
 

@@ -1,9 +1,5 @@
-"""Fixture tests for the repetition-quality signals and duplicate
-clustering.
+"""Fixture tests for the repetition-quality signals.
 
-``connected_components`` is pinned on a known graph (chain, pair,
-singletons — the chain needs several propagation rounds, exercising the
-iteration + convergence logic, and the unique-fixpoint determinism);
 ``quality_gopher`` is pinned on hand-computable documents including the
 single-word edge case whose bigram denominator would otherwise divide by
 zero.
@@ -11,78 +7,7 @@ zero.
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
-from hypothesis import strategies as st
-
-from pyspark.sql import functions as F
-
-from imperio_patitas_etl_spark.queries.text import (
-    connected_components,
-    q_quality_gopher,
-)
-
-
-def test_connected_components_chain_pair_singletons(spark):
-    docs = spark.createDataFrame([(i,) for i in range(1, 8)], "doc_id long")
-    # 1-2-3 is a chain (min label must travel two hops), 5-6 a pair,
-    # 4 and 7 never appear in an edge.
-    edges = spark.createDataFrame(
-        [(2, 1), (2, 3), (5, 6)], "doc_a long, doc_b long"
-    )
-    out = {r.doc_id: r.cluster_id for r in connected_components(docs, edges).collect()}
-    assert out == {1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 5, 7: 7}
-
-
-def test_connected_components_long_chain_converges(spark):
-    n = 12  # diameter 11: well past one propagation round
-    docs = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
-    )
-    out = connected_components(docs, edges)
-    assert out.agg(F.max("cluster_id")).first()[0] == 0
-    assert out.count() == n
-
-
-_edge = st.tuples(
-    st.integers(min_value=0, max_value=9), st.integers(min_value=0, max_value=9)
-).filter(lambda e: e[0] != e[1])
-
-
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
-)
-@given(edges=st.lists(_edge, max_size=14))
-def test_connected_components_matches_union_find(spark, edges):
-    """Random graphs vs a pure-Python union-find oracle: the distributed
-    min-label fixpoint must equal the exact min-of-component labeling."""
-    nodes = list(range(10))
-    parent = {i: i for i in nodes}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        parent[find(a)] = find(b)
-    comp_min = {}
-    for i in nodes:
-        r = find(i)
-        comp_min[r] = min(comp_min.get(r, i), i)
-    expected = {i: comp_min[find(i)] for i in nodes}
-
-    docs = spark.createDataFrame([(i,) for i in nodes], "doc_id long")
-    e = (
-        spark.createDataFrame(edges, "doc_a long, doc_b long")
-        if edges
-        else spark.createDataFrame([], "doc_a long, doc_b long")
-    )
-    got = {r.doc_id: r.cluster_id for r in connected_components(docs, e).collect()}
-    assert got == expected
+from imperio_patitas_etl_spark.queries.text import q_quality_gopher
 
 
 def test_quality_gopher_hand_computed(spark, tmp_path):
